@@ -2536,7 +2536,7 @@ object TextOps {
        |       cast(a.covered_tokens AS double) / cast(dt.doc_tokens AS double) AS coverage
        |FROM agg a JOIN dt USING (doc_id) ORDER BY doc_id""".stripMargin)
 
-  /** q122: BPE merge learning — [[BpeRounds]] unrolled rounds of
+  /** q122: BPE merge learning — two unrolled rounds of
     * byte-pair-encoding TRAINING as relational algebra (the q64
     * unrolled-Lloyd treatment applied to the tokenizer): per round,
     * count adjacent symbol pairs across the word-frequency table, pick
@@ -2564,8 +2564,6 @@ object TextOps {
     * TakeOrdered over the pair vocabulary, broadcast back. This is
     * exactly how corpus-scale BPE trainers are structured.
     */
-  private val BpeRounds = 2
-
   private[ext] def bpePairCounts(sv: DataFrame): DataFrame = {
     val wW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("w")).orderBy(col("p"))
@@ -2876,7 +2874,7 @@ object TextOps {
     * runs once, not the maintenance path.
     */
   val q136DeletionPurge: QuerySpec = QuerySpec(
-    (s, dir) => purgeAccounting(s, Tables.documents(s, dir)),
+    (s, dir) => purgeAccounting(Tables.documents(s, dir)),
     q136OracleSql)
 
   /** The q136 run body over an EXPLICIT corpus frame — exposed because
@@ -2887,7 +2885,7 @@ object TextOps {
     * it into the band (the SpanDedupSpec precedent: hand-verified
     * structure the natural corpus cannot exercise).
     */
-  private[graft] def purgeAccounting(s: SparkSession, docs: DataFrame): DataFrame = {
+  private[graft] def purgeAccounting(docs: DataFrame): DataFrame = {
       def isDel(c: Column) = c % 83 === 0
       val delTerms = shingles(docs).filter(isDel(col("doc_id")))
         .select(col("sh")).distinct()

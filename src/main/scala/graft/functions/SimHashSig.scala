@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}

@@ -128,7 +128,7 @@ object IngestQueries {
     * conventions.
     */
   private def stageLandingDir(spark: SparkSession, lines: DataFrame,
-      header: String, nFiles: Int, out: String): Unit = {
+      header: String, out: String): Unit = {
     import spark.implicits._
     lines.as[String]
       .mapPartitions(it => Iterator(header) ++ it)
@@ -161,7 +161,7 @@ object IngestQueries {
       transform: DataFrame => DataFrame = identity): Unit =
     stageLandingDir(spark,
       linesFrom(splitForStaging(transform(hazardSource(spark, dir)), 4)),
-      Header, 4, out)
+      Header, out)
 
   val q159CsvIngestCert: QuerySpec = QuerySpec(
     (s, dir) => {
@@ -575,7 +575,7 @@ object IngestQueries {
       transform: DataFrame => DataFrame = identity): Unit =
     stageLandingDir(spark,
       invLinesFrom(splitForStaging(transform(invSource(spark, dir)), 2)),
-      InvHeader, 2, out)
+      InvHeader, out)
 
   /** q163's inventory batch slices — batch 1 is the catalog minus the
     * k ≡ 0 mod 7 block (those arrive later), batch 2 re-lists every
@@ -1041,18 +1041,6 @@ object IngestQueries {
   // story q165 leaves implicit
   // ------------------------------------------------------------------
 
-  /** The durable report table's declared schema: the report columns
-    * plus `as_of`, the orders-store version string the report
-    * reflects — the resume watermark. Constant across a version's rows
-    * (every fold stamps the version it consumed), so `max(as_of)` on
-    * the current contents recovers the watermark with no sidecar
-    * metadata file; version strings sort by their monotonic
-    * nano-timestamp prefix, so max IS the latest. Derived from
-    * [[productShape]] — the schema and the fold can never drift.
-    */
-  private[graft] val reportSchema: org.apache.spark.sql.types.StructType =
-    productShape.schema
-
   /** A (possibly fresh-process) handle to the durable report table at
     * `root` for one maintained `shape`: first call CreateTables it via
     * the same SchemaSync leg every flow store uses (R4 sequencing),
@@ -1073,7 +1061,11 @@ object IngestQueries {
 
   /** The consumer's raw resume point off its durable rows: `max(as_of)`
     * on the report's current contents — a single-row aggregate read,
-    * the sanctioned driver-side shape. None means an EMPTY report — no
+    * the sanctioned driver-side shape. `as_of` is the orders-store
+    * version the report reflects, constant across a report version's
+    * rows (every fold stamps the version it consumed), so no sidecar
+    * metadata file is needed; version names sort in commit order, so
+    * max IS the latest. None means an EMPTY report — no
     * consumer progress recorded (the bootstrap-vs-caught-up distinction
     * [[resumeReportMaintenance]] needs on a retention-vacuumed store).
     */
@@ -1315,8 +1307,8 @@ object IngestQueries {
     *
     * Scale: identical maintenance algebra to q167 (cost tracks change
     * volume); the vacuum itself is a driver-side directory delete of
-    * versions no reader can be entering (readers come in via
-    * `_CURRENT` or a consumer watermark, both ≥ the reclaim bound),
+    * versions no reader can be entering (readers come in via the
+    * current version or a consumer watermark, both ≥ the reclaim bound),
     * so retention adds no executor work at all — the judged plan is
     * exactly q167's consumer shape (report scan ⋈ recompute
     * certificate leg via the ±1-weighted union-groupBy).
@@ -1376,11 +1368,6 @@ object IngestQueries {
     MaintainedShape(categoryContrib, Seq("channel_group", "product_id"),
       Seq("n_rows", "revenue_cents"))
 
-  private[graft] def applyCategoryDelta(base: DataFrame, before: DataFrame,
-      after: DataFrame, changedKeys: DataFrame,
-      keyCols: Seq[String]): DataFrame =
-    categoryShape.fold(base, before, after, changedKeys, keyCols)
-
   /** Level 2: the best-selling product per channel group off a level-1
     * frame — deterministic argmax (revenue ties broken by LARGEST
     * product_id via the struct ordering; the oracle mirrors with
@@ -1433,7 +1420,7 @@ object IngestQueries {
   /** The carried two-level fold state shared by q169 (streamed drains
     * only) and q170 (drains + a mid-loop purge transition): one
     * [[step]] per store version landed — level 1 by ± delta
-    * ([[applyCategoryDelta]]), level 2 by touched-group recompute
+    * ([[categoryShape]]), level 2 by touched-group recompute
     * ([[maintainTopSellers]]). Both carried artifacts are pinned per
     * step (the q165 lineage discipline: plan depth O(1) in step
     * count). ONE fold implementation so the purge certificate can
@@ -1461,7 +1448,7 @@ object IngestQueries {
       // (guide §2.6); level 2 below needs both, so it stays after
       val (l1, touched) = graft.core.Par.both(
         graft.core.Checkpoints.pin(
-          applyCategoryDelta(base, before, after, changedKeys, keyCols)),
+          categoryShape.fold(base, before, after, changedKeys, keyCols)),
         graft.core.Checkpoints.pin(
           touchedGroups(before, after, changedKeys, keyCols)))
       lvl1 = l1
@@ -2078,7 +2065,7 @@ object IngestQueries {
         "the upsert writer no longer fragments and the compaction " +
         "certificate would be vacuous")
     val preCompact = orders.currentVersion.get
-    orders.compact(targetFiles = 1)
+    orders.compact()
     val postCompact = orders.currentVersion.get
     // the transition's CDC row count — a single-row aggregate read,
     // taken BEFORE the vacuum below deletes the pre-compact dir the
@@ -2104,7 +2091,7 @@ object IngestQueries {
     * CONTINUOUSLY next to maintenance, and it must be invisible to CDC
     * consumers — a pure layout rewrite, never a data change. q173
     * certifies the composition end to end: the q161 flow store with a
-    * caught-up durable report (2 folds), then `compact(targetFiles=1)`
+    * caught-up durable report (2 folds), then `compact()`
     * lands a new version, the consumer resumes ONE more fold over the
     * compaction transition whose CDC is EMPTY (the judged
     * `compact_cdc_rows = 0` — a compaction that perturbed any latest
@@ -2131,8 +2118,8 @@ object IngestQueries {
     * Postgres (autovacuum/CLUSTER, SURVEY §2.9) while its reports keep
     * reading — the same transparency contract over versioned parquet.
     *
-    * Scale: compaction cost is the one-version rewrite (q156's class,
-    * `targetFiles` sized to the table); the consumer's extra fold
+    * Scale: compaction cost is the one-version rewrite (q156's
+    * class); the consumer's extra fold
     * costs one EMPTY-delta pass (semi-joins against an empty key
     * frame); retention stays a driver-side delete. The judged plan is
     * q167's consumer shape: the report scan joined to the recompute

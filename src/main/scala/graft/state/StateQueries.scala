@@ -1,6 +1,6 @@
 package graft.state
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
@@ -27,9 +27,9 @@ import graft.tables.Tables
   *  - the layout actually changed: `n_files` is the MEASURED post-
   *    compact file count per partition directory (distinct
   *    `_metadata.file_path` — computed distributed, no filesystem
-  *    walk), judged against the oracle's contract value 1 (targetFiles
-  *    = 1 ⇒ the (part, salt) repartition puts each directory's rows in
-  *    exactly one task); `frag_before` certifies the scenario is
+  *    walk), judged against the oracle's contract value 1 (the `part`
+  *    repartition puts each directory's rows in exactly one task);
+  *    `frag_before` certifies the scenario is
   *    non-degenerate — the pre-compact version really was fragmented
   *    (the upsert's updated ∪ inserts union writes ≥ 2 files into
   *    every directory both branches touch), so the certificate cannot
@@ -43,9 +43,9 @@ import graft.tables.Tables
   * the post version's part-grain rollup (content aggregates and
   * `countDistinct(_metadata.file_path)` riding ONE scan) and the pre
   * version's column-pruned (part, file) accounting scan. At 100 TB the
-  * same compact() runs per partition directory with `targetFiles`
-  * sized to the table, and the two full-row certificate scans are what
-  * any rebuild-vs-maintenance proof pays (the q136/q153 convention).
+  * same compact() runs per partition directory, and the two full-row
+  * certificate scans are what any rebuild-vs-maintenance proof pays
+  * (the q136/q153 convention).
   */
 object StateQueries {
 
@@ -72,7 +72,7 @@ object StateQueries {
       st.upsert(base, Some("ord"))
       st.upsert(batch, Some("ord"))
       val preV = st.currentVersion.get
-      st.compact(targetFiles = 1)
+      st.compact()
       val postV = st.currentVersion.get
 
       def version(v: String): DataFrame =
@@ -217,7 +217,7 @@ object StateQueries {
       val versionsBefore = st.history().size.toLong
       st.vacuum()
       val versionsAfter = st.history().size.toLong
-      require(st.currentVersion.contains(v3), "vacuum moved the pointer")
+      require(st.currentVersion.contains(v3), "vacuum changed the current version")
 
       val post = st.current().get
       val postAgg = post.agg(count(lit(1)).as("n"),

@@ -1,24 +1,30 @@
 package graft.state
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
+import graft.core.Fs
 
-/** Parquet-backed keyed state table with atomic version swap and the
-  * reference's upsert semantics (SURVEY.md §2.4, `flows/data_ingestion
+/** Parquet-backed keyed state table with committed immutable versions
+  * and the reference's upsert semantics (SURVEY.md §2.4, `flows/data_ingestion
   * .py:99–216`).
   *
-  * Layout: `root/v-<uuid>/` immutable parquet versions + a `root/_CURRENT`
-  * pointer file updated with an atomic filesystem move — readers always
-  * see a complete version (the reference's per-batch transaction +
-  * rollback, R3, without an external store; on a cluster the same pattern
-  * runs against any filesystem with atomic rename, or is swapped for
-  * Delta/Iceberg ACID commits).
+  * Layout: `root/v-<seq>-<id>/` immutable parquet versions plus an
+  * append-only commit log `root/_log/<seq>`, one entry per committed
+  * version holding its name — the offset/commit log of Structured
+  * Streaming (SIGMOD 2018) and Spark's `HDFSMetadataLog`. `<seq>` is 16
+  * hex digits, so name order is commit order; `<id>` is random, so no
+  * version path is ever reused. A version exists once its log entry
+  * does: [[history]] and [[currentVersion]] read only the log, so a
+  * directory left by a crashed write or an interrupted vacuum is never
+  * visible (the reference's per-batch transaction + rollback, R3,
+  * without an external store; on a cluster, Delta/Iceberg ACID commits
+  * play the same role).
   *
   * Upsert semantics (duplicate-key behavior replicated exactly):
   *  - first load: *append all rows* — within-batch duplicate keys are NOT
@@ -48,65 +54,40 @@ final class StateTable(
   import StateTable._
 
   private val rootPath = Paths.get(root)
+  private val logDir = rootPath.resolve("_log")
 
-  private def pointer = rootPath.resolve("_CURRENT")
+  /** Commit-log entries, oldest first; each holds one version name
+    * (`.`-prefixed names are entries still being written).
+    */
+  private def entries(): Seq[Path] =
+    if (!Files.isDirectory(logDir)) Nil
+    else Fs.listDir(logDir).filterNot(_.getFileName.toString.startsWith("."))
+      .sortBy(_.getFileName.toString)
 
-  def currentVersion: Option[String] =
-    if (Files.exists(pointer)) Some(Files.readString(pointer).trim) else None
+  private def log(): Seq[(Path, String)] = entries().map(e => e -> Files.readString(e))
+
+  /** Committed versions, oldest first. */
+  def history(): Seq[String] = log().map(_._2)
+
+  /** The newest committed version, or None before the first write. */
+  def currentVersion: Option[String] = entries().lastOption.map(Files.readString(_))
 
   private def readDir(version: String): DataFrame =
-    StateTable.readVersionDir(spark, rootPath.resolve(version).toString)
+    readVersionDir(spark, rootPath.resolve(version).toString)
 
   /** Current contents, or None before the first write. */
   def read(): Option[DataFrame] = currentVersion.map(readDir)
 
-  /** Write `df` as a fresh immutable version and atomically repoint.
-    * Version names embed a monotonic nano timestamp so [[history]] has a
-    * deterministic order even for writes within the same millisecond.
-    *
-    * `System.nanoTime` is monotone only WITHIN one JVM/boot clock
-    * domain: a maintenance process restarted after a machine reboot or
-    * on a failover host could otherwise mint a name that sorts BEFORE
-    * retained versions, corrupting [[history]] order and any watermark
-    * recovered from version names (q167/q168's resume). So the name is
-    * order-safe by construction: when the local candidate timestamp
-    * does not exceed the newest retained name's, the successor of that
-    * name's timestamp is used instead — names are strictly increasing
-    * across SEQUENTIAL writes from any process. (Strictly: within one
-    * process two same-nanoTime writes previously tie-broke on the
-    * random suffix; the successor rule now makes the prefix itself
-    * strictly increasing.)
-    *
-    * Guarantee scope: ONE writer at a time — the framework's
-    * maintenance model (flows, folds, and retention run sequentially
-    * against a store; the next writer starts only after the previous
-    * pointer move is visible). The read-history-then-mint successor
-    * rule is not atomic: two CONCURRENT writers could read the same
-    * newest prefix, mint equal timestamps (ordered only by the random
-    * suffix), and the later pointer write would win silently.
-    * Concurrent writers need external coordination — on a cluster,
-    * swap this layer for Delta/Iceberg ACID commits (the class doc's
-    * note) or fence writers at the orchestrator.
+  /** Write `df` as a fresh immutable version, then commit it by linking
+    * its log entry into place. The link fails if the entry exists, so a
+    * second writer of the same sequence number fails here instead of
+    * replacing a commit; its version directory stays uncommitted.
     */
   def overwrite(df: DataFrame): Unit = {
-    Files.createDirectories(rootPath)
-    val local = System.nanoTime()
-    val ts = history().lastOption
-      .flatMap(n => scala.util.Try(
-        java.lang.Long.parseUnsignedLong(n.slice(2, 18), 16)).toOption)
-      .filter(newest => java.lang.Long.compareUnsigned(newest, local) >= 0)
-      .map { newest =>
-        // unsigned max + 1 would WRAP to 0 and silently break the
-        // ordering guarantee forever (reachable only via a host whose
-        // nanoTime returned a negative value — the spec allows it);
-        // fail loudly instead of corrupting
-        require(newest != -1L,
-          s"version-name timestamp space exhausted at $root — the newest " +
-            "retained version carries the maximal unsigned prefix")
-        newest + 1L
-      }
-      .getOrElse(local)
-    val v = f"v-$ts%016x-${UUID.randomUUID().toString.take(4)}"
+    val next = entries().lastOption
+      .fold(0L)(e => java.lang.Long.parseLong(e.getFileName.toString, 16) + 1L)
+    val seq = f"$next%016x"
+    val v = s"v-$seq-${UUID.randomUUID().toString.take(8)}"
     val writer = df.write.mode("overwrite")
     val versionDir = rootPath.resolve(v).toString
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
@@ -118,38 +99,53 @@ final class StateTable(
     // (guide §6 small-read overhead). Unpartitioned dirs only: a
     // partitioned read re-derives partition columns from dir names and
     // reorders them last, so its inferred schema is not df.schema.
-    if (partitionCols.isEmpty) StateTable.seedSchema(versionDir, df.schema)
-    val tmp = rootPath.resolve(s".ptr-${UUID.randomUUID().toString.take(8)}")
+    if (partitionCols.isEmpty) versionSchemas.put(versionDir, df.schema): Unit
+    Files.createDirectories(logDir)
+    val tmp = logDir.resolve(s".$v")
     Files.writeString(tmp, v)
-    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    try Files.createLink(logDir.resolve(seq), tmp)
+    catch {
+      case _: FileAlreadyExistsException => throw new IllegalStateException(
+        s"$root: version $seq was already committed by another writer; $v is not committed")
+    } finally Files.delete(tmp)
   }
 
-  /** Drop all non-current versions (the reference's rollback leaves no
-    * trace; failed writes here are simply never pointed at).
+  /** Delete a version directory with no log entry, and its schema-cache
+    * entry.
+    */
+  private def dropDir(v: String): Unit = {
+    val dir = rootPath.resolve(v)
+    versionSchemas.remove(dir.toString)
+    Fs.deleteRecursively(dir)
+  }
+
+  /** Drop every version but the current one, and any directory a
+    * crashed write or vacuum left uncommitted. Log entries go first, so
+    * an interrupted vacuum never leaves a committed, half-deleted
+    * version.
     */
   def vacuum(): Unit = currentVersion.foreach { keep =>
-    listDir(rootPath)
-      .filter(p => p.getFileName.toString.startsWith("v-") && p.getFileName.toString != keep)
-      .foreach(deleteRecursively)
+    entries().init.foreach(Files.delete)
+    Fs.listDir(rootPath).map(_.getFileName.toString)
+      .filter(n => n.startsWith("v-") && n != keep)
+      .foreach(dropDir)
   }
 
-  /** Retention-bounded vacuum: drop retained versions STRICTLY OLDER
-    * than `watermark` (fixed-format names make lexicographic order the
-    * creation order — [[overwrite]]'s cross-process guarantee), never
-    * the current version. `watermark` is the minimum consumer resume
-    * point — e.g. the oldest `as_of` across maintained reports
-    * (q168) — so retention can run continuously next to maintenance
-    * without stranding a resumable consumer: every version a resume
-    * could still fold from survives, while history the consumers have
-    * all absorbed is reclaimed. Returns the reclaimed version names so
-    * callers can judge that retention actually bit (and how much).
+  /** Retention-bounded vacuum: drop committed versions STRICTLY OLDER
+    * than `watermark` (name order is commit order), never the current
+    * version. `watermark` is the minimum consumer resume point — e.g.
+    * the oldest `as_of` across maintained reports (q168) — so retention
+    * can run continuously next to maintenance without stranding a
+    * resumable consumer: every version a resume could still fold from
+    * survives, while history the consumers have all absorbed is
+    * reclaimed. Log entries are deleted before directories, as in
+    * [[vacuum]]. Returns the reclaimed version names so callers can
+    * judge that retention actually bit (and how much).
     */
   def vacuumBefore(watermark: String): Seq[String] = {
-    val keep = currentVersion.toSet
-    val reclaimed = history().filter(v => v < watermark && !keep.contains(v))
-    reclaimed.foreach(v => deleteRecursively(rootPath.resolve(v)))
-    reclaimed
+    val reclaimed = log().dropRight(1).filter(_._2 < watermark)
+    reclaimed.foreach(e => Files.delete(e._1))
+    reclaimed.map { case (_, v) => dropDir(v); v }
   }
 
   /** Upsert a batch. `orderCol` names a column of `batch` that is
@@ -177,9 +173,7 @@ final class StateTable(
         val outCols = (keyCols ++ valueCols :+ SeqCol).map(col)
         // ONE scalar read serves both the empty-state test and the
         // insert-arm _seq offset (coalesce: state may exist but be empty
-        // — schema-sync CreateTable); previously max(_seq) was its own
-        // driver action and emptiness was never tested, so a first load
-        // paid the full key algebra against zero state rows
+        // — schema-sync CreateTable)
         val agg = state.agg(coalesce(max(col(SeqCol)), lit(0L)), count(lit(1L))).head()
         val maxSeq = agg.getLong(0)
         if (agg.getLong(1) == 0L) {
@@ -198,8 +192,8 @@ final class StateTable(
           // monotonically_increasing_id(), a NONDETERMINISTIC
           // expression, so the update and insert arms below — though
           // they share one logical frame — can never share a physical
-          // exchange (non-same-result subtrees), and the batch source
-          // was scanned AND shuffled once per arm. Pinning materializes
+          // exchange (non-same-result subtrees), so the batch source
+          // would be scanned AND shuffled once per arm. Pinning materializes
           // the batch (and its _seq) exactly once; both arms then reuse
           // one deterministic exchange, and _seq stops depending on two
           // scans happening to enumerate files identically. The pinned
@@ -233,27 +227,20 @@ final class StateTable(
     }
   }
 
-  /** Compact the current version into `targetFiles` files per partition
+  /** Compact the current version into one file per partition
     * directory (the small-files problem: every upsert writes a full new
     * version, and long-lived tables accrete many small parquet files
     * whose per-file open/footer cost dominates scans at scale). Contents
     * are byte-identical rows — only the file layout changes; readers see
-    * the compacted version atomically via the usual pointer swap.
-    *
-    * Partitioned tables shuffle on (partitionCols, key-hash salt) so each
-    * partition directory gets up to `targetFiles` files AND no single
-    * task absorbs a whole hot partition. Unpartitioned tables with
-    * targetFiles=1 funnel through one task by construction — size
-    * targetFiles to the table, not the default, for big tables.
+    * the compacted version once it commits. Each partition directory's
+    * rows go through one task; an unpartitioned table goes through one
+    * task in all.
     */
-  def compact(targetFiles: Int = 1): Unit =
+  def compact(): Unit =
     read().foreach { df =>
-      val compacted =
-        if (partitionCols.nonEmpty) {
-          val salt = pmod(hash(keyCols.map(col): _*), lit(targetFiles))
-          df.repartition((partitionCols.map(col) :+ salt): _*)
-        } else df.repartition(targetFiles)
-      overwrite(compacted)
+      overwrite(
+        if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
+        else df.repartition(1))
     }
 
   /** Reader view without internal bookkeeping columns. */
@@ -269,8 +256,8 @@ final class StateTable(
     * changed KEY with `_change ∈ {insert, update, delete}` and the
     * after-image columns (before-image for deletes). Key-level — a key
     * whose latest row's values are byte-equal in both versions emits
-    * nothing. Versioned immutable state makes CDC a pure join: no log,
-    * no triggers; two scans + one shuffle on the key.
+    * nothing. Versioned immutable state makes CDC a pure join: no change
+    * log, no triggers; two scans + one shuffle on the key.
     */
   def diff(fromVersion: String, toVersion: String): DataFrame = {
     def latestPerKey(v: String): DataFrame = {
@@ -323,16 +310,6 @@ final class StateTable(
         when(col("_in_a").isNotNull, col(c)).otherwise(col(s"_b_$c")).as(c)
       } :+ col("_change"): _*)
   }
-
-  /** All retained versions, oldest first (by filesystem mtime), with the
-    * current one last-write wins semantics visible via [[currentVersion]].
-    */
-  def history(): Seq[String] =
-    if (!Files.exists(rootPath)) Nil
-    else listDir(rootPath)
-      .filter(_.getFileName.toString.startsWith("v-"))
-      .map(_.getFileName.toString)
-      .sorted // monotonic nano-timestamp prefix => creation order
 }
 
 object StateTable {
@@ -340,34 +317,24 @@ object StateTable {
   val SeqCol = "_seq"
 
   /** Process-wide per-version-dir schema cache. Version dirs are
-    * immutable once pointed at (the class invariant every consumer
-    * relies on) and their names are globally unique (nano-timestamp +
-    * random suffix under a caller-owned root), so a version's parquet
-    * schema can never change once read. A bare `spark.read.parquet`
-    * fires a footer/schema-inference job at CALL time; the maintenance
-    * paths read the same version several times per fold (watermark,
-    * CDC, fold base, certificate legs) and the restart-realism flows
-    * do it through FRESH handles per phase — so the cache is keyed by
-    * absolute path at the companion, not per handle. Metadata only:
-    * row data is re-read from parquet on every action, and resume
-    * state (watermarks, report rows) always comes off the durable rows
-    * themselves. Bounded: one StructType per version written this
-    * process; vacuumed versions' entries are inert.
+    * immutable once committed and their paths are never reused
+    * (sequence number + random id under a caller-owned root), so a
+    * version's parquet schema can never change once read. A bare
+    * `spark.read.parquet` fires a footer/schema-inference job at CALL
+    * time; the maintenance paths read the same version several times
+    * per fold (watermark, CDC, fold base, certificate legs) and the
+    * restart-realism flows do it through FRESH handles per phase — so
+    * the cache is keyed by absolute path at the companion, not per
+    * handle. Metadata only: row data is re-read from parquet on every
+    * action, and resume state (watermarks, report rows) always comes
+    * off the durable rows themselves. Seeded by [[StateTable.overwrite]]
+    * (the writer knows the schema it wrote); vacuum evicts the versions
+    * it reclaims.
     */
-  private val versionSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private[state] val versionSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** Seed the cache from the writer side (see [[StateTable.overwrite]]):
-    * version dirs are immutable once written, so the schema the write
-    * produced IS the schema every later read would infer.
-    */
-  private[state] def seedSchema(
-      path: String, schema: org.apache.spark.sql.types.StructType): Unit = {
-    versionSchemas.put(path, schema): Unit
-  }
-
-  private[state] def readVersionDir(
-      spark: SparkSession, path: String): DataFrame =
+  private def readVersionDir(spark: SparkSession, path: String): DataFrame =
     versionSchemas.get(path) match {
       case null =>
         val df = spark.read.parquet(path)
@@ -375,10 +342,4 @@ object StateTable {
         df
       case s => spark.read.schema(s).parquet(path)
     }
-
-  private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-    graft.core.Fs.listDir(p)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.core.Fs.deleteRecursively(p)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Incremental funnel tracking: the batch q50 (view → click → purchase
   * with strict event-time progression) as a per-user state machine over

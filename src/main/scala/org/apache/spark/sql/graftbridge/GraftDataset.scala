@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSparkSession}
 
 /** Bridge into the package-private Dataset factory, so graft can wrap a
   * custom [[LogicalPlan]] node as a public DataFrame. (The standard

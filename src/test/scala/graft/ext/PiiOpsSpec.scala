@@ -24,7 +24,6 @@ class PiiOpsSpec extends AnyFunSuite {
   }
 
   test("q110 totals match an independent per-doc recomputation") {
-    import scala.jdk.CollectionConverters._
     val rows = PiiOps.q110PiiRedaction.run(spark, sfDir)
       .collect().map(r => r.getString(0) -> r).toMap
     // independent recomputation: inject + scan with plain Java regex

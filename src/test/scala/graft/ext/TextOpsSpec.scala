@@ -113,7 +113,7 @@ class TextOpsSpec extends AnyFunSuite {
         val keptChunks = cs.zipWithIndex.collect { case (c, i) if firstAt(c) == (id, i) => c }
         id -> ((cs.size.toLong, keptChunks.size.toLong, md5hex(keptChunks.mkString(" "))))
       }.toMap
-      assert(expected.exists { case (id, (n, k, _)) => k < n },
+      assert(expected.exists { case (_, (n, k, _)) => k < n },
         "no doc lost a chunk — differential test is vacuous")
       val got = out.collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_chunks"), r.getAs[Long]("n_kept"), r.getAs[String]("kept_md5")))).toMap
@@ -222,7 +222,7 @@ class TextOpsSpec extends AnyFunSuite {
     val docs = rows.toDF("doc_id", "text")
       .withColumn("source", org.apache.spark.sql.functions.lit("s"))
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
-    val m = TextOps.purgeAccounting(spark, docs)
+    val m = TextOps.purgeAccounting(docs)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m("deleted_docs") == del.size)
     assert(m("index_terms_entering") == 1L, s"entering leg broken: $m")

@@ -321,7 +321,7 @@ class VectorOpsSpec extends AnyFunSuite {
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(got == expected, s"confusion mismatch:\n got=$got\n exp=$expected")
     // quality: blocked predictions agree with exact (unblocked) kNN votes
-    val exactPred = test.flatMap { case (id, lab, v) =>
+    val exactPred = test.flatMap { case (id, _, v) =>
       vote(train.map { case (nid, nlab, nv, _) => (cosF(v, nv), nid, nlab) }.toSeq)
         .map(p => id -> p)
     }.toMap

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
@@ -524,7 +526,7 @@ class IngestCertSpec extends AnyFunSuite {
       ("o2", "b", "X", 60.00), ("o3", "c", "Y", 10.00)
     ).toDF("order_id", "product_id", "channel_group", "amount")
     val changedKeys = Seq(("o1", "a")).toDF("order_id", "product_id")
-    val lvl1 = IngestQueries.applyCategoryDelta(
+    val lvl1 = IngestQueries.categoryShape.fold(
       IngestQueries.categoryReport(before), before, after, changedKeys, keyCols)
     val touched = IngestQueries.touchedGroups(before, after, changedKeys, keyCols)
     // proper-subset pruning the 3-group judged corpus can't show e2e:
@@ -996,5 +998,151 @@ class IngestCertSpec extends AnyFunSuite {
     val nBuckets = after.select(bucket.map(col): _*).distinct().count()
     assert(nTouched > 0 && nTouched < nBuckets,
       s"late fold touched $nTouched of $nBuckets buckets — pruning not visible")
+  }
+
+  /** Crash residue a store write leaves between its parquet write and
+    * its commit: a complete version directory named to sort after every
+    * committed version, holding `rows`. Returns its name.
+    */
+  private def plantUncommitted(st: graft.state.StateTable,
+      rows: org.apache.spark.sql.DataFrame): String = {
+    val last = st.history().last
+    val name = f"v-${java.lang.Long.parseLong(last.slice(2, 18), 16) + 1L}%016x-crash"
+    rows.write.mode("overwrite").parquet(Paths.get(st.root, name).toString)
+    name
+  }
+
+  /** Crash residue of a retention vacuum stopped after it deleted
+    * `version`'s log entry and part of its directory.
+    */
+  private def plantInterruptedVacuum(st: graft.state.StateTable,
+      version: String): Unit = {
+    val log = Paths.get(st.root, "_log")
+    graft.core.Fs.listDir(log).filter(e => Files.readString(e) == version)
+      .foreach(Files.delete)
+    graft.core.Fs.listDir(Paths.get(st.root, version))
+      .filter(_.getFileName.toString.startsWith("part-")).take(1)
+      .foreach(Files.delete)
+  }
+
+  test("crash residue at every store-write boundary of a q167 lifecycle is never folded") {
+    val sf = TestSpark.testdata("0.001")
+    val keyCols = graft.core.Schemas.ordersKey
+    // the q161 flow's three versions (CreateTable, first load, re-run)
+    // replayed write by write into a fresh orders store, each followed
+    // by a fresh-handle fold, then retention at the report watermark
+    val src = IngestQueries.q161BuildStore(spark, sf)
+    val versions = src.history().map(v =>
+      spark.read.parquet(Paths.get(src.root, v).toString))
+    val ordersRoot = graft.core.Staging.invocationDir("graft_crash_q167_o", sf)
+    val reportRoot = graft.core.Staging.invocationDir("graft_crash_q167_r", sf)
+    def orders() = new graft.state.StateTable(spark, ordersRoot, keyCols)
+    def report() = IngestQueries.reportStoreHandle(spark, reportRoot)
+    def resume(): Int = IngestQueries.resumeReportMaintenance(orders(), report(), keyCols)
+    val writes: Seq[(String, () => Unit)] = versions.zipWithIndex.flatMap { case (df, i) =>
+      Seq[(String, () => Unit)](
+        s"orders write $i" -> (() => orders().overwrite(df)),
+        s"fold after write $i" -> (() => resume(): Unit))
+    } :+ ("retention" -> (() => {
+      val o = orders()
+      o.vacuumBefore(IngestQueries.reportWatermark(report(), o.history().head)): Unit
+    }))
+    // restart: fresh handles resume, then the durable report must equal
+    // the recompute and its watermark must be the committed current
+    // orders version
+    def assertRecovered(at: String): Unit = {
+      resume()
+      val o = orders()
+      val r = report()
+      IngestQueries.reportWatermarkOpt(r).foreach { wm =>
+        assert(o.history().contains(wm) && o.currentVersion.contains(wm),
+          s"$at: report watermark $wm is not the committed current orders version")
+      }
+      assertMultisetEqual(r.current().get.drop("as_of"),
+        IngestQueries.productReport(o.current().get),
+        s"$at: the durable report diverged from the recompute")
+    }
+    writes.foreach { case (at, write) =>
+      write()
+      // a crash inside the next write of either store
+      val o = orders()
+      val crashed = plantUncommitted(o,
+        o.read().get.withColumn("amount", col("amount") * lit(3.0)))
+      if (Files.exists(Paths.get(reportRoot)))
+        plantUncommitted(report(), report().read().get.withColumn("as_of", lit(crashed)))
+      assertRecovered(s"$at + uncommitted write")
+      // a crash inside retention at the report watermark
+      val oldest = o.history().head
+      IngestQueries.reportWatermarkOpt(report()).filter(oldest < _).foreach { _ =>
+        plantInterruptedVacuum(o, oldest)
+        assert(!orders().history().contains(oldest))
+        assertRecovered(s"$at + interrupted vacuum")
+      }
+    }
+  }
+
+  test("a q177 resume recovers from a crash after any of its report writes") {
+    val sf = TestSpark.testdata("0.001")
+    val ordersRoot = IngestQueries.q161BuildStore(spark, sf).root
+    val invSt = IngestQueries.q163BuildInvStore(spark, sf)
+    // retention past the inventories CreateTable: every fold then joins
+    // a nonempty dimension, so every report version carries rows and
+    // with them its watermark pair
+    invSt.vacuumBefore(invSt.history()(1))
+    val invRoot = invSt.root
+    val reportRoot = graft.core.Staging.invocationDir("graft_crash_q177_r", sf)
+    def orders() = new graft.state.StateTable(spark, ordersRoot,
+      graft.core.Schemas.ordersKey)
+    def inv() = new graft.state.StateTable(spark, invRoot,
+      graft.core.Schemas.inventoriesKey)
+    def report() = IngestQueries.joinedReportHandle(spark, reportRoot)
+    def resume(): (Int, Int) =
+      IngestQueries.resumeJoinedMaintenance(orders(), inv(), report())
+    def assertRecovered(at: String): Unit = {
+      val (o, i, r) = (orders(), inv(), report())
+      val (wmO, wmI) = IngestQueries.joinedWatermarksOpt(r).get
+      assert(o.history().contains(wmO) && i.history().contains(wmI),
+        s"$at: watermark pair ($wmO, $wmI) names an uncommitted version")
+      assert((wmO, wmI) == ((o.currentVersion.get, i.currentVersion.get)),
+        s"$at: watermark pair is not the stores' current versions")
+      assertMultisetEqual(r.current().get.drop("as_of", "as_of_dim"),
+        IngestQueries.joinedCategoryReport(IngestQueries.joinedView(
+          o.current().get, i.current().get)),
+        s"$at: the durable joined report diverged from the recompute")
+    }
+    // one resume writes CreateTable, then one report version per fold
+    val (nO, nI) = resume()
+    val n = nO + nI
+    assert(nO == 2 && nI == 1, s"expected (2, 1) fold steps, got ($nO, $nI)")
+    assertRecovered("uninterrupted resume")
+    val reportLog = Paths.get(reportRoot, "_log")
+    // a crash after the resume's k-th fold write, during the next one:
+    // the report log holds CreateTable + k folds, and fold k+1's
+    // directory is written but uncommitted
+    (n - 1 to 0 by -1).foreach { k =>
+      val entries = graft.core.Fs.listDir(reportLog).sortBy(_.getFileName.toString)
+      val names = entries.map(Files.readString(_))
+      entries.drop(k + 1).foreach(Files.delete)
+      names.drop(k + 2).foreach(v =>
+        graft.core.Fs.deleteRecursively(Paths.get(reportRoot, v)))
+      val (o, i) = resume()
+      assert(o + i == n - k, s"crash after fold $k: resumed $o + $i steps, want ${n - k}")
+      assert(!report().history().contains(names(k + 1)))
+      assertRecovered(s"crash after fold $k")
+    }
+    // a crash inside per-store retention at the watermark pair
+    val (wmO, wmI) = IngestQueries.joinedWatermarksOpt(report()).get
+    val doomedO = orders().history().head
+    val doomedI = inv().history().head
+    assert(doomedO < wmO && doomedI < wmI)
+    plantInterruptedVacuum(orders(), doomedO)
+    plantInterruptedVacuum(inv(), doomedI)
+    assert(resume() == ((0, 0)), "an interrupted vacuum made a caught-up report refold")
+    assertRecovered("interrupted vacuum")
+    // finishing retention reclaims the rest; vacuum() clears the residue
+    orders().vacuumBefore(wmO)
+    orders().vacuum()
+    assert(!Files.exists(Paths.get(ordersRoot, doomedO)))
+    assertRecovered("completed retention")
   }
 }

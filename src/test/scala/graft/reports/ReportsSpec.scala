@@ -2,8 +2,6 @@ package graft.reports
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.functions._
-
 import graft.TestSpark
 import graft.ingest.Ingest
 

@@ -69,7 +69,7 @@ class StateQueriesSpec extends AnyFunSuite {
     st.upsert(part(o.filter(col("o_orderkey") % 2 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * lit(1.1))), Some("ord"))
     val preV = st.currentVersion.get
-    st.compact(targetFiles = 1)
+    st.compact()
     val postV = st.currentVersion.get
     assert(preV != postV, "compact must write a NEW immutable version")
     assert(st.history().size == 3, "first load + re-run + compact = 3 versions")

@@ -1,6 +1,11 @@
 package graft.state
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +14,16 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.core.Schemas
 import graft.ingest.Ingest
+
+/** Latches a write's tasks block on, so a spec can hold one writer
+  * between choosing its sequence number and committing it. A top-level
+  * object, so task closures reach it statically instead of serializing
+  * it.
+  */
+private object WriteGate {
+  val started = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+}
 
 class StateTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -59,7 +74,7 @@ class StateTableSpec extends AnyFunSuite {
     val t = new StateTable(spark, dir, Seq("product_id"), partitionCols = Seq("category"))
     t.upsert(graft.ingest.Ingest.readInventoriesCsv(spark, TestSpark.fixture("inventory_fixture.csv")))
     // hive-style layout on disk
-    val vdir = Files.list(java.nio.file.Paths.get(dir)).filter(_.getFileName.toString.startsWith("v-")).findFirst.get
+    val vdir = Paths.get(dir, t.currentVersion.get)
     assert(Files.exists(vdir.resolve("category=Shoes")))
     // a category filter becomes a partition filter (pruned scan)
     val filtered = t.current().get.filter(col("category") === "Shoes")
@@ -83,7 +98,7 @@ class StateTableSpec extends AnyFunSuite {
     val before = t.current().get.orderBy(col("order_id"), col("product_id")).collect().toSeq
     val filesBefore = parquetFiles()
 
-    t.compact(targetFiles = 1)
+    t.compact()
 
     val after = t.current().get.orderBy(col("order_id"), col("product_id")).collect().toSeq
     val filesAfter = parquetFiles()
@@ -103,33 +118,6 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.current().get.count() == 8)
   }
 
-  test("version names are order-safe across clock domains (restart realism)") {
-    val t = freshTable()
-    t.upsert(ordersBatch("orders_fixture.csv"))
-    // simulate a version minted in a FASTER pre-restart clock domain:
-    // a retained name whose nano prefix is far ahead of this JVM's
-    // System.nanoTime — without the successor rule, the next local
-    // write would sort BEFORE it, corrupting history order and any
-    // version-name watermark (the q167/q168 resume hazard)
-    val future = f"v-${Long.MaxValue - 7}%016x-aaaa"
-    val futureDir = java.nio.file.Paths.get(t.root, future)
-    val cur = java.nio.file.Paths.get(t.root, t.currentVersion.get)
-    java.nio.file.Files.walk(cur).forEach { p =>
-      val rel = cur.relativize(p)
-      val dst = futureDir.resolve(rel)
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst): Unit
-    }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(t.root, "_CURRENT"), future)
-    assert(t.history().last == future)
-    // the restarted process's write must sort AFTER every retained name
-    t.upsert(ordersBatch("orders_rerun.csv"))
-    val newest = t.currentVersion.get
-    assert(newest > future,
-      s"post-restart version $newest sorts before retained $future")
-    assert(t.history().last == newest)
-  }
-
   test("vacuumBefore reclaims strictly-older versions, keeps watermark and newer") {
     val t = freshTable()
     t.upsert(ordersBatch("orders_fixture.csv"))
@@ -146,5 +134,59 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.history() == Seq(v3))
     assert(t.vacuumBefore(v3).isEmpty)
     assert(t.current().get.count() == 8)
+  }
+
+  test("an uncommitted version directory is absent from history() and current()") {
+    val t = freshTable()
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    val committed = t.currentVersion.get
+    // what a crash between the parquet write and the commit leaves: a
+    // complete version directory that sorts last, with no log entry
+    val orphan = s"v-${"f" * 16}-crash"
+    t.read().get.limit(1).write.parquet(Paths.get(t.root, orphan).toString)
+    assert(t.history() == Seq(committed))
+    assert(t.currentVersion.contains(committed))
+    assert(t.current().get.count() == 6)
+    // the next write commits past it, and vacuum() clears it
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    assert(t.history().size == 2 && !t.history().contains(orphan))
+    assert(t.current().get.count() == 8)
+    t.vacuum()
+    assert(!Files.exists(Paths.get(t.root, orphan)))
+    assert(t.history().size == 1 && t.current().get.count() == 8)
+  }
+
+  test("a second commit of the same sequence number fails loudly") {
+    val a = freshTable()
+    a.upsert(ordersBatch("orders_fixture.csv"))
+    val b = new StateTable(spark, a.root, Schemas.ordersKey)
+    // hold `a` inside its parquet write — after it chose its sequence
+    // number, before its commit — while `b` commits that same number
+    val gate = udf { (q: Int) =>
+      WriteGate.started.countDown()
+      WriteGate.release.await()
+      q
+    }
+    val held = Future(a.overwrite(a.read().get.withColumn("quantity", gate(col("quantity")))))
+    assert(WriteGate.started.await(2, TimeUnit.MINUTES), "the held write never started")
+    b.overwrite(b.read().get)
+    WriteGate.release.countDown()
+    val ex = intercept[IllegalStateException](Await.result(held, 2.minutes))
+    assert(ex.getMessage.contains("already committed"), ex.getMessage)
+    // the first committer wins; the loser's version never becomes visible
+    assert(a.history().size == 2)
+    assert(a.currentVersion == b.currentVersion)
+    assert(a.current().get.count() == 6)
+  }
+
+  test("vacuumBefore evicts the reclaimed versions' schema-cache entries") {
+    val t = freshTable()
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    val Seq(v1, v2) = t.history()
+    def cached(v: String) = StateTable.versionSchemas.containsKey(Paths.get(t.root, v).toString)
+    assert(cached(v1) && cached(v2))
+    assert(t.vacuumBefore(v2) == Seq(v1))
+    assert(!cached(v1) && cached(v2))
   }
 }

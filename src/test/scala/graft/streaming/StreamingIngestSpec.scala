@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 
 import graft.TestSpark
 import graft.core.Schemas
-import graft.ingest.Ingest
 import graft.state.StateTable
 
 class StreamingIngestSpec extends AnyFunSuite {
