@@ -693,33 +693,292 @@ object IngestQueries {
     contents.select(col("product_id"), lit(1L).as("n_rows"),
       floor(col("amount") * 100).cast("long").as("amount_cents"))
 
-  private[graft] def productReport(contents: DataFrame): DataFrame =
-    productShape.report(contents)
+  /** A maintained SUM-shaped report family as ONE object: the
+    * aggregate definition, its view over the source stores, the
+    * columns its fold prunes by, and — derived, never hand-written —
+    * the durable report-store schema (group columns as strings unless
+    * `groupTypes` declares otherwise, measures as longs, plus one
+    * resume watermark column per source). Bundling them means a
+    * consumer ([[ReportConsumer]], [[reportStoreHandle]]) can never
+    * pair one family's fold with another's declared schema. Instances:
+    * [[productShape]] (q164–q168's per-product report),
+    * [[categoryShape]] (q169/q170's level-1 per-(group, product)
+    * report; q171's second consumer), [[monthlyShape]] (q176's
+    * time-bucketed report — its DERIVED integer group keys are why
+    * `groupTypes` exists), all over the orders store alone, and
+    * [[joinedShape]] (q175/q177's per-category report over orders ⋈
+    * inventories — the one shape whose view, prune columns and
+    * watermarks differ).
+    */
+  private[graft] final case class MaintainedShape(
+      /** Per-row measure contributions: maps the view's rows to
+        * `groupCols ++ measureCols` rows whose measures are exact LONG
+        * per-row contributions (counts as `lit(1L)`) — [[report]] is
+        * DERIVED from it (group-by + SUM), so the aggregate a consumer
+        * materializes and the fold's ± arms can never drift.
+        */
+      contrib: DataFrame => DataFrame,
+      groupCols: Seq[String], measureCols: Seq[String],
+      groupTypes: Seq[org.apache.spark.sql.types.DataType] = Nil,
+      /** The rows the report aggregates, from one contents frame per
+        * source store (in [[asOf]] order). It must be empty whenever a
+        * source is — the durable bootstrap relies on it.
+        */
+      view: Seq[DataFrame] => DataFrame = _.head,
+      /** The columns a source's change feed is projected to and every
+        * source is pruned by; every source carries them.
+        */
+      pruneCols: Seq[String] = graft.core.Schemas.ordersKey,
+      /** One resume-watermark column per source store. */
+      asOf: Seq[String] = Seq("as_of")) {
+    require(groupTypes.isEmpty || groupTypes.size == groupCols.size,
+      "groupTypes must be empty (all strings) or one per group column")
+    /** The full aggregate over the view's rows — the recompute legs'
+      * and base materializations' shape: one group-by exchange over the
+      * per-row contributions (SUM of `lit(1L)` replaces COUNT — same
+      * long values, and the shared definition is what makes the fused
+      * fold provably the same aggregate).
+      */
+    def report(df: DataFrame): DataFrame = {
+      val aggs = measureCols.map(c => sum(col(c)).as(c))
+      contrib(df).groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    }
+
+    /** The ± fold behind every maintained report: `base` is the report
+      * over `before` (one contents frame per source), and the result is
+      * the report over `after`. Each arm prunes every source to `keys`
+      * (a left-semi join on [[pruneCols]]), applies the view, and the
+      * ±1-SIGNED row contributions of both arms are unioned onto `base`
+      * and aggregated ONCE — one aggregation exchange per fold (SUM
+      * distributes over exact longs: every measure is an integer
+      * contribution). A group whose rows ALL retracted leaves a zero
+      * shell, filtered on `n_rows`; SUM/COUNT are self-maintainable,
+      * MIN/MAX needs a per-group recompute on retraction (q169's
+      * [[maintainTopSellers]]). Inserts and updates land via the
+      * `after ⊖ before` arms; a DELETED key's rows appear only in the
+      * before arm. Over two sources the same algebra is the two-table
+      * expansion `Δ(O⋈I) = ΔO⋈I ∪ O⋈ΔI ∪ ΔO⋈ΔI`: rows outside the
+      * pruned keys contribute identically to both arms and cancel.
+      *
+      * PRECONDITION on the change feed: `keys` must cover every key
+      * whose row MULTISET differs between the versions.
+      * [[graft.state.StateTable.diff]] is key-level (latest row per
+      * key), so a transition that added or removed value-identical
+      * COPIES of an existing key would slip past it — but transitions
+      * produced by [[graft.state.StateTable.upsert]] can never do that:
+      * the LWW arm rewrites an existing key's latest row IN PLACE and
+      * the insert arm appends only UNSEEN keys, so an existing key's
+      * multiplicity is invariant across an upsert (IngestCertSpec pins
+      * this on the judged flow's own version pair). Feeding this fold
+      * from a store mutated by raw `overwrite` with multiset edits
+      * invisible at key level needs a multiset-aware change feed.
+      */
+    def fold(base: DataFrame, before: Seq[DataFrame], after: Seq[DataFrame],
+        keys: DataFrame): DataFrame = {
+      def arm(sources: Seq[DataFrame], sign: Long) =
+        contrib(view(sources.map(_.join(keys, pruneCols, "left_semi"))))
+          .select(groupCols.map(col) ++
+            measureCols.map(c => (col(c) * lit(sign)).as(c)): _*)
+      val aggs = measureCols.map(c => sum(col(c)).as(c))
+      base
+        .unionByName(arm(after, 1L)).unionByName(arm(before, -1L))
+        .groupBy(groupCols.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .filter(col("n_rows") > 0)
+    }
+
+    def schema: org.apache.spark.sql.types.StructType = {
+      val types =
+        if (groupTypes.isEmpty)
+          groupCols.map(_ => org.apache.spark.sql.types.StringType)
+        else groupTypes
+      org.apache.spark.sql.types.StructType(
+        groupCols.zip(types).map { case (c, t) =>
+          org.apache.spark.sql.types.StructField(c, t) } ++
+        measureCols.map(c => org.apache.spark.sql.types.StructField(c,
+          org.apache.spark.sql.types.LongType)) ++
+        asOf.map(c => org.apache.spark.sql.types.StructField(c,
+          org.apache.spark.sql.types.StringType)))
+    }
+  }
+
+  private[graft] val productShape: MaintainedShape =
+    MaintainedShape(productContrib, Seq("product_id"),
+      Seq("n_rows", "amount_cents"))
+
+  /** One fold step a consumer applied: source store `source` advanced
+    * from watermark `from(source)` to `to(source)` with every other
+    * source held at its watermark. `keys` is the step's change feed
+    * projected to the shape's prune columns; `base` and `report` are
+    * the report before and after the step.
+    */
+  private[graft] final case class FoldStep(source: Int,
+      from: Seq[String], to: Seq[String],
+      keys: DataFrame, base: DataFrame, report: DataFrame)
+
+  private def frames(stores: Seq[graft.state.StateTable],
+      versions: Seq[String]): Seq[DataFrame] =
+    stores.zip(versions).map { case (st, v) => st.readVersion(v) }
+
+  /** A maintained report's consumer of its source stores: ONE walk
+    * ([[advance]]) for every maintained report, single-store or joined,
+    * carried in memory or durable. The walk reads the consumer's
+    * per-source watermarks, then folds each source's pending version
+    * pairs in turn with every other source held at its watermark, one
+    * [[MaintainedShape.fold]] per pair. Phases compose exactly by
+    * telescoping: over orders O and inventories I, the orders phase
+    * accumulates `report(O_cur ⋈ I_wm) ⊖ report(O_wm ⋈ I_wm)` and the
+    * inventories phase `report(O_cur ⋈ I_cur) ⊖ report(O_cur ⋈ I_wm)`
+    * — the middle terms cancel, and no cross-store ordering of the two
+    * histories is assumed (version names compare only within a store).
+    * With one source the walk is the plain version-pair walk. The
+    * subclasses decide only where the watermarks and each step's report
+    * are kept (the Structured Streaming model, SIGMOD 2018: one engine
+    * advances every consumer by its committed offsets).
+    */
+  private[graft] sealed abstract class ReportConsumer(val shape: MaintainedShape) {
+    /** Names the consumer in failures. */
+    protected def name: String
+    /** The per-source watermarks to resume from; `oldest` holds each
+      * store's oldest retained version.
+      */
+    protected def resumeFrom(stores: Seq[graft.state.StateTable],
+        oldest: Seq[String]): Seq[String]
+    /** The report as of watermarks `wm`. */
+    protected def base(stores: Seq[graft.state.StateTable],
+        wm: Seq[String]): DataFrame
+    protected def keepKeys(keys: DataFrame): DataFrame
+    /** Keeps a step's report; returns the step as later steps read it. */
+    protected def commit(step: FoldStep): FoldStep
+
+    /** Folds every version each store committed since the consumer's
+      * watermarks; returns the steps applied (none when caught up).
+      */
+    final def advance(stores: Seq[graft.state.StateTable]): Seq[FoldStep] = {
+      val hs = stores.map(_.history())
+      stores.zip(hs).foreach { case (st, h) =>
+        require(h.nonEmpty, s"$name: source store ${st.root} has no versions to fold")
+      }
+      val start = resumeFrom(stores, hs.map(_.head))
+      val pending = stores.indices.flatMap { j =>
+        val idx = hs(j).indexOf(start(j))
+        require(idx >= 0,
+          s"$name: watermark ${start(j)} is not in the history of source " +
+            s"store ${stores(j).root} — the store was vacuumed past the " +
+            "report's resume point")
+        hs(j).drop(idx).sliding(2).collect { case Seq(_, to) => j -> to }
+      }
+      pending.foldLeft(Vector.empty[FoldStep]) { case (done, (j, to)) =>
+        val from = done.lastOption.fold(start)(_.to)
+        val at = from.updated(j, to)
+        val keys = keepKeys(
+          stores(j).diff(from(j), to).select(shape.pruneCols.map(col): _*))
+        val b = base(stores, from)
+        done :+ commit(FoldStep(j, from, at, keys, b,
+          shape.fold(b, frames(stores, from), frames(stores, at), keys)))
+      }
+    }
+  }
+
+  /** A consumer that keeps its report in memory, for the life of the
+    * process. It starts at `start` (None: the store's oldest version)
+    * with the recomputed report there as its base, and pins each step's
+    * change keys and report (Checkpoints.pin), so the carried report's
+    * plan depth stays O(1) in step count (the iterative-operator rule,
+    * `core/Checkpoints.scala`). [[steps]] is its whole state.
+    */
+  private[graft] final class CarriedReport(shape: MaintainedShape,
+      start: Seq[Option[String]]) extends ReportConsumer(shape) {
+    val steps = scala.collection.mutable.ArrayBuffer.empty[FoldStep]
+    def report: DataFrame = steps.last.report
+    protected def name = "carried report"
+    protected def resumeFrom(stores: Seq[graft.state.StateTable],
+        oldest: Seq[String]): Seq[String] =
+      steps.lastOption.fold(start.zip(oldest).map { case (s, o) => s.getOrElse(o) })(_.to)
+    protected def base(stores: Seq[graft.state.StateTable],
+        wm: Seq[String]): DataFrame =
+      steps.lastOption.fold(shape.report(shape.view(frames(stores, wm))))(_.report)
+    protected def keepKeys(keys: DataFrame): DataFrame =
+      graft.core.Checkpoints.pin(keys)
+    protected def commit(step: FoldStep): FoldStep = {
+      val kept = step.copy(report = graft.core.Checkpoints.pin(step.report))
+      steps += kept
+      kept
+    }
+  }
+
+  /** A consumer that survives its process: each step's report is one
+    * version of the report store, stamped with the watermarks it
+    * reflects (one [[MaintainedShape.asOf]] column per source, constant
+    * across the version's rows), so a fresh handle recovers everything
+    * from disk. The durable write is each step's lineage truncation:
+    * neither the keys nor the report are pinned (the diff subtree in
+    * both ± arms is deterministic and its exchanges are reused within
+    * the write job). Versioned immutability makes the read-while-write
+    * safe: each step's base is read from the CURRENT version while the
+    * next version writes to a fresh dir.
+    *
+    * FRESH-CONSUMER BOOTSTRAP: an empty report resumes from the OLDEST
+    * retained versions. Once retention has reclaimed the stores' empty
+    * CreateTable versions, folding only the pairs after them would miss
+    * those versions' contents while the watermarks read caught up. So
+    * when every oldest version carries rows, the base is first written
+    * as the recomputed report there, stamped with those versions. When
+    * any is empty, the view — and so the base — is empty, and the walk
+    * alone is correct; the bounded isEmpty reads gate the write.
+    */
+  private final class DurableReport(shape: MaintainedShape,
+      reportSt: graft.state.StateTable) extends ReportConsumer(shape) {
+    protected def name = s"report ${reportSt.root}"
+    private def write(report: DataFrame, wm: Seq[String]): Unit =
+      reportSt.overwrite(shape.asOf.zip(wm).foldLeft(report) {
+        case (df, (c, v)) => df.withColumn(c, lit(v)) })
+    protected def resumeFrom(stores: Seq[graft.state.StateTable],
+        oldest: Seq[String]): Seq[String] =
+      reportWatermarks(reportSt, shape.asOf).getOrElse {
+        if (stores.zip(oldest).forall { case (st, v) => !st.readVersion(v).isEmpty })
+          write(shape.report(shape.view(frames(stores, oldest))), oldest)
+        oldest
+      }
+    protected def base(stores: Seq[graft.state.StateTable],
+        wm: Seq[String]): DataFrame =
+      reportSt.current().get.drop(shape.asOf: _*)
+    protected def keepKeys(keys: DataFrame): DataFrame = keys
+    protected def commit(step: FoldStep): FoldStep = {
+      write(step.report, step.to)
+      step
+    }
+  }
+
+  /** Resume a durable report from its store alone: fold every version
+    * its source stores committed since its watermarks, one report
+    * version per step. Returns the steps applied: none on a restart
+    * with nothing new (idempotence), one per landed version in steady
+    * state, more when catching up after missed folds.
+    */
+  private[graft] def resumeMaintenance(shape: MaintainedShape,
+      stores: Seq[graft.state.StateTable],
+      reportSt: graft.state.StateTable): Seq[FoldStep] =
+    new DurableReport(shape, reportSt).advance(stores)
 
   /** q164: incremental report maintenance off the store's CDC feed —
     * judged equal to a full recompute. At 100 TB the reference's
     * reports cannot be recomputed per run; the scale answer is a
     * materialized report plus a delta derived from what CHANGED. The
     * store's versioned CDC ([[graft.state.StateTable.diff]], judged by
-    * q158) is exactly that change feed, but until now nothing consumed
-    * it downstream. q164 closes the loop on the reference's own report
-    * surface:
+    * q158) is exactly that change feed. q164 closes the loop on the
+    * reference's own report surface:
     *
     *  1. build the flow store ([[q161BuildStore]]: first load v2,
     *     LWW re-run v3);
-    *  2. materialize the per-product report off v2;
-    *  3. read the v2→v3 CDC (key-level: inserts + LWW updates here;
-    *     the algebra below also absorbs deletes — a deleted key's rows
-    *     appear only in the before arm);
-    *  4. form the delta as `report(v3 ⋉ changedKeys) −
-    *     report(v2 ⋉ changedKeys)` — on a key-partitioned store both
-    *     semi-joined scans prune to the changed keys' partitions, so
-    *     the maintenance cost tracks the CHANGE volume, not the store
-    *     size (this corpus re-runs half its keys; production re-runs
-    *     touch a sliver);
-    *  5. merge: `report(v3) ≡ report(v2) ⊎ delta` under group-wise sum
-    *     (SUM/COUNT are self-maintainable; a MIN/MAX report would need
-    *     the per-group recompute fallback on retraction).
+    *  2. a carried consumer starts at v2 with the per-product report
+    *     recomputed there as its base;
+    *  3. it folds the one pending pair v2→v3: the CDC keys (inserts +
+    *     LWW updates here; the fold also absorbs deletes) prune both
+    *     arms — on a key-partitioned store both semi-joined scans prune
+    *     to the changed keys' partitions, so the maintenance cost
+    *     tracks the CHANGE volume, not the store size;
+    *  4. merge: `report(v3) ≡ report(v2) ⊎ delta` under group-wise sum.
     *
     * The judged rows carry the MAINTAINED report (so its values meet
     * the weighted-arms oracle replay) plus a per-product `equiv_diff`
@@ -734,165 +993,18 @@ object IngestQueries {
     * report (v2 report ≠ v3 report) — IngestCertSpec pins.
     *
     * Scale: one CDC join (q158's audited shape), two semi-joined
-    * pruned aggregations, three group-sums on the report key, the
+    * pruned arms and one group-sum on the report key, the
     * certificate's recompute leg (the honest price, q141/q162
-    * convention), one output sort. The CDC frame feeds both delta arms
-    * — pinned once (Checkpoints.pin, the multi-consumer discipline).
+    * convention), one output sort. The CDC keys feed both arms —
+    * pinned once by the carried consumer.
     */
-  /** The generic ± fold behind EVERY SUM-shaped maintained aggregate
-    * (q164/q165/q167/q168's product report, q169's level-1 category
-    * report): `contrib` maps a version slice to PER-ROW measure
-    * contributions (`groupCols ++ measureCols`, with `n_rows` among
-    * the measures — the zero-shell filter reads it), and the fold
-    * unions the ±1-SIGNED row contributions of both arms onto `base`
-    * and aggregates ONCE. Equivalent to the former
-    * `report(after ⋉ keys) ⊖ report(before ⋉ keys)` form by
-    * distributivity of SUM over exact longs (every measure is an
-    * integer contribution — counts are `lit(1L)`, cents/quantities are
-    * floored/cast longs BEFORE summing), but pays ONE aggregation
-    * exchange instead of three (guide §2.3/§2.4): the per-arm
-    * aggregates were redundant work — the final group-by's partial
-    * (map-side) aggregation collapses each arm to group grain before
-    * the shuffle anyway, so the fused form shuffles the same key-grain
-    * bytes through two fewer exchanges (locally: two fewer sequential
-    * AQE stage jobs per fold — the family's measured cost driver).
-    * ONE definition so a fix to the fold algebra (or its change-feed
-    * precondition, documented at [[applyReportDelta]]) can never drift
-    * between the maintained families.
-    */
-  private[graft] def applySumDelta(base: DataFrame, before: DataFrame,
-      after: DataFrame, changedKeys: DataFrame, keyCols: Seq[String],
-      contrib: DataFrame => DataFrame, groupCols: Seq[String],
-      measureCols: Seq[String]): DataFrame = {
-    def arm(version: DataFrame, sign: Long) =
-      contrib(version.join(changedKeys, keyCols, "left_semi"))
-        .select(groupCols.map(col) ++
-          measureCols.map(c => (col(c) * lit(sign)).as(c)): _*)
-    val aggs = measureCols.map(c => sum(col(c)).as(c))
-    base
-      .unionByName(arm(after, 1L)).unionByName(arm(before, -1L))
-      .groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .filter(col("n_rows") > 0)
-  }
-
-  /** A maintained SUM-shaped report family as ONE object: the
-    * aggregate definition, its grouping/measure columns (the
-    * [[applySumDelta]] arguments), and — derived, never hand-written —
-    * the durable report-store schema (group columns as strings unless
-    * `groupTypes` declares otherwise, measures as longs, plus the
-    * `as_of` resume watermark). Bundling them means a consumer
-    * ([[reportStoreHandle]] / [[resumeReportMaintenance]]) can never
-    * pair one family's fold with another's declared schema. Instances:
-    * [[productShape]] (q164–q168's per-product report),
-    * [[categoryShape]] (q169/q170's level-1 per-(group, product)
-    * report; q171's second consumer), [[joinedShape]] (q175's joined
-    * per-category report), and [[monthlyShape]] (q176's time-bucketed
-    * report — its DERIVED integer group keys are why `groupTypes`
-    * exists).
-    */
-  private[graft] final case class MaintainedShape(
-      /** Per-row measure contributions: maps a contents slice to
-        * `groupCols ++ measureCols` rows whose measures are exact LONG
-        * per-row contributions (counts as `lit(1L)`) — [[report]] is
-        * DERIVED from it (group-by + SUM), so the aggregate a consumer
-        * materializes and the fold's ± arms can never drift.
-        */
-      contrib: DataFrame => DataFrame,
-      groupCols: Seq[String], measureCols: Seq[String],
-      groupTypes: Seq[org.apache.spark.sql.types.DataType] = Nil) {
-    require(groupTypes.isEmpty || groupTypes.size == groupCols.size,
-      "groupTypes must be empty (all strings) or one per group column")
-    /** The full aggregate over a contents slice — the recompute legs'
-      * and base materializations' shape: one group-by exchange over the
-      * per-row contributions (SUM of `lit(1L)` replaces COUNT — same
-      * long values, and the shared definition is what makes the fused
-      * fold provably the same aggregate).
-      */
-    def report(df: DataFrame): DataFrame = {
-      val aggs = measureCols.map(c => sum(col(c)).as(c))
-      contrib(df).groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-    def fold(base: DataFrame, before: DataFrame, after: DataFrame,
-        changedKeys: DataFrame, keyCols: Seq[String]): DataFrame =
-      applySumDelta(base, before, after, changedKeys, keyCols,
-        contrib, groupCols, measureCols)
-    def schema: org.apache.spark.sql.types.StructType = {
-      val types =
-        if (groupTypes.isEmpty)
-          groupCols.map(_ => org.apache.spark.sql.types.StringType)
-        else groupTypes
-      org.apache.spark.sql.types.StructType(
-        groupCols.zip(types).map { case (c, t) =>
-          org.apache.spark.sql.types.StructField(c, t) } ++
-        measureCols.map(c => org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.LongType)) :+
-        org.apache.spark.sql.types.StructField("as_of",
-          org.apache.spark.sql.types.StringType))
-    }
-  }
-
-  private[graft] val productShape: MaintainedShape =
-    MaintainedShape(productContrib, Seq("product_id"),
-      Seq("n_rows", "amount_cents"))
-
-  /** The product-report fold shared by q164 (one batch step off a
-    * report materialized from `before`), q165 (a CARRIED report folded
-    * per drained micro-batch), and q167/q168 (durable folds): apply
-    * the pruned ±delta derived from `changedKeys` to `base`, the
-    * materialized report for `before`'s contents. Correct for ALL
-    * three change kinds — inserts and updates land via the
-    * `after ⊖ before` arms over the changed keys, and a DELETED key's
-    * rows appear only in the before arm, retracting its contribution;
-    * a group whose rows ALL retracted leaves a zero shell, filtered in
-    * the shared fold (SUM/COUNT are self-maintainable; MIN/MAX needs
-    * the per-group recompute fallback — q169's [[maintainTopSellers]]).
-    *
-    * PRECONDITION on the change feed (applies to every [[applySumDelta]]
-    * caller): `changedKeys` must cover every key whose row MULTISET
-    * differs between the versions.
-    * [[graft.state.StateTable.diff]] is key-level (latest row per
-    * key), so a transition that added or removed value-identical
-    * COPIES of an existing key would slip past it — but transitions
-    * produced by [[graft.state.StateTable.upsert]] can never do that:
-    * the LWW arm rewrites an existing key's latest row IN PLACE and
-    * the insert arm appends only UNSEEN keys, so an existing key's
-    * multiplicity is invariant across an upsert, and any multiset
-    * change at an existing key shows up in its latest row's values
-    * (IngestCertSpec pins this invariant on the judged flow's own
-    * version pair). Feeding this fold from a store mutated by raw
-    * `overwrite` (multiset edits invisible at key level) needs a
-    * multiset-aware change feed instead — e.g. also diffing per-key
-    * row counts between the versions.
-    */
-  private[graft] def applyReportDelta(base: DataFrame, before: DataFrame,
-      after: DataFrame, changedKeys: DataFrame,
-      keyCols: Seq[String]): DataFrame =
-    productShape.fold(base, before, after, changedKeys, keyCols)
-
-  /** The q164 maintenance step as a named operator: one
-    * [[applyReportDelta]] fold onto the report materialized off
-    * `before`. The q164 flow exercises inserts + LWW updates; the
-    * delete arm is spec-pinned (IngestCertSpec) against a hand-built
-    * version pair, so the doc claim is tested, not asserted. The
-    * change-feed precondition is documented at [[applyReportDelta]].
-    */
-  private[graft] def maintainProductReport(before: DataFrame, after: DataFrame,
-      changedKeys: DataFrame, keyCols: Seq[String]): DataFrame =
-    applyReportDelta(productReport(before), before, after, changedKeys, keyCols)
-
   val q164IncrementalReportCert: QuerySpec = QuerySpec(
     (s, dir) => {
       val st = q161BuildStore(s, dir)
-      val h = st.history()
-      val keyCols = graft.core.Schemas.ordersKey
-      val v2 = st.readVersion(h(1))
-      val v3 = st.readVersion(h(2))
-      val changedKeys = graft.core.Checkpoints.pin(
-        st.diff(h(1), h(2)).select(keyCols.map(col): _*))
-      val pinned = graft.core.Checkpoints.pin(
-        maintainProductReport(v2, v3, changedKeys, keyCols))
-      val equiv = multisetEquivDiff(pinned, productReport(v3), "product_id")
+      val pinned = new CarriedReport(productShape, Seq(Some(st.history()(1))))
+        .advance(Seq(st)).last.report
+      val equiv = multisetEquivDiff(pinned, productShape.report(st.current().get),
+        "product_id")
       // inner join: equiv groups over the UNION of both report legs, a
       // superset of the maintained report's products by construction
       pinned.join(equiv, Seq("product_id")).orderBy(col("product_id"))
@@ -904,52 +1016,27 @@ object IngestQueries {
        |  cast(0 AS bigint) AS equiv_diff
        |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
 
-  /** The maintained-stream handles: the drained store, the final
-    * maintained report (pinned), and the per-drain CDC key frames
-    * (pinned) — kept so IngestCertSpec can pin that ≥2 maintenance
-    * steps really applied nonempty, DISTINCT key sets (the replayed
-    * oracle sees only the final rows).
+  /** The maintained-stream handles: the drained store and the carried
+    * consumer's fold steps (keys and reports pinned) — kept so
+    * IngestCertSpec can pin that ≥2 maintenance steps really applied
+    * nonempty, DISTINCT key sets (the replayed oracle sees only the
+    * final rows).
     */
   private[graft] final case class MaintainedStream(
-      st: graft.state.StateTable, report: DataFrame,
-      stepKeys: Seq[DataFrame])
+      st: graft.state.StateTable, steps: Seq[FoldStep]) {
+    def report: DataFrame = steps.last.report
+  }
 
-  /** q165's construction: the q162 streamed flow with q164's report
-    * maintenance folded INSIDE the drain loop — after each drained
-    * micro-batch, derive the CDC step off the store's version pair and
-    * [[applyReportDelta]] the pruned ±delta onto the CARRIED report
-    * (base case: the report of the pre-drain version — empty at the
-    * CreateTable version). Each step's report and CDC key frame are
-    * pinned (Checkpoints.pin): the maintained artifact must not
-    * accrete lineage across drains — at production drain counts an
-    * unpinned fold's plan depth grows per micro-batch (the iterative-
-    * operator rule, `core/Checkpoints.scala`).
+  /** q165's construction: the q162 streamed flow with a carried
+    * product-report consumer advanced after each drained micro-batch,
+    * from the CreateTable version on.
     */
   private[graft] def q165BuildMaintainedStream(
       s: SparkSession, dir: String): MaintainedStream = {
-    val keyCols = graft.core.Schemas.ordersKey
-    var report: DataFrame = null
-    var prev: String = null // last version the fold consumed
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val flow = buildStreamedFlowStore(s, dir, "graft_q165", "q165", st => {
-      val h = st.history()
-      // fold from the last consumed version (CreateTable before the
-      // first drain) to the drain's head — robust even if a drain ever
-      // chunked into several versions (the builder's history require
-      // would still fail the run loudly afterwards)
-      val from = if (prev == null) h.head else prev
-      val to = h.last
-      val before = st.readVersion(from)
-      val after = st.readVersion(to)
-      val changedKeys = graft.core.Checkpoints.pin(
-        st.diff(from, to).select(keyCols.map(col): _*))
-      steps += changedKeys
-      val base = if (report == null) productReport(before) else report
-      report = graft.core.Checkpoints.pin(
-        applyReportDelta(base, before, after, changedKeys, keyCols))
-      prev = to
-    })
-    MaintainedStream(flow.st, report, steps.toSeq)
+    val consumer = new CarriedReport(productShape, Seq(None))
+    val flow = buildStreamedFlowStore(s, dir, "graft_q165", "q165",
+      st => consumer.advance(Seq(st)): Unit)
+    MaintainedStream(flow.st, consumer.steps.toSeq)
   }
 
   /** q165: the maintained report under STREAMING ingest — the 100 TB
@@ -972,7 +1059,7 @@ object IngestQueries {
     * What the replayed oracle cannot see — that BOTH steps applied
     * nonempty, distinct CDC key sets (a degenerate fold that only ran
     * once over the union would replay green) — IngestCertSpec pins off
-    * [[MaintainedStream.stepKeys]].
+    * [[MaintainedStream.steps]].
     *
     * Scale: maintenance cost per drain tracks the micro-batch's CHANGE
     * volume (semi-join-pruned arms, a group-sum over the report key),
@@ -985,12 +1072,12 @@ object IngestQueries {
   val q165StreamingReportMaintCert: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q165BuildMaintainedStream(s, dir)
-      val recompute = productReport(m.st.current().get)
+      val recompute = productShape.report(m.st.current().get)
       val equiv = multisetEquivDiff(m.report, recompute, "product_id")
       // inner join: equiv groups over the UNION of both report legs, a
       // superset of the maintained report's products by construction
       m.report
-        .withColumn("n_steps", lit(m.stepKeys.size.toLong))
+        .withColumn("n_steps", lit(m.steps.size.toLong))
         .join(equiv, Seq("product_id"))
         .orderBy(col("product_id"))
     },
@@ -1049,105 +1136,55 @@ object IngestQueries {
     */
   private[graft] def reportStoreHandle(
       s: SparkSession, root: String,
-      shape: MaintainedShape = productShape,
-      label: String = "q167"): graft.state.StateTable = {
+      shape: MaintainedShape = productShape): graft.state.StateTable = {
     val st = new graft.state.StateTable(s, root, shape.groupCols)
     val changes = graft.schemasync.SchemaSync.sync(s, st, shape.schema)
     require(changes.isEmpty ||
       changes == Seq(graft.schemasync.SchemaSync.CreateTable(shape.schema)),
-      s"$label precondition: report-store sync applied $changes")
+      s"report store $root: sync applied $changes")
     st
   }
 
-  /** The consumer's raw resume point off its durable rows: `max(as_of)`
-    * on the report's current contents — a single-row aggregate read,
-    * the sanctioned driver-side shape. `as_of` is the orders-store
-    * version the report reflects, constant across a report version's
-    * rows (every fold stamps the version it consumed), so no sidecar
-    * metadata file is needed; version names sort in commit order, so
-    * max IS the latest. None means an EMPTY report — no
-    * consumer progress recorded (the bootstrap-vs-caught-up distinction
-    * [[resumeReportMaintenance]] needs on a retention-vacuumed store).
+  /** A durable consumer's resume point off its own rows: the max of
+    * each watermark column on the report's current contents — a
+    * single-row aggregate read, the sanctioned driver-side shape. Every
+    * fold stamps the versions it consumed, constant across a report
+    * version's rows, so no sidecar metadata file is needed; version
+    * names sort in commit order, so max IS the latest. None means an
+    * EMPTY report — no consumer progress recorded (the
+    * bootstrap-vs-caught-up distinction [[DurableReport]] needs on a
+    * retention-vacuumed store).
     */
-  private[graft] def reportWatermarkOpt(
-      reportSt: graft.state.StateTable): Option[String] =
-    Option(reportSt.current().get.agg(max(col("as_of"))).head().getString(0))
+  private[graft] def reportWatermarks(reportSt: graft.state.StateTable,
+      asOf: Seq[String]): Option[Seq[String]] = {
+    val r = reportSt.current().get
+      .agg(max(col(asOf.head)), asOf.tail.map(c => max(col(c))): _*).head()
+    if (r.isNullAt(0)) None else Some(asOf.indices.map(r.getString))
+  }
 
-  /** [[reportWatermarkOpt]] with the empty-report fallback to `oldest`
-    * (the store's first retained version): an un-started consumer
-    * bounds retention at the oldest version, so a resume can still
-    * fold everything and a bounded vacuum reclaims nothing. ONE
-    * definition for the resume walk, the q168/q171 retention hooks,
-    * and the specs, so the convention cannot drift.
+  /** A single-source report's `as_of` watermark, with the empty-report
+    * fallback to `oldest` (the store's first retained version): an
+    * un-started consumer bounds retention at the oldest version, so a
+    * resume can still fold everything and a bounded vacuum reclaims
+    * nothing. ONE definition for the q168/q171 retention hooks and the
+    * specs, so the convention cannot drift.
     */
   private[graft] def reportWatermark(
       reportSt: graft.state.StateTable, oldest: => String): String =
-    reportWatermarkOpt(reportSt).getOrElse(oldest)
+    reportWatermarks(reportSt, productShape.asOf).fold(oldest)(_.head)
 
-  /** Resume report maintenance from DURABLE state only: recover the
-    * `as_of` watermark off the report table's current contents, then
-    * fold every orders-store version pair AFTER it — `shape.fold` per
-    * step, one report version written per step (`overwrite` stamps the
-    * new watermark; the durable write IS the lineage truncation, so no
-    * in-memory pin is needed). Returns the number of fold steps
-    * applied: 0 on a restart with nothing new (idempotence — the guard
-    * calls it a third time to prove exactly that), 1 per drained batch
-    * in steady state, >1 when catching up after missed folds.
-    * Versioned immutability makes the concurrent read-while-write
-    * safe: each step's base is read from the CURRENT version dir while
-    * the next version writes to a fresh dir.
-    *
-    * FRESH-CONSUMER BOOTSTRAP (round-17 advice, medium): an empty
-    * report's watermark falls back to the OLDEST retained version and
-    * the walk folds only pairs AFTER it — correct when that version is
-    * the flow's empty CreateTable, silently wrong once retention
-    * (q168's `vacuumBefore`) has reclaimed it: the consumer would fold
-    * deltas onto an empty base, permanently missing the oldest
-    * version's contents, while its watermark reads fully caught up for
-    * retention decisions. So an empty report on a store whose oldest
-    * retained version carries rows first materializes its base as
-    * `shape.report(oldest contents)` stamped `as_of = oldest`, then
-    * walks the pairs. The `isEmpty` gate (a bounded limit-1 read, taken
-    * only on the empty-report path) keeps the judged q167/q168 flows —
-    * whose oldest version IS the empty CreateTable — byte-identical in
-    * behavior and report-version counts.
+  /** [[resumeMaintenance]] over the orders store alone, returning the
+    * number of steps applied. `keyCols` is the orders store's key, which
+    * a single-source shape's fold prunes by.
     */
   private[graft] def resumeReportMaintenance(
       ordersSt: graft.state.StateTable,
       reportSt: graft.state.StateTable,
       keyCols: Seq[String],
       shape: MaintainedShape = productShape): Int = {
-    val h = ordersSt.history()
-    require(h.nonEmpty, "q167: orders store has no versions to fold")
-    val wmOpt = reportWatermarkOpt(reportSt)
-    if (wmOpt.isEmpty && !ordersSt.readVersion(h.head).isEmpty)
-      reportSt.overwrite(shape.report(ordersSt.readVersion(h.head))
-        .withColumn("as_of", lit(h.head)))
-    val asOf = wmOpt.getOrElse(h.head)
-    val idx = h.indexOf(asOf)
-    require(idx >= 0,
-      s"q167: report watermark $asOf not in the orders store history — " +
-        "the store was vacuumed past the report's resume point")
-    val pairs = h.drop(idx).sliding(2).filter(_.size == 2).toSeq
-    pairs.foreach { case Seq(from, to) =>
-      val before = ordersSt.readVersion(from)
-      val after = ordersSt.readVersion(to)
-      // the CDC key frame rides UNPINNED into the fold write: the
-      // durable report write is this step's lineage truncation, so an
-      // eager pin here only added one extra sequential job round-trip
-      // per fold (the family's cost is job COUNT, not volume — §1.2/
-      // §2.4). The diff subtree appears in both ± arms, but it is
-      // deterministic (max_by over the unique-per-row _seq) and its
-      // exchanges are reused within the single write job where the
-      // planner proves the subtrees identical — measured on q167/q168:
-      // one job fewer per fold, same fold output.
-      val changedKeys = ordersSt.diff(from, to).select(keyCols.map(col): _*)
-      val base = reportSt.current().get.drop("as_of")
-      reportSt.overwrite(
-        shape.fold(base, before, after, changedKeys, keyCols)
-          .withColumn("as_of", lit(to)))
-    }
-    pairs.size
+    require(keyCols == shape.pruneCols,
+      s"report ${reportSt.root}: the fold prunes by ${shape.pruneCols}, not $keyCols")
+    resumeMaintenance(shape, Seq(ordersSt), reportSt).size
   }
 
   /** q167's construction: the q162 streamed flow with the maintenance
@@ -1213,7 +1250,7 @@ object IngestQueries {
         graft.core.Schemas.ordersKey)
       val reportSt = reportStoreHandle(s, flow.reportRoot)
       val maintained = reportSt.current().get.drop("as_of")
-      val recompute = productReport(ordersSt.current().get)
+      val recompute = productShape.report(ordersSt.current().get)
       val equiv = multisetEquivDiff(maintained, recompute, "product_id")
       maintained
         .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
@@ -1320,7 +1357,7 @@ object IngestQueries {
         graft.core.Schemas.ordersKey)
       val reportSt = reportStoreHandle(s, flow.reportRoot)
       val maintained = reportSt.current().get.drop("as_of")
-      val recompute = productReport(ordersSt.current().get)
+      val recompute = productShape.report(ordersSt.current().get)
       val equiv = multisetEquivDiff(maintained, recompute, "product_id")
       maintained
         .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
@@ -1346,7 +1383,7 @@ object IngestQueries {
 
   /** Level 1 of the top-seller maintenance: per (channel_group,
     * product_id) revenue and row count. SUM-shaped, so the ± delta
-    * algebra maintains it exactly like [[productReport]] — one
+    * algebra maintains it exactly like [[productShape]] — one
     * definition for the base snapshot, both delta arms, and the
     * recompute certificate leg.
     */
@@ -1355,14 +1392,10 @@ object IngestQueries {
       lit(1L).as("n_rows"),
       floor(col("amount") * 100).cast("long").as("revenue_cents"))
 
-  private[graft] def categoryReport(contents: DataFrame): DataFrame =
-    categoryShape.report(contents)
-
-  /** [[applyReportDelta]]'s ± fold at the two-level (channel_group,
-    * product_id) key. Group MOVES are absorbed for free: an LWW update
-    * that rewrites channel_group retracts the key's rows from the old
-    * group via the before arm and adds them to the new one via the
-    * after arm. Same change-feed precondition as [[applyReportDelta]].
+  /** The ± fold at the two-level (channel_group, product_id) key. Group
+    * MOVES are absorbed for free: an LWW update that rewrites
+    * channel_group retracts the key's rows from the old group via the
+    * before arm and adds them to the new one via the after arm.
     */
   private[graft] val categoryShape: MaintainedShape =
     MaintainedShape(categoryContrib, Seq("channel_group", "product_id"),
@@ -1392,8 +1425,8 @@ object IngestQueries {
         after.join(changedKeys, keyCols, "left_semi").select(col("channel_group")))
       .distinct()
 
-  /** The MIN/MAX maintenance step ([[applyReportDelta]]'s documented
-    * fallback, now implemented): an argmax is NOT self-maintainable
+  /** The MIN/MAX maintenance step (the fold's documented retraction
+    * fallback): an argmax is NOT self-maintainable
     * under retraction — a revenue decrease or a deleted row can
     * dethrone a group's leader, and no ± algebra on the TOP row alone
     * can recover the runner-up. The fallback recomputes level 2 ONLY
@@ -1409,74 +1442,53 @@ object IngestQueries {
       .unionByName(topSellers(
         lvl1Maintained.join(touched, Seq("channel_group"), "left_semi")))
 
-  /** The maintained-top-seller handles: the drained store, the carried
-    * level-1 and level-2 artifacts, and the per-step top/touched
-    * frames (pinned) for the guards.
+  /** One two-level step of q169/q170: the carried level-1 report after
+    * a fold step, the groups that step touched, and the top rows
+    * (touched and top pinned).
     */
-  private[graft] final case class MaintainedTopStream(
-      st: graft.state.StateTable, lvl1: DataFrame, top: DataFrame,
-      stepTops: Seq[DataFrame], stepTouched: Seq[DataFrame])
+  private[graft] final case class TopStep(lvl1: DataFrame, touched: DataFrame,
+      top: DataFrame)
 
-  /** The carried two-level fold state shared by q169 (streamed drains
-    * only) and q170 (drains + a mid-loop purge transition): one
-    * [[step]] per store version landed — level 1 by ± delta
-    * ([[categoryShape]]), level 2 by touched-group recompute
-    * ([[maintainTopSellers]]). Both carried artifacts are pinned per
-    * step (the q165 lineage discipline: plan depth O(1) in step
-    * count). ONE fold implementation so the purge certificate can
-    * never drift from the drain certificate's algebra.
+  /** Level 2 on top of one carried [[categoryShape]] fold step of store
+    * `st`: recompute the top row of the groups the step touched
+    * ([[maintainTopSellers]]) onto the previous step's top rows (the
+    * recomputed top of the step's base before the first step).
     */
-  private[graft] final class TopFoldState(keyCols: Seq[String]) {
-    var lvl1: DataFrame = null
-    var top: DataFrame = null
-    private var prev: String = null
-    val tops = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val touchedSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def step(st: graft.state.StateTable): Unit = {
-      val h = st.history()
-      val from = if (prev == null) h.head else prev
-      val to = h.last
-      val before = st.readVersion(from)
-      val after = st.readVersion(to)
-      val changedKeys = graft.core.Checkpoints.pin(
-        st.diff(from, to).select(keyCols.map(col): _*))
-      val base = if (lvl1 == null) categoryReport(before) else lvl1
-      val baseTop = if (top == null) topSellers(base) else top
-      // the level-1 ± fold and the touched-group derivation read the
-      // same immutable inputs (before/after versions + the pinned CDC
-      // keys) and pin DISJOINT artifacts — overlap the two pin jobs
-      // (guide §2.6); level 2 below needs both, so it stays after
-      val (l1, touched) = graft.core.Par.both(
-        graft.core.Checkpoints.pin(
-          categoryShape.fold(base, before, after, changedKeys, keyCols)),
-        graft.core.Checkpoints.pin(
-          touchedGroups(before, after, changedKeys, keyCols)))
-      lvl1 = l1
-      touchedSteps += touched
-      top = graft.core.Checkpoints.pin(
-        maintainTopSellers(baseTop, lvl1, touched))
-      tops += top
-      prev = to
-    }
+  private[graft] def topStep(st: graft.state.StateTable, step: FoldStep,
+      last: Option[TopStep]): TopStep = {
+    val touched = graft.core.Checkpoints.pin(touchedGroups(
+      st.readVersion(step.from.head), st.readVersion(step.to.head),
+      step.keys, categoryShape.pruneCols))
+    TopStep(step.report, touched, graft.core.Checkpoints.pin(maintainTopSellers(
+      last.fold(topSellers(step.base))(_.top), step.report, touched)))
   }
 
-  /** q169's construction: the q165 drain loop with one [[TopFoldState]]
-    * step per drained micro-batch.
+  /** The maintained-top-seller handles: the drained store and the
+    * per-step two-level artifacts for the guards.
+    */
+  private[graft] final case class MaintainedTopStream(
+      st: graft.state.StateTable, steps: Seq[TopStep]) {
+    def lvl1: DataFrame = steps.last.lvl1
+    def top: DataFrame = steps.last.top
+  }
+
+  /** q169's construction: the q165 drain loop with a carried
+    * [[categoryShape]] consumer, and one [[topStep]] per fold step.
     */
   private[graft] def q169BuildMaintainedTop(
       s: SparkSession, dir: String): MaintainedTopStream = {
-    val fold = new TopFoldState(graft.core.Schemas.ordersKey)
-    val flow = buildStreamedFlowStore(s, dir, "graft_q169", "q169",
-      st => fold.step(st))
-    MaintainedTopStream(flow.st, fold.lvl1, fold.top,
-      fold.tops.toSeq, fold.touchedSteps.toSeq)
+    val lvl1 = new CarriedReport(categoryShape, Seq(None))
+    val steps = scala.collection.mutable.ArrayBuffer.empty[TopStep]
+    val flow = buildStreamedFlowStore(s, dir, "graft_q169", "q169", st =>
+      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption)))
+    MaintainedTopStream(flow.st, steps.toSeq)
   }
 
   /** q169: the maintained TOP-SELLER report (A5's argmax shape,
     * `README.md:132–148`) under streaming ingest — the capability step
     * beyond q165/q167, whose maintained reports are SUM/COUNT-shaped
     * and so self-maintainable. MIN/MAX/argmax is the documented hole
-    * ([[applyReportDelta]]'s limitation note): retraction can dethrone
+    * ([[MaintainedShape.fold]]'s limitation note): retraction can dethrone
     * a leader, and the production answer is the two-level design
     * judged here — a ±-maintained per-(group, product) revenue
     * aggregate (level 1) plus an argmax recomputed per step ONLY for
@@ -1513,7 +1525,7 @@ object IngestQueries {
   val q169MaintainedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q169BuildMaintainedTop(s, dir)
-      val lvl1Re = categoryReport(m.st.current().get)
+      val lvl1Re = categoryShape.report(m.st.current().get)
       val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
         .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
       val topEquiv = multisetEquivDiff(m.top, topSellers(lvl1Re), "channel_group")
@@ -1522,14 +1534,14 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_products"))
       m.top
         .join(nProducts, Seq("channel_group"))
-        .withColumn("n_steps", lit(m.stepTops.size.toLong))
+        .withColumn("n_steps", lit(m.steps.size.toLong))
         .join(lvl1Equiv, Seq("channel_group"))
         .join(topEquiv, Seq("channel_group"))
         .orderBy(col("channel_group"))
     },
     s"""$flowStoreReplaySql,
        |-- the zero-net filter mirrors the Spark fold's n_rows > 0 shell
-       |-- filter (applySumDelta): a product whose weighted rows net to
+       |-- filter (MaintainedShape.fold): a product whose weighted rows net to
        |-- zero must not appear on either side (unreachable at this
        |-- upsert-only corpus, load-bearing under deletions — q170)
        |lvl1 AS (
@@ -1556,18 +1568,15 @@ object IngestQueries {
   // retraction fallback reached by a real mid-loop deletion
   // ------------------------------------------------------------------
 
-  /** q170's handles: the drained-then-purged store, the carried
-    * two-level artifacts, the per-step touched frames, and the purge
-    * evidence (the pre-purge top and the victim identity) for the
-    * guards.
+  /** q170's handles: the drained-then-purged store's two-level steps
+    * (the second is the pre-purge state) and the victim identity, for
+    * the guards.
     */
   private[graft] final case class PurgedTopStream(
-      st: graft.state.StateTable, lvl1: DataFrame, top: DataFrame,
-      stepTouched: Seq[DataFrame], prePurgeTop: DataFrame,
-      victimGroup: String, victimProduct: String)
+      m: MaintainedTopStream, victimGroup: String, victimProduct: String)
 
   /** q170's construction: the q169 streamed flow with a REAL DELETION
-    * landed mid-loop and folded through the same [[TopFoldState]] —
+    * landed mid-loop and folded through the same carried consumer —
     * after the second drain's fold, the maintained top's leader of the
     * FIRST channel group (one bounded single-row read off the pinned
     * 3-row artifact) is purged from the store (q158's deletion-slice
@@ -1581,48 +1590,43 @@ object IngestQueries {
     */
   private[graft] def q170BuildPurgedTop(
       s: SparkSession, dir: String): PurgedTopStream = {
-    val keyCols = graft.core.Schemas.ordersKey
-    val fold = new TopFoldState(keyCols)
-    var drains = 0
-    var prePurgeTop: DataFrame = null
-    var victimGroup: String = null
-    var victimProduct: String = null
+    val lvl1 = new CarriedReport(categoryShape, Seq(None))
+    val steps = scala.collection.mutable.ArrayBuffer.empty[TopStep]
+    def fold(st: graft.state.StateTable): Unit =
+      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption))
+    var victim = ("", "")
     val flow = buildStreamedFlowStore(s, dir, "graft_q170", "q170", st => {
-      fold.step(st)
-      drains += 1
-      if (drains == 2) {
+      fold(st)
+      if (steps.size == 2) {
         // the purge victim: the pre-purge leader of the first channel
         // group, read off the maintained top (pinned, 3 rows — one
         // bounded single-row read, the sanctioned shape)
-        val leader = fold.top.orderBy(col("channel_group")).limit(1).head()
-        victimGroup = leader.getAs[String]("channel_group")
-        victimProduct = leader.getAs[String]("top_product_id")
-        prePurgeTop = fold.top
+        val leader = steps.last.top.orderBy(col("channel_group")).limit(1).head()
+        victim = (leader.getAs[String]("channel_group"),
+          leader.getAs[String]("top_product_id"))
         // non-degeneracy: a runner-up must exist, else the purge would
         // EMPTY the group instead of dethroning its leader and the
         // judged 3-row shape would silently change
-        require(fold.lvl1.filter(col("channel_group") === victimGroup)
+        require(steps.last.lvl1.filter(col("channel_group") === victim._1)
             .limit(2).count() == 2L,
-          s"q170 precondition: group $victimGroup has no runner-up — " +
+          s"q170 precondition: group ${victim._1} has no runner-up — " +
             "the dethronement certificate would be vacuous")
         st.overwrite(st.read().get.filter(
-          !(col("channel_group") === victimGroup &&
-            col("product_id") === victimProduct)))
-        fold.step(st)
+          !(col("channel_group") === victim._1 &&
+            col("product_id") === victim._2)))
+        fold(st)
       }
     }, finalVersions = 4)
-    PurgedTopStream(flow.st, fold.lvl1, fold.top, fold.touchedSteps.toSeq,
-      prePurgeTop, victimGroup, victimProduct)
+    PurgedTopStream(MaintainedTopStream(flow.st, steps.toSeq), victim._1, victim._2)
   }
 
   /** q170: the maintained top-seller report under DATA DELETION — the
-    * judged row for q169's retraction fallback, previously reachable
-    * only in a hand-built spec pair (the r16 verdict's #1). q169
+    * judged row for q169's retraction fallback through the store. q169
     * certifies the two-level design under an upsert-only flow, where
     * level 2's recompute never faces the one event it exists for: a
     * retraction that DETHRONES a leader (no ± algebra on the top row
     * recovers the runner-up). q170 composes machinery the repo already
-    * owns — the q169 maintained top ([[TopFoldState]], the same fold)
+    * owns — the q169 maintained top (the same carried walk and [[topStep]])
     * over the streamed flow, plus a real deletion landed mid-loop
     * (q136/q158's purge convention): after both drains, the leader of
     * the first channel group is purged from the store and a THIRD fold
@@ -1660,8 +1664,8 @@ object IngestQueries {
     */
   val q170PurgedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q170BuildPurgedTop(s, dir)
-      val lvl1Re = categoryReport(m.st.current().get)
+      val m = q170BuildPurgedTop(s, dir).m
+      val lvl1Re = categoryShape.report(m.st.current().get)
       val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
         .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
       val topEquiv = multisetEquivDiff(m.top, topSellers(lvl1Re), "channel_group")
@@ -1670,10 +1674,10 @@ object IngestQueries {
         .agg(count(lit(1)).as("n_products"))
       m.top
         .join(nProducts, Seq("channel_group"))
-        .withColumn("n_steps", lit(m.stepTouched.size.toLong))
+        .withColumn("n_steps", lit(m.steps.size.toLong))
         // the purge fold's recomputed-group count: a single-row
         // aggregate read on the pinned ≤3-row touched frame
-        .withColumn("n_purge_touched", lit(m.stepTouched.last.count()))
+        .withColumn("n_purge_touched", lit(m.steps.last.touched.count()))
         .join(lvl1Equiv, Seq("channel_group"))
         .join(topEquiv, Seq("channel_group"))
         .orderBy(col("channel_group"))
@@ -1752,8 +1756,8 @@ object IngestQueries {
       drains += 1
       // fresh handles per phase (q167's restart realism)
       val orders = new graft.state.StateTable(s, st.root, keyCols)
-      val repA = reportStoreHandle(s, aRoot, productShape, "q171")
-      val repB = reportStoreHandle(s, bRoot, categoryShape, "q171")
+      val repA = reportStoreHandle(s, aRoot, productShape)
+      val repB = reportStoreHandle(s, bRoot, categoryShape)
       // the laggard: no phase-1 fold at all — its durable watermark
       // stays the empty-report fallback until the phase-2 catch-up;
       // the two consumers' resumes touch disjoint report roots over
@@ -1784,8 +1788,8 @@ object IngestQueries {
   /** q171: multi-consumer retention judged — the policy q168 certifies
     * with ONE consumer (where min(consumer watermarks) is trivial) run
     * with TWO, at staggered paces, so the min actually DECIDES (the
-    * r16 verdict's #2; the strong laggard spec in IngestCertSpec
-    * becomes this row's guard layer). The streamed flow drains twice;
+    * laggard spec in IngestCertSpec is this row's guard layer). The
+    * streamed flow drains twice;
     * consumer A (per-product report) folds after every drain, consumer
     * B (the per-(group, product) category report — a different
     * maintained shape, so the policy is judged across heterogeneous
@@ -1826,8 +1830,8 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q171BuildMultiConsumerFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val repA = reportStoreHandle(s, flow.aRoot, productShape, "q171")
-      val repB = reportStoreHandle(s, flow.bRoot, categoryShape, "q171")
+      val repA = reportStoreHandle(s, flow.aRoot, productShape)
+      val repB = reportStoreHandle(s, flow.bRoot, categoryShape)
       // post-reclaim resumability: fresh handles against the vacuumed
       // store apply ZERO steps (idempotence judged, not just spec'd);
       // disjoint report roots — overlapped (guide §2.6)
@@ -1847,11 +1851,11 @@ object IngestQueries {
         .select(kv("b_n_rows" -> col("n"),
           "b_revenue_cents_total" -> col("cents")).as(Seq("metric", "value")))
       val aEquiv = multisetEquivDiff(repA.current().get.drop("as_of"),
-          productReport(current), "product_id")
+          productShape.report(current), "product_id")
         .agg(sum(col("equiv_diff")).as("d"))
         .select(kv("a_equiv_diff" -> col("d")).as(Seq("metric", "value")))
       val bEquiv = multisetEquivDiff(repB.current().get.drop("as_of"),
-          categoryReport(current), "channel_group")
+          categoryShape.report(current), "channel_group")
         .agg(sum(col("equiv_diff")).as("d"))
         .select(kv("b_equiv_diff" -> col("d")).as(Seq("metric", "value")))
       val consts = s.range(1).select(kv(
@@ -1909,19 +1913,19 @@ object IngestQueries {
 
   /** q172's construction: the q168 retained flow (store converged to
     * ONE non-empty version — retention already reclaimed the empty
-    * CreateTable bootstrap version, the exact precondition the
-    * round-17 advice hazard names), then
+    * CreateTable bootstrap version, the precondition of the durable
+    * consumer's fresh-consumer bootstrap), then
     *
     *  1. a NEW consumer joins: a fresh [[productShape]] report store
     *     resumes against the vacuumed single-version history —
-    *     [[resumeReportMaintenance]]'s bootstrap materializes its base
+    *     the durable consumer's bootstrap materializes its base
     *     from the current version's CONTENTS (0 pairs to fold);
     *  2. a real purge lands: every product ≡ 0 (mod 17) is forgotten
     *     (q136/q158's right-to-be-forgotten convention; whole keys by
     *     construction — product_id is part of the composite key);
     *  3. BOTH consumers resume one purge fold each — the veteran off
     *     its drain watermark, the newcomer off its bootstrap stamp —
-    *     driving [[applyReportDelta]]'s delete arm (retraction +
+    *     driving [[MaintainedShape.fold]]'s delete arm (retraction +
     *     whole-group zero-shell filtering) through a REAL store
     *     transition;
     *  4. retention reclaims exactly the absorbed pre-purge version.
@@ -1932,11 +1936,11 @@ object IngestQueries {
     val base = q168BuildRetainedFlow(s, dir)
     val orders = new graft.state.StateTable(s, base.ordersRoot, keyCols)
     val bRoot = graft.core.Staging.invocationDir("graft_q172_rep_b", dir)
-    val repB = reportStoreHandle(s, bRoot, productShape, "q172")
+    val repB = reportStoreHandle(s, bRoot, productShape)
     val bootstrapSteps = resumeReportMaintenance(orders, repB, keyCols)
     orders.overwrite(orders.read().get
       .filter(col("product_id").cast("long") % 17 =!= 0))
-    val repA = reportStoreHandle(s, base.reportRoot, productShape, "q172")
+    val repA = reportStoreHandle(s, base.reportRoot, productShape)
     // both consumers fold the same purge transition into disjoint
     // report roots over the read-only orders history — overlapped
     // (guide §2.6)
@@ -1953,15 +1957,14 @@ object IngestQueries {
   }
 
   /** q172: consumer ONBOARDING on a retention-managed store, judged —
-    * the round-17 advice hazard promoted from spec to CORRECTNESS row,
-    * composed with the one maintained-product-report branch no judged
+    * the fresh-consumer bootstrap as a CORRECTNESS row, composed with the one maintained-product-report branch no judged
     * flow had driven: the delete arm. q168 proves retention next to
     * maintenance; its converged store has ALREADY reclaimed the empty
     * CreateTable version — so a new consumer joining later (teams add
     * report consumers to a years-old 100 TB store all the time) cannot
     * fold from the beginning of history: it must materialize its base
     * from the oldest RETAINED version's contents, or silently maintain
-    * an empty report that reads as caught up (the pre-fix behavior).
+    * an empty report that reads as caught up.
     * q172 judges that bootstrap end to end, then lands a real
     * forget-these-products purge and has BOTH consumers — the veteran
     * and the newcomer — fold it incrementally: the CDC delete arm
@@ -1998,13 +2001,13 @@ object IngestQueries {
       val flow = q172BuildBootstrapFlow(s, dir)
       val keyCols = graft.core.Schemas.ordersKey
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val repA = reportStoreHandle(s, flow.aRoot, productShape, "q172")
-      val repB = reportStoreHandle(s, flow.bRoot, productShape, "q172")
+      val repA = reportStoreHandle(s, flow.aRoot, productShape)
+      val repB = reportStoreHandle(s, flow.bRoot, productShape)
       val a = repA.current().get.drop("as_of")
       val b = repB.current().get.drop("as_of")
       val bEquiv = multisetEquivDiff(a, b, "product_id")
         .withColumnRenamed("equiv_diff", "b_equiv_diff")
-      val reEquiv = multisetEquivDiff(a, productReport(orders.current().get),
+      val reEquiv = multisetEquivDiff(a, productShape.report(orders.current().get),
           "product_id")
         .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
       a.withColumn("bootstrap_steps", lit(flow.bootstrapSteps.toLong))
@@ -2054,7 +2057,7 @@ object IngestQueries {
     val keyCols = graft.core.Schemas.ordersKey
     val orders = q161BuildStore(s, dir)
     val reportRoot = graft.core.Staging.invocationDir("graft_q173_report", dir)
-    val report = reportStoreHandle(s, reportRoot, productShape, "q173")
+    val report = reportStoreHandle(s, reportRoot, productShape)
     val flowSteps = resumeReportMaintenance(orders, report, keyCols)
     // fragmentation precondition (q156's convention): the compaction
     // must have real work, or the transparency certificate is vacuous
@@ -2131,10 +2134,10 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q173BuildCompactionFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val report = reportStoreHandle(s, flow.reportRoot, productShape, "q173")
+      val report = reportStoreHandle(s, flow.reportRoot, productShape)
       val maintained = report.current().get.drop("as_of")
       val equiv = multisetEquivDiff(maintained,
-        productReport(orders.current().get), "product_id")
+        productShape.report(orders.current().get), "product_id")
       // post-compact layout: a single-row aggregate read off the
       // writer's actual file metadata (q156's accounting convention)
       val nFiles = orders.read().get
@@ -2196,7 +2199,7 @@ object IngestQueries {
     val (dirA, dirB) = stageFlowBatches(s, dir, "graft_q174")
     val orders = freshSyncedStore(s, dir, "graft_q174_state", "q174")
     val reportRoot = graft.core.Staging.invocationDir("graft_q174_report", dir)
-    val report = reportStoreHandle(s, reportRoot, productShape, "q174")
+    val report = reportStoreHandle(s, reportRoot, productShape)
     // phase 1: first load, consumer catches up (CreateTable + load)
     orders.upsert(Ingest.readOrdersCsv(s, dirA))
     val loadSteps = resumeReportMaintenance(orders, report, keyCols)
@@ -2285,10 +2288,10 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q174BuildEvolutionFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val report = reportStoreHandle(s, flow.reportRoot, productShape, "q174")
+      val report = reportStoreHandle(s, flow.reportRoot, productShape)
       val maintained = report.current().get.drop("as_of")
       val equiv = multisetEquivDiff(maintained,
-        productReport(orders.current().get), "product_id")
+        productShape.report(orders.current().get), "product_id")
       maintained
         .withColumn("n_steps_load", lit(flow.loadSteps.toLong))
         .withColumn("n_steps_evo", lit(flow.evoSteps.toLong))
@@ -2330,20 +2333,27 @@ object IngestQueries {
       Seq("product_id"))
 
   /** Revenue per category off the joined view — SUM-shaped, so the ±
-    * delta algebra maintains it ([[applySumDelta]]); one definition for
-    * the base snapshot, both delta arms, and the recompute certificate
-    * leg.
+    * fold maintains it; one definition for the base snapshot, both
+    * delta arms, and the recompute certificate leg.
     */
   private def joinedContrib(joined: DataFrame): DataFrame =
     joined.select(col("category"), lit(1L).as("n_rows"),
       floor(col("amount") * 100).cast("long").as("revenue_cents"))
 
-  private[graft] def joinedCategoryReport(joined: DataFrame): DataFrame =
-    joinedShape.report(joined)
-
+  /** The per-category report over (orders, inventories): its view is
+    * [[joinedView]], both sources are pruned by `product_id` (the
+    * products whose joined slice a step can change — an order-side step
+    * prices at its changed products' fact slices, a dimension step at
+    * the moved products' fact slices plus their catalog rows), and its
+    * durable table stamps `as_of` (orders) and `as_of_dim`
+    * (inventories).
+    */
   private[graft] val joinedShape: MaintainedShape =
     MaintainedShape(joinedContrib, Seq("category"),
-      Seq("n_rows", "revenue_cents"))
+      Seq("n_rows", "revenue_cents"),
+      view = sources => joinedView(sources(0), sources(1)),
+      pruneCols = Seq("product_id"),
+      asOf = Seq("as_of", "as_of_dim"))
 
   /** q175's dimension-move batch: every real catalog product with
     * k ≡ 0 (mod 3) is re-listed under a brand-new category with name/
@@ -2359,109 +2369,27 @@ object IngestQueries {
         col("k") % 10 =!= 0)
       .withColumn("c_mktsegment", lit("RELOCATED"))
 
-  /** The carried two-store join-fold state: one [[step]] per change
-    * landed on EITHER store. The delta algebra is the combined-arm
-    * form of the textbook two-table IVM expansion
-    * `Δ(O⋈I) = ΔO⋈I ∪ O⋈ΔI ∪ ΔO⋈ΔI`: with
-    * P = π_product(ΔO) ∪ keys(ΔI) (the products whose joined slice can
-    * change), the fold applies
-    * `report(σ_P O_after ⋈ σ_P I_after) ⊖ report(σ_P O_before ⋈ σ_P I_before)`
-    * through the shared [[applySumDelta]] ±1-weighted union-groupBy —
-    * products outside P contribute identically to both arms and
-    * cancel, so restricting to P loses nothing, and each arm reads
-    * only the changed products' order slices plus their single catalog
-    * rows (the middle `O⋈ΔI` arm's other-side current version arrives
-    * semi-join-pruned, exactly the change-volume-proportional cost the
-    * expansion promises). An order-side change prices at its changed
-    * keys; a dimension move prices at the moved products' fact slices
-    * — never the store size, never a full joined-report recompute.
-    *
-    * The dimension base is the inventory version CURRENT at the fold's
-    * first observation: earlier dimension history belongs to the base
-    * report, not to any change step. Both carried artifacts are pinned
-    * per step (the q165 lineage discipline). ONE fold implementation
-    * so the order-side and dimension-side certificates can never drift
-    * to different algebras.
-    */
-  private[graft] final class JoinFoldState {
-    var report: DataFrame = null
-    private var prevO: String = null
-    private var prevI: String = null
-    val affectedSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val orderChangedSteps = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val dimChangedSteps = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    def step(ordersSt: graft.state.StateTable,
-        invSt: graft.state.StateTable): Unit = {
-      val fromO = if (prevO == null) ordersSt.history().head else prevO
-      val toO = ordersSt.history().last
-      val fromI = if (prevI == null) invSt.history().last else prevI
-      val toI = invSt.history().last
-      val changedO = toO != fromO
-      val changedI = toI != fromI
-      require(changedO || changedI,
-        "q175: fold step with no change on either store")
-      val arms = Seq(
-        if (changedO) Some(ordersSt.diff(fromO, toO).select(col("product_id")))
-        else None,
-        if (changedI) Some(invSt.diff(fromI, toI).select(col("product_id")))
-        else None).flatten
-      val affected = graft.core.Checkpoints.pin(
-        arms.reduce(_ unionByName _).distinct())
-      val oBefore = ordersSt.readVersion(fromO)
-      val oAfter = ordersSt.readVersion(toO)
-      val base =
-        if (report == null)
-          joinedCategoryReport(joinedView(oBefore, invSt.readVersion(fromI)))
-        else report
-      report = graft.core.Checkpoints.pin(foldJoinedDelta(base,
-        oBefore, oAfter,
-        invSt.readVersion(fromI), invSt.readVersion(toI), affected))
-      affectedSteps += affected
-      orderChangedSteps += changedO
-      dimChangedSteps += changedI
-      prevO = toO
-      prevI = toI
-    }
-  }
-
-  /** ONE joined-fold delta application shared by the carried
-    * ([[JoinFoldState]]) and durable ([[resumeJoinedMaintenance]])
-    * consumers — the two-store analog of [[applyReportDelta]], so the
-    * streamed and durable certificates can never drift to different
-    * algebras. `affected` is P = π_product(ΔO) ∪ keys(ΔI); both join
-    * sides arrive pruned to P before the inner join, and the shared
-    * [[applySumDelta]] ± discipline does the rest.
-    */
-  private[graft] def foldJoinedDelta(base: DataFrame,
-      oBefore: DataFrame, oAfter: DataFrame,
-      iBefore: DataFrame, iAfter: DataFrame,
-      affected: DataFrame): DataFrame = {
-    def pruned(i: DataFrame) =
-      i.join(affected, Seq("product_id"), "left_semi")
-    joinedShape.fold(base,
-      joinedView(oBefore, pruned(iBefore)),
-      joinedView(oAfter, pruned(iAfter)),
-      affected, Seq("product_id"))
-  }
-
-  /** q175's handles: both stores, the carried joined report, the
-    * per-step affected-product frames (pinned) and change-side flags,
-    * and the pre-move report for the guards.
+  /** q175's handles: both stores, the carried consumer's fold steps
+    * (keys and reports pinned; source 0 = orders, 1 = inventories), and
+    * the pre-move report for the guards.
     */
   private[graft] final case class MaintainedJoinFlow(
       ordersSt: graft.state.StateTable, invSt: graft.state.StateTable,
-      report: DataFrame, affectedSteps: Seq[DataFrame],
-      orderChangedSteps: Seq[Boolean], dimChangedSteps: Seq[Boolean],
-      preMoveReport: DataFrame)
+      steps: Seq[FoldStep], preMoveReport: DataFrame) {
+    def report: DataFrame = steps.last.report
+  }
 
   /** q175's construction: the inventories store loads its catalog
     * (q163's batch-1 leg), then the q169-convention streamed orders
-    * flow runs with one [[JoinFoldState]] step per drained micro-batch
-    * — and MID-LOOP, after the second drain's fold, the dimension
-    * update lands: [[q175MoveBatch]] re-lists every k ≡ 0 (mod 3) real
-    * product under a new category through the same CSV→LWW-upsert leg,
-    * and a third fold absorbs the move with the ORDERS side unchanged
-    * (the pure-dimension-change path).
+    * flow runs with a carried [[joinedShape]] consumer advanced after
+    * each drain — orders from the CreateTable version, the dimension
+    * from the catalog version current when the consumer starts (earlier
+    * dimension history belongs to the base report). MID-LOOP, after
+    * the second drain's fold, the dimension update lands:
+    * [[q175MoveBatch]] re-lists every k ≡ 0 (mod 3) real product under
+    * a new category through the same CSV→LWW-upsert leg, and a third
+    * fold absorbs the move with the ORDERS side unchanged (the
+    * pure-dimension-change path).
     */
   private[graft] def q175BuildJoinedFlow(
       s: SparkSession, dir: String): MaintainedJoinFlow = {
@@ -2477,20 +2405,18 @@ object IngestQueries {
       freshSyncedStore(s, dir, "graft_q175_inv_state", "q175",
         graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
     invSt.upsert(Ingest.readInventoriesCsv(s, invB1))
-    val fold = new JoinFoldState
-    var drains = 0
+    val consumer = new CarriedReport(joinedShape,
+      Seq(None, invSt.currentVersion))
     var preMove: DataFrame = null
     val flow = buildStreamedFlowStore(s, dir, "graft_q175", "q175", st => {
-      fold.step(st, invSt)
-      drains += 1
-      if (drains == 2) {
-        preMove = fold.report
+      consumer.advance(Seq(st, invSt))
+      if (consumer.steps.size == 2) {
+        preMove = consumer.report
         invSt.upsert(Ingest.readInventoriesCsv(s, invMove))
-        fold.step(st, invSt)
+        consumer.advance(Seq(st, invSt))
       }
     })
-    MaintainedJoinFlow(flow.st, invSt, fold.report, fold.affectedSteps.toSeq,
-      fold.orderChangedSteps.toSeq, fold.dimChangedSteps.toSeq, preMove)
+    MaintainedJoinFlow(flow.st, invSt, consumer.steps.toSeq, preMove)
   }
 
   /** q175: the maintained JOIN report — incremental view maintenance
@@ -2504,7 +2430,7 @@ object IngestQueries {
     * over the fact store. q175 certifies the production answer: A3's
     * revenue-per-category (category sourced from the inventories
     * STORE, not the fact rows) maintained under changes to BOTH stores
-    * via [[JoinFoldState]]'s combined-arm delta — two order-side folds
+    * via a carried [[joinedShape]] consumer — two order-side folds
     * (the streamed drains) and one dimension-side fold (a real
     * mid-loop category move through the CSV→LWW leg). The judged rows
     * are the final maintained report per category — the moved
@@ -2544,7 +2470,7 @@ object IngestQueries {
   val q175MaintainedJoinReport: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q175BuildJoinedFlow(s, dir)
-      val recompute = joinedCategoryReport(joinedView(
+      val recompute = joinedShape.report(joinedView(
         m.ordersSt.current().get, m.invSt.current().get))
       val equiv = multisetEquivDiff(m.report, recompute, "category")
       // the dimension fold's affected-product count (a single-row
@@ -2552,13 +2478,13 @@ object IngestQueries {
       // row count it must stay a proper subset of: two independent
       // read-only driver actions — overlapped (guide §2.6)
       val (nDimAffected, nCatalog) = graft.core.Par.both(
-        m.affectedSteps.last.count(), m.invSt.current().get.count())
+        m.steps.last.keys.count(), m.invSt.current().get.count())
       m.report
-        .withColumn("n_steps", lit(m.affectedSteps.size.toLong))
+        .withColumn("n_steps", lit(m.steps.size.toLong))
         .withColumn("n_order_steps",
-          lit(m.orderChangedSteps.count(identity).toLong))
+          lit(m.steps.count(_.source == 0).toLong))
         .withColumn("n_dim_steps",
-          lit(m.dimChangedSteps.count(identity).toLong))
+          lit(m.steps.count(_.source == 1).toLong))
         .withColumn("n_dim_affected", lit(nDimAffected))
         .withColumn("n_catalog", lit(nCatalog))
         .join(equiv, Seq("category"))
@@ -2599,129 +2525,13 @@ object IngestQueries {
   // onboarding) for the JOINED report family
   // ------------------------------------------------------------------
 
-  /** The durable joined-report schema: [[joinedShape]]'s columns plus
-    * a SECOND resume watermark — `as_of` is the orders-store version
-    * the report reflects (the single-store convention) and `as_of_dim`
-    * the inventories-store version. A maintained view of N sources
-    * needs N watermarks, one per change feed; both are constant across
-    * a version's rows, so two single-row max() reads recover the pair
-    * with no sidecar metadata.
-    */
-  private[graft] val joinedReportSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(joinedShape.schema.fields :+
-      org.apache.spark.sql.types.StructField("as_of_dim",
-        org.apache.spark.sql.types.StringType))
-
-  /** [[reportStoreHandle]]'s analog for the two-watermark joined
-    * report table: first call CreateTables [[joinedReportSchema]],
-    * later calls must find it in sync.
-    */
-  private[graft] def joinedReportHandle(
-      s: SparkSession, root: String): graft.state.StateTable = {
-    val st = new graft.state.StateTable(s, root, joinedShape.groupCols)
-    val changes = graft.schemasync.SchemaSync.sync(s, st, joinedReportSchema)
-    require(changes.isEmpty ||
-      changes == Seq(graft.schemasync.SchemaSync.CreateTable(joinedReportSchema)),
-      s"q177 precondition: joined-report sync applied $changes")
-    st
-  }
-
-  /** The durable (orders, inventories) watermark pair off the joined
-    * report's current rows — None on an empty report (the
-    * bootstrap-vs-caught-up distinction, q172's convention).
-    */
-  private[graft] def joinedWatermarksOpt(
-      reportSt: graft.state.StateTable): Option[(String, String)] = {
-    val r = reportSt.current().get
-      .agg(max(col("as_of")), max(col("as_of_dim"))).head()
-    if (r.isNullAt(0)) None else Some((r.getString(0), r.getString(1)))
-  }
-
-  /** Resume JOINED-report maintenance from durable state only — the
-    * two-store analog of [[resumeReportMaintenance]]. Recover the
-    * watermark pair, then absorb the two change feeds in two phases,
-    * each a walk of version pairs folded through the shared
-    * [[foldJoinedDelta]] with one durable report version written per
-    * step:
-    *
-    *  - phase 1 folds every pending ORDERS pair with the dimension
-    *    pinned at ITS watermark `wmI`;
-    *  - phase 2 folds every pending INVENTORIES pair with orders
-    *    pinned at the version phase 1 ended on.
-    *
-    * Phase composition is exact by telescoping: phase 1 accumulates
-    * `report(O_cur ⋈ I_wm) ⊖ report(O_wm ⋈ I_wm)`, phase 2 adds
-    * `report(O_cur ⋈ I_cur) ⊖ report(O_cur ⋈ I_wm)` — the middle
-    * terms cancel, leaving exactly the recompute delta, without
-    * needing any cross-store ordering of the two histories (version
-    * names are comparable only within one store; a two-source
-    * maintenance loop cannot assume a global clock). Each phase's
-    * arms are pruned to its own side's changed products.
-    *
-    * FRESH-CONSUMER BOOTSTRAP (q172's fix, two-store form): an empty
-    * report on stores whose oldest retained versions BOTH carry rows
-    * first materializes its base as the joined report of those two
-    * versions, stamped with the pair — on retention-vacuumed stores
-    * the walks can no longer start from empty CreateTable versions.
-    * When EITHER oldest version is empty the joined base is empty by
-    * inner-join algebra and the walks alone are correct, so the
-    * bounded isEmpty reads gate the materialization precisely.
-    *
-    * Returns (orders steps, dimension steps) — (0, 0) on a restart
-    * with nothing new (idempotence, judged in-query by q177).
-    */
-  private[graft] def resumeJoinedMaintenance(
-      ordersSt: graft.state.StateTable, invSt: graft.state.StateTable,
-      reportSt: graft.state.StateTable): (Int, Int) = {
-    val hO = ordersSt.history()
-    val hI = invSt.history()
-    require(hO.nonEmpty && hI.nonEmpty,
-      "q177: a store has no versions to fold")
-    val wmOpt = joinedWatermarksOpt(reportSt)
-    if (wmOpt.isEmpty && !ordersSt.readVersion(hO.head).isEmpty &&
-        !invSt.readVersion(hI.head).isEmpty)
-      reportSt.overwrite(joinedCategoryReport(joinedView(
-          ordersSt.readVersion(hO.head), invSt.readVersion(hI.head)))
-        .withColumn("as_of", lit(hO.head))
-        .withColumn("as_of_dim", lit(hI.head)))
-    val (wmO, wmI) = wmOpt.getOrElse((hO.head, hI.head))
-    val idxO = hO.indexOf(wmO)
-    val idxI = hI.indexOf(wmI)
-    require(idxO >= 0 && idxI >= 0,
-      s"q177: watermark pair ($wmO, $wmI) not in the stores' histories — " +
-        "a store was vacuumed past the report's resume point")
-    def base() = reportSt.current().get.drop("as_of", "as_of_dim")
-    val oPairs = hO.drop(idxO).sliding(2).filter(_.size == 2).toSeq
-    oPairs.foreach { case Seq(from, to) =>
-      // unpinned for the same reason as [[resumeReportMaintenance]]:
-      // the durable write truncates lineage, and dropping the eager
-      // pin drops one sequential job per fold
-      val affected = ordersSt.diff(from, to).select(col("product_id")).distinct()
-      val dim = invSt.readVersion(wmI)
-      reportSt.overwrite(foldJoinedDelta(base(),
-          ordersSt.readVersion(from), ordersSt.readVersion(to),
-          dim, dim, affected)
-        .withColumn("as_of", lit(to)).withColumn("as_of_dim", lit(wmI)))
-    }
-    val oCur = hO.last
-    val iPairs = hI.drop(idxI).sliding(2).filter(_.size == 2).toSeq
-    iPairs.foreach { case Seq(from, to) =>
-      val affected = invSt.diff(from, to).select(col("product_id")).distinct()
-      val oFrame = ordersSt.readVersion(oCur)
-      reportSt.overwrite(foldJoinedDelta(base(), oFrame, oFrame,
-          invSt.readVersion(from), invSt.readVersion(to), affected)
-        .withColumn("as_of", lit(oCur)).withColumn("as_of_dim", lit(to)))
-    }
-    (oPairs.size, iPairs.size)
-  }
-
-  /** q177's durable state plus the lifecycle evidence: per-cycle
-    * (orders, dim) fold counts and the per-store retention accounting.
+  /** q177's durable state plus the lifecycle evidence: per load cycle,
+    * the source store each applied fold step advanced (0 orders, 1
+    * inventories), and the per-store retention accounting.
     */
   private[graft] final case class DurableJoinFlow(
       ordersRoot: String, invRoot: String, reportRoot: String,
-      steps1: (Int, Int), steps2: (Int, Int),
-      oReclaimed: Int, iReclaimed: Int)
+      cycles: Seq[Seq[Int]], oReclaimed: Int, iReclaimed: Int)
 
   /** q177's construction: the reference flow on BOTH stores (orders
     * q161 batches; inventories catalog + [[q175MoveBatch]] category
@@ -2747,43 +2557,41 @@ object IngestQueries {
       freshSyncedStore(s, dir, "graft_q177_i_state", "q177",
         graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
     val reportRoot = graft.core.Staging.invocationDir("graft_q177_report", dir)
-    def resume(): (Int, Int) = {
-      val o = new graft.state.StateTable(s, ordersSt.root,
-        graft.core.Schemas.ordersKey)
-      val i = new graft.state.StateTable(s, invSt.root,
-        graft.core.Schemas.inventoriesKey)
-      resumeJoinedMaintenance(o, i, joinedReportHandle(s, reportRoot))
-    }
+    def report() = reportStoreHandle(s, reportRoot, joinedShape)
+    def resume(): Seq[Int] = resumeMaintenance(joinedShape, Seq(
+        new graft.state.StateTable(s, ordersSt.root, graft.core.Schemas.ordersKey),
+        new graft.state.StateTable(s, invSt.root, graft.core.Schemas.inventoriesKey)),
+      report()).map(_.source)
     // cycle 1: first loads on both stores (disjoint roots — the
     // single-writer-per-store guarantee holds; overlapped per §2.6),
     // one resume
     graft.core.Par.both(
       ordersSt.upsert(Ingest.readOrdersCsv(s, oA)),
       invSt.upsert(Ingest.readInventoriesCsv(s, iB1))): Unit
-    val steps1 = resume()
+    val cycle1 = resume()
     // cycle 2: the orders re-run AND the dimension category move land,
     // one resume absorbs both feeds
     graft.core.Par.both(
       ordersSt.upsert(Ingest.readOrdersCsv(s, oB)),
       invSt.upsert(Ingest.readInventoriesCsv(s, iMv))): Unit
-    val steps2 = resume()
+    val cycle2 = resume()
     // retention: each store vacuums bounded by ITS durable watermark
-    val (wmO, wmI) = joinedWatermarksOpt(joinedReportHandle(s, reportRoot)).get
+    val Seq(wmO, wmI) = reportWatermarks(report(), joinedShape.asOf).get
     val oReclaimed = ordersSt.vacuumBefore(wmO).size
     val iReclaimed = invSt.vacuumBefore(wmI).size
     DurableJoinFlow(ordersSt.root, invSt.root, reportRoot,
-      steps1, steps2, oReclaimed, iReclaimed)
+      Seq(cycle1, cycle2), oReclaimed, iReclaimed)
   }
 
   /** q177: the DURABLE two-store joined-report consumer — q175 proves
-    * the join-maintenance algebra as a carried in-memory fold; the
+    * the join-maintenance algebra with a carried consumer; the
     * production consumer of a years-long 100 TB store pair is durable,
     * resumable, retention-compatible, and joinable late, and every one
     * of those properties needs the TWO-watermark generalization judged
     * here: the report table stamps (`as_of`, `as_of_dim`), a restarted
     * process recovers the pair off the durable rows and absorbs each
     * feed's pending versions in telescoping phases
-    * ([[resumeJoinedMaintenance]] — no cross-store version ordering
+    * ([[ReportConsumer.advance]] — no cross-store version ordering
     * assumed, because none exists), retention runs PER STORE bounded
     * by that store's watermark component, and a NEW consumer joining
     * the already-vacuumed stores bootstraps its base from both current
@@ -2792,10 +2600,10 @@ object IngestQueries {
     * (`flows/data_ingestion.py:250–272`): first loads + resume, then
     * the orders LWW re-run AND the category move land together +
     * resume, then per-store vacuums; the judged query itself runs the
-    * post-reclaim restart (0, 0 steps) and the newcomer onboarding.
+    * post-reclaim restart (0 steps) and the newcomer onboarding.
     * Judged rows: the veteran's per-category report (values meet
     * q175's joined replay — the dimension move folded durably), fold
-    * counts per side per cycle (2 orders + 2 dim), per-store retention
+    * counts per side (2 orders + 2 dim), per-store retention
     * accounting (2 reclaimed / 1 retained each), the restart and
     * bootstrap step counts (0), the newcomer equivalence
     * (`b_equiv_diff = 0` — two consumers at different join times
@@ -2810,7 +2618,8 @@ object IngestQueries {
     * is CreateTable + exactly 4 folds, the newcomer REALLY took the
     * materialize path (2 report versions, stamps = the vacuumed
     * stores' single retained versions), and a dimension-only change
-    * resumes as (0, 1) with the report still meeting the recompute.
+    * resumes as one inventories step with the report still meeting
+    * the recompute.
     *
     * Scale: phase cost tracks each feed's change volume (the q175
     * arms); the durable write per fold truncates lineage; retention
@@ -2827,34 +2636,33 @@ object IngestQueries {
         graft.core.Schemas.ordersKey)
       val inv = new graft.state.StateTable(s, flow.invRoot,
         graft.core.Schemas.inventoriesKey)
-      val rep = joinedReportHandle(s, flow.reportRoot)
+      val rep = reportStoreHandle(s, flow.reportRoot, joinedShape)
       // post-reclaim restart (a fresh handle applies ZERO steps on
       // both feeds — idempotence judged, q171's convention) and the
       // newcomer onboarding (a NEW joined consumer bootstraps from
       // both current versions): disjoint report roots over read-only
       // stores — overlapped (guide §2.6)
       val bRoot = graft.core.Staging.invocationDir("graft_q177_rep_b", dir)
-      val repB = joinedReportHandle(s, bRoot)
+      val repB = reportStoreHandle(s, bRoot, joinedShape)
       val (restart, bSteps) = graft.core.Par.both(
-        resumeJoinedMaintenance(orders, inv, rep),
-        resumeJoinedMaintenance(orders, inv, repB))
-      val a = rep.current().get.drop("as_of", "as_of_dim")
-      val b = repB.current().get.drop("as_of", "as_of_dim")
+        resumeMaintenance(joinedShape, Seq(orders, inv), rep),
+        resumeMaintenance(joinedShape, Seq(orders, inv), repB))
+      val a = rep.current().get.drop(joinedShape.asOf: _*)
+      val b = repB.current().get.drop(joinedShape.asOf: _*)
       val bEquiv = multisetEquivDiff(a, b, "category")
         .withColumnRenamed("equiv_diff", "b_equiv_diff")
-      val reEquiv = multisetEquivDiff(a, joinedCategoryReport(joinedView(
+      val reEquiv = multisetEquivDiff(a, joinedShape.report(joinedView(
           orders.current().get, inv.current().get)), "category")
         .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
-      a.withColumn("n_order_steps",
-          lit((flow.steps1._1 + flow.steps2._1).toLong))
-        .withColumn("n_dim_steps",
-          lit((flow.steps1._2 + flow.steps2._2).toLong))
+      val sources = flow.cycles.flatten
+      a.withColumn("n_order_steps", lit(sources.count(_ == 0).toLong))
+        .withColumn("n_dim_steps", lit(sources.count(_ == 1).toLong))
         .withColumn("o_reclaimed", lit(flow.oReclaimed.toLong))
         .withColumn("i_reclaimed", lit(flow.iReclaimed.toLong))
         .withColumn("o_retained", lit(orders.history().size.toLong))
         .withColumn("i_retained", lit(inv.history().size.toLong))
-        .withColumn("restart_steps", lit((restart._1 + restart._2).toLong))
-        .withColumn("bootstrap_steps", lit((bSteps._1 + bSteps._2).toLong))
+        .withColumn("restart_steps", lit(restart.size.toLong))
+        .withColumn("bootstrap_steps", lit(bSteps.size.toLong))
         .join(bEquiv, Seq("category"))
         .join(reEquiv, Seq("category"))
         .orderBy(col("category"))
@@ -2908,9 +2716,6 @@ object IngestQueries {
       month(col("date_time")).as("sale_month"),
       lit(1L).as("n_rows"), col("quantity").cast("long").as("qty_sum"))
 
-  private[graft] def monthlyReport(contents: DataFrame): DataFrame =
-    monthlyShape.report(contents)
-
   private[graft] val monthlyShape: MaintainedShape =
     MaintainedShape(monthlyContrib,
       Seq("product_id", "sale_year", "sale_month"),
@@ -2957,7 +2762,7 @@ object IngestQueries {
     val steps = scala.collection.mutable.ArrayBuffer.empty[Int]
     def foldOnce(root: String): Int = {
       val orders = new graft.state.StateTable(s, root, keyCols)
-      val report = reportStoreHandle(s, reportRoot, monthlyShape, "q176")
+      val report = reportStoreHandle(s, reportRoot, monthlyShape)
       resumeReportMaintenance(orders, report, keyCols, monthlyShape)
     }
     // the late batch's STAGING touches only its own side dir — it can
@@ -2987,7 +2792,7 @@ object IngestQueries {
     val (lateStep, lateTouched) = graft.core.Par.both(
       foldOnce(flow.st.root),
       graft.core.Checkpoints.pin(
-        monthlyReport(orders.current().get.join(lateKeys, keyCols, "left_semi"))
+        monthlyShape.report(orders.current().get.join(lateKeys, keyCols, "left_semi"))
           .select(col("product_id"), col("sale_year"), col("sale_month"))))
     steps += lateStep
     MonthlyFlow(flow.st.root, reportRoot, steps.toSeq, lateKeys, lateTouched)
@@ -3038,9 +2843,9 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q176BuildMonthlyFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val reportSt = reportStoreHandle(s, flow.reportRoot, monthlyShape, "q176")
+      val reportSt = reportStoreHandle(s, flow.reportRoot, monthlyShape)
       val maintained = reportSt.current().get.drop("as_of")
-      val recompute = monthlyReport(orders.current().get)
+      val recompute = monthlyShape.report(orders.current().get)
       val equiv = multisetEquivDiff(maintained, recompute, "product_id")
       maintained
         .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
