@@ -761,8 +761,9 @@ object IngestQueries {
       * pruned keys contribute identically to both arms and cancel.
       *
       * PRECONDITION on the change feed: `keys` must cover every key
-      * whose row MULTISET differs between the versions.
-      * [[graft.state.StateTable.diff]] is key-level (latest row per
+      * whose row MULTISET differs between the versions. The walk feeds
+      * [[graft.state.StateTable.changedKeys]], whose key set is
+      * [[graft.state.StateTable.diff]]'s: key-level (latest row per
       * key), so a transition that added or removed value-identical
       * COPIES of an existing key would slip past it — but transitions
       * produced by [[graft.state.StateTable.upsert]] can never do that:
@@ -872,7 +873,7 @@ object IngestQueries {
         val from = done.lastOption.fold(start)(_.to)
         val at = from.updated(j, to)
         val keys = keepKeys(
-          stores(j).diff(from(j), to).select(shape.pruneCols.map(col): _*))
+          stores(j).changedKeys(from(j), to).select(shape.pruneCols.map(col): _*))
         val b = base(stores, from)
         done :+ commit(FoldStep(j, from, at, keys, b,
           shape.fold(b, frames(stores, from), frames(stores, at), keys)))
@@ -912,11 +913,11 @@ object IngestQueries {
     * reflects (one [[MaintainedShape.asOf]] column per source, constant
     * across the version's rows), so a fresh handle recovers everything
     * from disk. The durable write is each step's lineage truncation:
-    * neither the keys nor the report are pinned (the diff subtree in
-    * both ± arms is deterministic and its exchanges are reused within
-    * the write job). Versioned immutability makes the read-while-write
-    * safe: each step's base is read from the CURRENT version while the
-    * next version writes to a fresh dir.
+    * neither the keys nor the report are pinned (the change-key
+    * subtree in both ± arms is deterministic, and any exchanges it has
+    * are reused within the write job). Versioned immutability makes the
+    * read-while-write safe: each step's base is read from the CURRENT
+    * version while the next version writes to a fresh dir.
     *
     * FRESH-CONSUMER BOOTSTRAP: an empty report resumes from the OLDEST
     * retained versions. Once retention has reclaimed the stores' empty
@@ -965,9 +966,11 @@ object IngestQueries {
     * judged equal to a full recompute. At 100 TB the reference's
     * reports cannot be recomputed per run; the scale answer is a
     * materialized report plus a delta derived from what CHANGED. The
-    * store's versioned CDC ([[graft.state.StateTable.diff]], judged by
-    * q158) is exactly that change feed. q164 closes the loop on the
-    * reference's own report surface:
+    * store's versioned CDC is exactly that change feed: the consumer
+    * reads [[graft.state.StateTable.changedKeys]], the key set of
+    * [[graft.state.StateTable.diff]] (judged by q158), which for an
+    * upsert's version is one filtered scan of it. q164 closes the loop
+    * on the reference's own report surface:
     *
     *  1. build the flow store ([[q161BuildStore]]: first load v2,
     *     LWW re-run v3);
@@ -992,8 +995,8 @@ object IngestQueries {
     * prunes (changedKeys a proper nonempty subset) and really moves the
     * report (v2 report ≠ v3 report) — IngestCertSpec pins.
     *
-    * Scale: one CDC join (q158's audited shape), two semi-joined
-    * pruned arms and one group-sum on the report key, the
+    * Scale: one filtered scan of v3 for the change keys, two
+    * semi-joined pruned arms and one group-sum on the report key, the
     * certificate's recompute leg (the honest price, q141/q162
     * convention), one output sort. The CDC keys feed both arms —
     * pinned once by the carried consumer.

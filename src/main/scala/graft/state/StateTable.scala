@@ -3,7 +3,7 @@ package graft.state
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -25,6 +25,17 @@ import graft.core.Fs
   * visible (the reference's per-batch transaction + rollback, R3,
   * without an external store; on a cluster, Delta/Iceberg ACID commits
   * play the same role).
+  *
+  * Change records: a version written by [[upsert]] or [[compact]] also
+  * holds `_changes`, naming the version the write read (`from`) and
+  * what changed against it — the rows with `_seq` above a floor, or no
+  * row at all (a compaction). It is written before the log link, so it
+  * exists whenever the version does; Spark's file listing skips
+  * `_`-prefixed names, and deleting the version directory deletes it.
+  * [[changedKeys]] reads it so a consumer's change feed for `(from,
+  * to)` is one filtered scan of `to` instead of [[diff]] over both
+  * versions (the commit-log-plus-delta state store of Structured
+  * Streaming, SIGMOD 2018, without the delta storage).
   *
   * Upsert semantics (duplicate-key behavior replicated exactly):
   *  - first load: *append all rows* — within-batch duplicate keys are NOT
@@ -83,7 +94,12 @@ final class StateTable(
     * second writer of the same sequence number fails here instead of
     * replacing a commit; its version directory stays uncommitted.
     */
-  def overwrite(df: DataFrame): Unit = {
+  def overwrite(df: DataFrame): Unit = write(df, None)
+
+  /** [[overwrite]], leaving `changes` in the version directory before
+    * the commit.
+    */
+  private def write(df: DataFrame, changes: Option[Changes]): Unit = {
     val next = entries().lastOption
       .fold(0L)(e => java.lang.Long.parseLong(e.getFileName.toString, 16) + 1L)
     val seq = f"$next%016x"
@@ -100,6 +116,7 @@ final class StateTable(
     // partitioned read re-derives partition columns from dir names and
     // reorders them last, so its inferred schema is not df.schema.
     if (partitionCols.isEmpty) versionSchemas.put(versionDir, df.schema): Unit
+    changes.foreach(c => Files.writeString(Paths.get(versionDir, ChangesFile), c.encode))
     Files.createDirectories(logDir)
     val tmp = logDir.resolve(s".$v")
     Files.writeString(tmp, v)
@@ -153,16 +170,26 @@ final class StateTable(
     * deterministically, §7.5 risk 1) and is consumed here; when absent,
     * `monotonically_increasing_id()` is used — monotone in file order for
     * a single-source read.
+    *
+    * `_seq` marks what the write changed: an inserted row, and an
+    * updated row whose values differ (null-safe) from the row it
+    * overwrites, take their batch row's `_seq` shifted past the read
+    * version's max `_seq`; a no-op update and every untouched row keep
+    * theirs. The new version's change record names the read version and
+    * that max as the floor, so the rows above it are exactly the new or
+    * changed ones — and, as upserts never delete, their keys are exactly
+    * `diff(read version, new version)`'s.
     */
   def upsert(batch: DataFrame, orderCol: Option[String] = None): Unit = {
     val b0 = orderCol match {
       case Some(c) => batch.withColumn(SeqCol, col(c).cast("long")).drop(c)
       case None => batch.withColumn(SeqCol, monotonically_increasing_id())
     }
-    read() match {
+    currentVersion match {
       case None =>
         overwrite(b0)
-      case Some(state) =>
+      case Some(from) =>
+        val state = readDir(from)
         val valueCols = state.columns.filterNot(c => keyCols.contains(c) || c == SeqCol)
         // align the batch to the state schema: schema sync may have added
         // declared columns the source doesn't carry yet (evolve-then-
@@ -171,9 +198,10 @@ final class StateTable(
           d.withColumn(c, lit(null).cast(state.schema(c).dataType))
         }
         val outCols = (keyCols ++ valueCols :+ SeqCol).map(col)
-        // ONE scalar read serves both the empty-state test and the
-        // insert-arm _seq offset (coalesce: state may exist but be empty
-        // — schema-sync CreateTable)
+        // ONE scalar read serves the empty-state test, the _seq offset
+        // of inserted and changed rows, and the change record's floor
+        // (coalesce: state may exist but be empty — schema-sync
+        // CreateTable)
         val agg = state.agg(coalesce(max(col(SeqCol)), lit(0L)), count(lit(1L))).head()
         val maxSeq = agg.getLong(0)
         if (agg.getLong(1) == 0L) {
@@ -184,9 +212,9 @@ final class StateTable(
           // batch a store ever sees (the initial corpus). Same rows,
           // same column order, same +1 _seq shift as the general path's
           // insert arm produces over empty state.
-          overwrite(b
+          write(b
             .withColumn(SeqCol, col(SeqCol) + lit(maxSeq) + lit(1L))
-            .select(outCols: _*))
+            .select(outCols: _*), Some(Changes(from, Some(maxSeq))))
         } else {
           // Pin the batch before the key algebra: _seq defaults to
           // monotonically_increasing_id(), a NONDETERMINISTIC
@@ -206,23 +234,28 @@ final class StateTable(
           val wB = Window.partitionBy(keyCols.map(col): _*).orderBy(col(SeqCol).desc)
           val bW = bP.withColumn("_rn", row_number().over(wB))
           val lastPerKey = bW.filter(col("_rn") === 1)
-            .select(keyCols.map(col) ++ valueCols.map(c => col(c).as(s"_u_$c")) :+ lit(true).as("_matched"): _*)
+            .select(keyCols.map(col) ++ valueCols.map(c => col(c).as(s"_u_$c")) :+
+              col(SeqCol).as("_u_seq") :+ lit(true).as("_matched"): _*)
           // the state row that absorbs the update: max _seq per key; the
           // _srn === 1 frame doubles as the DISTINCT state-key set for
           // the insert arm's anti join — one shuffle of the state,
           // reused, instead of a window pass plus a separate distinct
           val wS = Window.partitionBy(keyCols.map(col): _*).orderBy(col(SeqCol).desc)
           val target = state.withColumn("_srn", row_number().over(wS))
+          val hit = col("_srn") === 1 && col("_matched")
+          val changed = valueCols.map(c => !(col(c) <=> col(s"_u_$c")))
+            .reduceOption(_ || _).getOrElse(lit(false))
           val updated = target.join(lastPerKey, keyCols, "left")
             .select(keyCols.map(col) ++ valueCols.map { c =>
-              when(col("_srn") === 1 && col("_matched"), col(s"_u_$c")).otherwise(col(c)).as(c)
-            } :+ col(SeqCol): _*)
+              when(hit, col(s"_u_$c")).otherwise(col(c)).as(c)
+            } :+ when(hit && changed, col("_u_seq") + lit(maxSeq) + lit(1L))
+              .otherwise(col(SeqCol)).as(SeqCol): _*)
           // unseen keys: append every batch row (within-batch dups kept)
           val stateKeys = target.filter(col("_srn") === 1).select(keyCols.map(col): _*)
           val inserts = bW.join(stateKeys, keyCols, "left_anti")
             .withColumn(SeqCol, col(SeqCol) + lit(maxSeq) + lit(1L))
             .select(outCols: _*)
-          overwrite(updated.unionByName(inserts))
+          write(updated.unionByName(inserts), Some(Changes(from, Some(maxSeq))))
         }
     }
   }
@@ -234,13 +267,15 @@ final class StateTable(
     * are byte-identical rows — only the file layout changes; readers see
     * the compacted version once it commits. Each partition directory's
     * rows go through one task; an unpartitioned table goes through one
-    * task in all.
+    * task in all. Its change record says no row changed.
     */
   def compact(): Unit =
-    read().foreach { df =>
-      overwrite(
+    currentVersion.foreach { from =>
+      val df = readDir(from)
+      write(
         if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
-        else df.repartition(1))
+        else df.repartition(1),
+        Some(Changes(from, None)))
     }
 
   /** Reader view without internal bookkeeping columns. */
@@ -257,7 +292,10 @@ final class StateTable(
     * after-image columns (before-image for deletes). Key-level — a key
     * whose latest row's values are byte-equal in both versions emits
     * nothing. Versioned immutable state makes CDC a pure join: no change
-    * log, no triggers; two scans + one shuffle on the key.
+    * log, no triggers; both versions are scanned and aggregated to their
+    * latest row per key (two aggregation exchanges), then full-outer
+    * joined on the key (one more exchange). A consumer that needs only
+    * the changed keys reads [[changedKeys]].
     */
   def diff(fromVersion: String, toVersion: String): DataFrame = {
     def latestPerKey(v: String): DataFrame = {
@@ -272,8 +310,9 @@ final class StateTable(
         // folds to key grain in a partial-aggregate pass before the
         // exchange — no sort, and map-side reduction shuffles key-grain
         // rows instead of every row (guide §2.3). Deterministic: _seq
-        // is unique per row within a version (monotonic id at insert,
-        // preserved by the LWW rewrite), so max_by has no ties.
+        // is unique per row within a version (a batch row's, shifted
+        // past every existing row's, for an inserted or changed row;
+        // kept otherwise), so max_by has no ties.
         val vals = raw.columns.filterNot(c => keyCols.contains(c) || c == SeqCol)
         if (vals.isEmpty) raw.select(keyCols.map(col): _*).distinct()
         else raw.groupBy(keyCols.map(col): _*)
@@ -310,11 +349,58 @@ final class StateTable(
         when(col("_in_a").isNotNull, col(c)).otherwise(col(s"_b_$c")).as(c)
       } :+ col("_change"): _*)
   }
+
+  /** The keys [[diff]]`(fromVersion, toVersion)` reports, as a frame of
+    * the key columns (a key may repeat: within-batch duplicates of an
+    * unseen key are all new rows). When `toVersion`'s change record
+    * names `fromVersion`, the answer comes from `toVersion` alone: its
+    * rows with `_seq` above the recorded floor — one filtered scan, no
+    * exchange — or, for a compaction, an empty local frame, which the
+    * optimizer propagates so plans pruned by it read no version. Any
+    * other pair — a raw [[overwrite]], a schema-sync version, versions
+    * further apart, a version written without a record — falls back to
+    * [[diff]].
+    */
+  def changedKeys(fromVersion: String, toVersion: String): DataFrame = {
+    val record = Some(rootPath.resolve(toVersion).resolve(ChangesFile))
+      .filter(Files.isRegularFile(_))
+      .map(f => Changes.decode(Files.readString(f)))
+      .filter(_.from == fromVersion)
+    record match {
+      case Some(Changes(_, Some(floor))) =>
+        readDir(toVersion).filter(col(SeqCol) > floor).select(keyCols.map(col): _*)
+      case Some(Changes(_, None)) =>
+        val schema = readDir(toVersion).schema
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType(keyCols.map(schema(_))))
+      case None =>
+        diff(fromVersion, toVersion).select(keyCols.map(col): _*)
+    }
+  }
 }
 
 object StateTable {
   /** Internal monotone sequence column (persisted). */
   val SeqCol = "_seq"
+
+  /** A version's change record file (see the class doc). */
+  private val ChangesFile = "_changes"
+
+  /** What the writer of a version knew: it was computed from version
+    * `from`, and its rows with `_seq > floor` are exactly the new or
+    * changed ones; `floor = None` means no row changed.
+    */
+  private final case class Changes(from: String, floor: Option[Long]) {
+    def encode: String = s"$from\n${floor.fold("none")(_.toString)}\n"
+  }
+
+  private object Changes {
+    def decode(text: String): Changes = text.linesIterator.toSeq match {
+      case Seq(from, "none") => Changes(from, None)
+      case Seq(from, floor) => Changes(from, Some(floor.toLong))
+      case _ => throw new IllegalStateException(s"malformed change record: $text")
+    }
+  }
 
   /** Process-wide per-version-dir schema cache. Version dirs are
     * immutable once committed and their paths are never reused

@@ -9,7 +9,9 @@ import scala.concurrent.duration._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.TestSpark
 import graft.core.Schemas
@@ -25,6 +27,14 @@ private object WriteGate {
   val release = new CountDownLatch(1)
 }
 
+/** The same, for a spec that holds an upsert after it read its
+  * predecessor version and before it writes.
+  */
+private object UpsertGate {
+  val started = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+}
+
 class StateTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -35,6 +45,26 @@ class StateTableSpec extends AnyFunSuite {
 
   private def ordersBatch(name: String) =
     Ingest.readOrdersCsv(spark, TestSpark.fixture(name))
+
+  private def keySet(df: DataFrame): Set[Row] = df.collect().toSet
+
+  /** `changedKeys(from, to)` returns the key columns and, as a set,
+    * exactly the keys `diff(from, to)` reports.
+    */
+  private def assertChangedKeysExact(t: StateTable, from: String, to: String,
+      keyCols: Seq[String], what: String): Unit = {
+    val got = t.changedKeys(from, to)
+    assert(got.columns.toSeq == keyCols, s"$what: columns ${got.columns.toSeq}")
+    assert(keySet(got) == keySet(t.diff(from, to).select(keyCols.map(col): _*)),
+      s"$what: changedKeys differs from diff's key set")
+  }
+
+  /** Whether `changedKeys(from, to)` answered from `to`'s change
+    * record: a filtered scan or a local frame has no exchange, while the
+    * [[StateTable.diff]] fallback aggregates and joins.
+    */
+  private def fromRecord(t: StateTable, from: String, to: String): Boolean =
+    !t.changedKeys(from, to).queryExecution.executedPlan.toString.contains("Exchange")
 
   test("first load appends all rows, within-batch duplicate keys kept") {
     val t = freshTable()
@@ -53,7 +83,10 @@ class StateTableSpec extends AnyFunSuite {
   test("re-run updates only the latest row per key, last batch row wins") {
     val t = freshTable()
     t.upsert(ordersBatch("orders_fixture.csv"))
-    t.upsert(ordersBatch("orders_rerun.csv"))
+    val loaded = t.read().get.collect().toSeq
+    // the re-run plus a no-op update: ord-003 re-sent with its values
+    t.upsert(ordersBatch("orders_rerun.csv").unionByName(
+      ordersBatch("orders_fixture.csv").filter(col("order_id") === "ord-003")))
     val cur = t.current().get.cache()
     // 6 original + 2 inserted rows for the new key ord-005 (dup kept)
     assert(cur.count() == 8)
@@ -67,6 +100,156 @@ class StateTableSpec extends AnyFunSuite {
     assert(!k.exists(r => r.getAs[String]("campaign") == "updated_camp"))
     // new key appended twice
     assert(cur.filter(col("order_id") === "ord-005").count() == 2)
+    // _seq marks what the re-run changed: the updated row and the
+    // inserts take a _seq above the first load's max; the no-op-updated
+    // ord-003, the untouched rows and the earlier ord-001 duplicate
+    // keep theirs
+    val seq = StateTable.SeqCol
+    val maxLoaded = loaded.map(_.getAs[Long](seq)).max
+    val after = t.read().get.collect().toSeq
+    val (changed, kept) = after.partition(_.getAs[Long](seq) > maxLoaded)
+    assert(changed.map(r => (r.getAs[String]("order_id"), r.getAs[Int]("quantity"))).toSet ==
+      Set(("ord-001", 9), ("ord-005", 1), ("ord-005", 2)))
+    assert(changed.size == 3)
+    assert(kept.toSet == loaded.filterNot(r =>
+      r.getAs[String]("order_id") == "ord-001" && r.getAs[Int]("quantity") == 2).toSet,
+      "a no-op-updated or untouched row changed, or lost its _seq")
+  }
+
+  test("changedKeys equals diff's key set on every upsert transition, from the change record") {
+    val keyCols = Schemas.ordersKey
+    // a first load over the CreateTable version, an LWW re-run with
+    // changed values and within-batch duplicates of an unseen key, and
+    // a re-run of the same file (no change on either side)
+    val t = freshTable()
+    graft.schemasync.SchemaSync.sync(spark, t, Schemas.orders)
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    val Seq(created, loaded, rerun, same) = t.history()
+    Seq((created, loaded, "first load"), (loaded, rerun, "LWW re-run"),
+      (rerun, same, "same-file re-run")).foreach { case (from, to, what) =>
+      assertChangedKeysExact(t, from, to, keyCols, what)
+      assert(fromRecord(t, from, to), s"$what: changedKeys fell back to diff")
+    }
+    assert(keySet(t.changedKeys(loaded, rerun)) == Set(
+      Row("ord-001", "prod1520#prod100011001100"), Row("ord-005", "prod9999#prod000000000001")))
+    assert(t.changedKeys(rerun, same).isEmpty)
+
+    // a batch aligned to a schema-synced store: the column the batch
+    // lacks lands as typed nulls
+    val declared = StructType(Schemas.orders.fields :+ StructField("note", StringType))
+    graft.schemasync.SchemaSync.sync(spark, t, declared)
+    val synced = t.currentVersion.get
+    t.upsert(ordersBatch("orders_fixture.csv").filter(col("order_id") =!= "ord-004")
+      .withColumn("amount", col("amount") + lit(1.0)))
+    val aligned = t.currentVersion.get
+    assertChangedKeysExact(t, synced, aligned, keyCols, "schema-aligned batch")
+    assert(fromRecord(t, synced, aligned), "schema-aligned batch: changedKeys fell back to diff")
+    assert(t.changedKeys(synced, aligned).count() == 4L)
+
+    // a compaction changes no row: an empty local frame
+    t.compact()
+    val compacted = t.currentVersion.get
+    assertChangedKeysExact(t, aligned, compacted, keyCols, "compaction")
+    assert(t.changedKeys(aligned, compacted).queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+    // every adjacent pair of the streamed q162/q165 flow store
+    val flow = graft.ingest.IngestQueries.q162BuildStreamedStore(
+      spark, TestSpark.testdata("0.001")).st
+    flow.history().sliding(2).foreach { case Seq(from, to) =>
+      assertChangedKeysExact(flow, from, to, keyCols, s"streamed $from -> $to")
+      assert(fromRecord(flow, from, to), s"streamed $from -> $to: changedKeys fell back to diff")
+    }
+  }
+
+  test("changedKeys falls back to diff for versions without a matching change record") {
+    val keyCols = Schemas.ordersKey
+    val t = freshTable()
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    // a raw overwrite: deletes ord-004, re-prices ord-002
+    t.overwrite(t.read().get.filter(col("order_id") =!= "ord-004")
+      .withColumn("amount", when(col("order_id") === "ord-002", col("amount") * 2)
+        .otherwise(col("amount"))))
+    // a SchemaSync AddColumn version
+    graft.schemasync.SchemaSync.sync(spark, t,
+      StructType(Schemas.orders.fields :+ StructField("note", StringType)))
+    val Seq(_, v2, raw, added) = t.history()
+    Seq((v2, raw, "raw overwrite"), (raw, added, "AddColumn")).foreach { case (from, to, what) =>
+      assertChangedKeysExact(t, from, to, keyCols, what)
+      assert(!fromRecord(t, from, to), s"$what: changedKeys answered from a record")
+    }
+    assert(keySet(t.changedKeys(v2, raw)).map(_.getString(0)) == Set("ord-002", "ord-004"))
+    // a non-adjacent pair: `from` two back from the upsert's recorded
+    // predecessor
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    val rerun = t.currentVersion.get
+    assertChangedKeysExact(t, raw, rerun, keyCols, "non-adjacent pair")
+    assert(!fromRecord(t, raw, rerun), "non-adjacent pair: changedKeys answered from a record")
+    assert(fromRecord(t, added, rerun))
+
+    // a version whose recorded predecessor is not `from`: `a` reads v1,
+    // `b` commits over v1 while `a` pins its batch, then `a` commits
+    // over b's version with a record naming v1
+    val a = freshTable()
+    a.upsert(ordersBatch("orders_fixture.csv"))
+    val b = new StateTable(spark, a.root, Schemas.ordersKey)
+    val gate = udf { (q: Int) =>
+      UpsertGate.started.countDown()
+      UpsertGate.release.await()
+      q
+    }
+    val held = Future(a.upsert(ordersBatch("orders_rerun.csv")
+      .withColumn("quantity", gate(col("quantity")))))
+    assert(UpsertGate.started.await(2, TimeUnit.MINUTES), "the held upsert never started")
+    b.upsert(ordersBatch("orders_fixture.csv").filter(col("order_id") === "ord-004")
+      .withColumn("amount", col("amount") * 2))
+    UpsertGate.release.countDown()
+    Await.result(held, 2.minutes)
+    val Seq(w1, w2, w3) = a.history()
+    assertChangedKeysExact(a, w2, w3, keyCols, "recorded predecessor is not from")
+    assert(!fromRecord(a, w2, w3))
+    // w3 lost b's re-price, so ord-004 is among its changes against w2
+    assert(keySet(a.changedKeys(w2, w3)).map(_.getString(0)) ==
+      Set("ord-001", "ord-004", "ord-005"))
+    assertChangedKeysExact(a, w1, w3, keyCols, "recorded predecessor")
+    assert(fromRecord(a, w1, w3))
+  }
+
+  test("an uncommitted version carrying a change record is never folded") {
+    val keyCols = Schemas.ordersKey
+    val t = freshTable()
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    val v1 = t.currentVersion.get
+    val reportRoot = Files.createTempDirectory("graft-report").toString
+    def report() = graft.ingest.IngestQueries.reportStoreHandle(spark, reportRoot)
+    def resume(): Int = graft.ingest.IngestQueries.resumeReportMaintenance(
+      new StateTable(spark, t.root, keyCols), report(), keyCols)
+    assert(resume() == 0)
+    // a crash between the change record and the log link: the version
+    // directory is complete, record included, but has no log entry
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    val orphan = t.currentVersion.get
+    val log = Paths.get(t.root, "_log")
+    graft.core.Fs.listDir(log).filter(e => Files.readString(e) == orphan).foreach(Files.delete)
+    assert(Files.exists(Paths.get(t.root, orphan, "_changes")))
+    assert(t.history() == Seq(v1))
+    assert(resume() == 0, "the walk folded an uncommitted version")
+    assert(graft.ingest.IngestQueries.reportWatermark(report(), v1) == v1)
+    // the next upsert commits past it, recording the committed version
+    // it read, and the walk folds exactly that one step
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    val Seq(_, v2) = t.history()
+    assert(v2 != orphan)
+    assert(fromRecord(t, v1, v2))
+    assert(resume() == 1)
+    val folded = report().current().get.drop("as_of")
+    val recomputed = graft.ingest.IngestQueries.productShape.report(t.current().get)
+      .select(folded.columns.map(col).toIndexedSeq: _*)
+    assert(folded.exceptAll(recomputed).isEmpty && recomputed.exceptAll(folded).isEmpty,
+      "the folded report differs from the recompute")
   }
 
   test("partitioned state: hive layout written, reads prune partitions") {
