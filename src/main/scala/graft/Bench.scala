@@ -168,29 +168,6 @@ object Bench {
     // consumer (watermark pair, per-store retention, onboarding)
     "q177_durable_join_resume")
 
-  /** Rotation classes for the compact-line budget policy (README
-    * "headline rotation"): when the result line approaches the
-    * driver's tail-capture budget, 3-round-stable entries move to an
-    * every-third-round spot-check tier instead of running each round.
-    * Class 1 = the SURVEY §2 report/upsert queries — stable since
-    * round 3, and a regression there would also break their oracle
-    * rows, so the per-round bench adds little marginal protection.
-    * Activation: SPARK_GRAFT_ROTATION_ROUND=<n> runs class members
-    * only when n % 3 == 0. The driver leaves it unset (full headline
-    * per round) until the line budget forces the policy; the
-    * mechanism itself is exercised by a dry run each round it changes.
-    */
-  val rotationClass1: Seq[String] = Seq(
-    "q00_pricing_summary", "q01_revenue_per_product", "q02_orders_monthly",
-    "q04_stock_status", "q11_upsert_lww")
-
-  /** The headline as the rotation policy sees it at driver round `n`:
-    * rotation-class members run on every third round only.
-    */
-  def rotatedHeadline(round: Int): Seq[String] =
-    if (round % 3 == 0) headline
-    else headline.filterNot(rotationClass1.contains)
-
   /** Execution order for a FULL run (no explicit args): heaviest
     * reference first, ties on stable headline position — see main() for
     * the round-11 forensics this encodes. Every headline entry HAS a
@@ -199,13 +176,12 @@ object Bench {
     * reference (e.g. 999 — which also suppresses its retime pass), and
     * the descending sort gives it the quietest first minutes for free;
     * the measured minimum replaces the provisional value in the same
-    * round (the q156/q157 round-12 convention). Orthogonal to rotation:
-    * rotation decides MEMBERSHIP, this decides sequence. Guarded by
+    * round (the q156/q157 round-12 convention). Guarded by
     * BenchOrderSpec — the execution order shapes the judged official
     * record, so it must not drift silently.
     */
-  private[graft] def fullRunOrder(active: Seq[String]): Seq[String] =
-    active.zipWithIndex.sortBy { case (n, i) =>
+  private[graft] def fullRunOrder(names: Seq[String]): Seq[String] =
+    names.zipWithIndex.sortBy { case (n, i) =>
       (-reference.getOrElse(n, sys.error(s"no reference for $n")), i)
     }.map(_._1)
 
@@ -556,8 +532,6 @@ object Bench {
     // discard a full ~65-query measurement over a naming slip.
     require(headline.map(_.takeWhile(_ != '_')).distinct.size == headline.size,
       "headline qNNN prefixes must be unique for the compact result line")
-    require(rotationClass1.forall(headline.contains),
-      "rotationClass1 must be a subset of headline")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -595,29 +569,10 @@ object Bench {
     // fast — silently dropping a typo would print a bogus 0-second run.
     require(args.forall(headline.contains),
       s"unknown headline queries: ${args.filterNot(headline.contains).mkString(", ")}")
-    // rotation policy entry point: unset (the driver's mode) = full
-    // headline; set = class members only on every third round. The env
-    // var is parsed fail-fast with its name in the message — a bare
-    // toInt NumberFormatException before any measurement would give no
-    // hint which knob was malformed.
-    val active = sys.env.get("SPARK_GRAFT_ROTATION_ROUND").map { r =>
-      val n = try r.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_ROTATION_ROUND must be an integer round number, got '$r'")
-      }
-      rotatedHeadline(n)
-    }.getOrElse(headline)
-    if (args.isEmpty && active.size != headline.size)
-      System.err.println(s"[bench] rotation active: ${headline.size - active.size} " +
-        s"class-1 entries deferred to the spot-check round")
-    // explicit args OVERRIDE rotation: a by-name request is a local
-    // iteration aid and must never be silently dropped because the
-    // requested query happens to sit in a deferred rotation class (the
-    // fail-fast require above already vetted every name against the
-    // full headline). ARG ORDER IS PRESERVED — the targeted-run
-    // protocol lists the biggest ceilings first so they hit the quiet
-    // window before external load ramps; re-sorting into headline
-    // order would defeat exactly that.
+    // ARG ORDER IS PRESERVED — the targeted-run protocol lists the
+    // biggest ceilings first so they hit the quiet window before
+    // external load ramps; re-sorting into headline order would defeat
+    // exactly that.
     //
     // The FULL run executes heaviest-reference-first for the same
     // reason (round-11 forensics: ascending-qNN order put ~45 s of
@@ -627,12 +582,11 @@ object Bench {
     // 1.15×→1.40× on window placement alone while the code got
     // faster). Descending reference(name) puts the most expensive,
     // most-retime-prone queries in the first quiet minutes; the cheap
-    // sub-second tail is noise-robust anywhere. Ordering is orthogonal
-    // to rotation (rotation decides MEMBERSHIP, this decides sequence),
-    // and ties break on the stable headline position so the order is
-    // deterministic round to round (introduction entries ride a high
-    // provisional reference to the front — see fullRunOrder's doc).
-    val wanted = if (args.isEmpty) fullRunOrder(active) else args.toIndexedSeq.distinct
+    // sub-second tail is noise-robust anywhere. Ties break on the
+    // stable headline position so the order is deterministic round to
+    // round (introduction entries ride a high provisional reference to
+    // the front — see fullRunOrder's doc).
+    val wanted = if (args.isEmpty) fullRunOrder(headline) else args.toIndexedSeq.distinct
     // Untimed warmup pass: run every selected query once AT THE TIMED
     // SCALE before any measurement. This warms three cost classes the
     // timed samples must not carry: JVM JIT + codegen (first-call
@@ -808,16 +762,15 @@ object Bench {
     // with the retimed names on stderr for the performance notes.
     // Round 17 trimmed 3 → 2 decimals (the r16 verdict's forced
     // decision: the 3-decimal line measured 1,395–1,398/1,400 at 102
-    // entries — one addition or one stormed window away from arming
-    // rotation — and the 3rd decimal is far below this VM's
+    // entries, and the 3rd decimal is far below this VM's
     // quiet-to-storm variance, so the trim costs zero information and
-    // buys ~100 chars; rotation stays the unarmed fallback). Full
+    // buys ~100 chars). Full
     // 3-decimal samples remain in bench_diag.json; floor re-bases keep
     // citing bench_diag/targeted runs, which are unaffected.
     // Trailing-zero trim (round 18): at 110 entries the plain
     // 2-decimal line measures ~1,395/1,400; stripping "…0"/"…00"
     // tails buys ~13 chars at zero information cost (bench_diag keeps
-    // the 3-decimal samples), keeping rotation the unarmed fallback.
+    // the 3-decimal samples).
     // "10.00" → "10", "0.50" → "0.5", "-1.00" → "-1" — all valid JSON
     // numbers.
     def fmt(v: Double): String = {

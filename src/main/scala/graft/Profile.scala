@@ -87,7 +87,9 @@ object Profile {
       done.foreach { j =>
         val d = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
         val off = (j.start - t0Job) / 1e3
-        val tag = if (j.desc.nonEmpty) j.desc else j.site
+        // the job description (a lifecycle step's `<prefix>/<step>`)
+        // next to the call site
+        val tag = if (j.desc.nonEmpty) s"${j.desc}  ${j.site}" else j.site
         println(f"[profile]   @$off%7.3fs ${d}%7.3fs  job=${j.id}%4d  $tag")
       }
     }

@@ -246,56 +246,31 @@ object IngestQueries {
     df => df.filter(col("k") % 2 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * lit(1.1))
 
-  /** Stage both flow batches to invocation dirs under `prefix` —
+  /** The steps staging both flow batches into dirs `b1` and `b2` —
     * shared by the batch and streamed flows so the two legs always
     * ingest identically-derived landing dirs.
     */
-  private def stageFlowBatches(s: SparkSession, dir: String,
-      prefix: String): (String, String) = {
-    val dirA = graft.core.Staging.invocationDir(s"${prefix}_b1", dir)
-    val dirB = graft.core.Staging.invocationDir(s"${prefix}_b2", dir)
-    // disjoint output dirs over one immutable source: overlap the two
-    // staging jobs (guide §2.6) — each is a handful of tasks, so the
-    // second back-fills the first's tail instead of waiting on it
-    graft.core.Par.both(
-      stageOrdersCsv(s, dir, dirA, q161Batch1),
-      stageOrdersCsv(s, dir, dirB, q161Batch2)): Unit
-    (dirA, dirB)
-  }
+  private def flowBatches(lc: Lifecycle): Seq[Lifecycle.Step[Unit]] =
+    Seq(lc.stageOrders("b1", q161Batch1), lc.stageOrders("b2", q161Batch2))
 
-  /** Fresh store synced to a declared schema BEFORE any ingest (R4
-    * sequencing; the CreateTable branch is require-pinned). ONE
-    * definition for every flow leg — the sync-before-ingest
-    * precondition must be the same certificate in q161/q162 (orders)
-    * and q163 (inventories), not copies that can drift.
-    */
-  private def freshSyncedStore(s: SparkSession, dir: String,
-      prefix: String, label: String,
-      schema: org.apache.spark.sql.types.StructType = graft.core.Schemas.orders,
-      key: Seq[String] = graft.core.Schemas.ordersKey): graft.state.StateTable = {
-    val st = new graft.state.StateTable(s,
-      graft.core.Staging.invocationDir(prefix, dir), key)
-    val changes = graft.schemasync.SchemaSync.sync(s, st, schema)
-    require(changes == Seq(graft.schemasync.SchemaSync.CreateTable(schema)),
-      s"$label precondition: fresh-store sync applied $changes instead of CreateTable")
-    st
-  }
+  /** Creates the flow's orders store `orders`. */
+  private def ordersStore(lc: Lifecycle): Lifecycle.Step[Unit] =
+    lc.create("orders", graft.core.Schemas.orders, graft.core.Schemas.ordersKey)
+
+  /** Creates the inventories store `inv`. */
+  private def invStore(lc: Lifecycle): Lifecycle.Step[Unit] =
+    lc.create("inv", graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey)
 
   /** Stage both landing dirs and run the full flow (sync → first load →
     * re-run) through a fresh store; returns the store with its three
     * retained versions (empty CreateTable, first load, re-run). Shared
     * by the judged query and the lifecycle guard.
     */
-  private[graft] def q161BuildStore(s: SparkSession, dir: String): graft.state.StateTable = {
-    // the stagings touch only their landing dirs, the sync only the
-    // fresh state root — disjoint effects, overlapped (guide §2.6);
-    // the first upsert needs both, so it stays after the join
-    val ((dirA, dirB), st) = graft.core.Par.both(
-      stageFlowBatches(s, dir, "graft_q161"),
-      freshSyncedStore(s, dir, "graft_q161_state", "q161"))
-    st.upsert(Ingest.readOrdersCsv(s, dirA)) // first load: append, dups kept
-    st.upsert(Ingest.readOrdersCsv(s, dirB)) // re-run: LWW + unseen appends
-    st
+  private[graft] def q161BuildStore(lc: Lifecycle): graft.state.StateTable = {
+    lc.par(flowBatches(lc) :+ ordersStore(lc): _*)
+    lc.run(lc.load("orders", Ingest.readOrdersCsv, "b1")) // first load: append, dups kept
+    lc.run(lc.load("orders", Ingest.readOrdersCsv, "b2")) // re-run: LWW + unseen appends
+    lc.store("orders")
   }
 
   /** The flow's report rollup over a store's cleaned contents — shared
@@ -371,7 +346,7 @@ object IngestQueries {
 
   val q161ReferenceFlowE2e: QuerySpec = QuerySpec(
     (s, dir) => {
-      val st = q161BuildStore(s, dir)
+      val st = q161BuildStore(new Lifecycle(s, dir, "q161"))
       val versions = st.history().size.toLong
       flowRollup(st.current().get)
         .withColumn("n_versions", lit(versions))
@@ -382,13 +357,19 @@ object IngestQueries {
   /** The streamed flow's handles: the store plus a re-drain thunk over
     * the same landing dir + checkpoint, so IngestCertSpec can prove the
     * exactly-once file log covers every landed file (a third drain with
-    * nothing new must not write a version). `landing` is the live
-    * landing directory itself, so a certificate can LAND MORE FILES
-    * after the build and drain them through the same checkpoint
-    * (q176's late-arriving batch).
+    * nothing new must not write a version).
     */
   private[graft] final case class StreamedFlow(
-      st: graft.state.StateTable, drain: () => Unit, landing: String)
+      st: graft.state.StateTable, drain: () => Unit)
+
+  /** One `AvailableNow` drain of the streamed flow's landing dir `b1`
+    * into store `orders` under checkpoint `ckpt`. A certificate can land
+    * more files in `b1` after the build and drain them through the same
+    * checkpoint (q176's late-arriving batch).
+    */
+  private def drain(lc: Lifecycle): Unit = lc.run(lc.step("drain")(
+    graft.streaming.StreamingIngest.runOrdersIngest(lc.spark, lc.dir("b1"),
+      lc.store("orders"), lc.dir("ckpt")).awaitTermination()))
 
   /** Move a staged dir's part files into a landing dir under fresh
     * `tag`-prefixed names — the file source keys its processed-file log
@@ -406,8 +387,8 @@ object IngestQueries {
       }
 
   /** The streamed reference flow, shared by q162 (parity certificate)
-    * and q165 (maintained report): stage both batches, sync a fresh
-    * store, drain the landing dir twice under ONE checkpoint — phase 1
+    * and q165–q176 (maintained reports): stage both batches, create
+    * the `orders` store, drain the landing dir twice under ONE checkpoint — phase 1
     * the first-load files, phase 2 the re-run files landed into the
     * SAME directory. `afterDrain` fires after each drain with the store
     * (q165 folds its maintenance step there); the final history require
@@ -422,37 +403,29 @@ object IngestQueries {
     * guard spec, which carries the one-version-per-drain assumption
     * this require can then no longer see.
     */
-  private def buildStreamedFlowStore(s: SparkSession, dir: String,
-      prefix: String, label: String,
+  private def buildStreamedFlowStore(lc: Lifecycle,
       afterDrain: graft.state.StateTable => Unit = _ => (),
       finalVersions: Int = 3): StreamedFlow = {
     // the phase-1 files stage directly into the landing dir; phase-2
-    // files stage aside and land between the drains. Stagings and the
-    // store sync touch disjoint dirs/roots — overlapped (guide §2.6);
-    // the first drain needs both, so it stays after the join
-    val ((landing, stageB), st) = graft.core.Par.both(
-      stageFlowBatches(s, dir, prefix),
-      freshSyncedStore(s, dir, s"${prefix}_state", label))
-    val ckpt = graft.core.Staging.invocationDir(s"${prefix}_ckpt", dir)
-    def drain(): Unit =
-      graft.streaming.StreamingIngest.runOrdersIngest(s, landing, st, ckpt)
-        .awaitTermination()
-    drain() // phase 1: the first-load files
+    // files stage aside and land between the drains
+    lc.par(flowBatches(lc) :+ ordersStore(lc): _*)
+    val st = lc.store("orders")
+    drain(lc) // phase 1: the first-load files
     afterDrain(st)
     // phase 2: the re-run files land in the SAME directory (fresh names;
     // the file source keys its processed-log on path)
-    landStagedFiles(stageB, landing, "rerun")
-    drain() // phase 2: only the newly-landed files
+    landStagedFiles(lc.dir("b2"), lc.dir("b1"), "rerun")
+    drain(lc) // phase 2: only the newly-landed files
     afterDrain(st)
     require(st.history().size == finalVersions,
-      s"$label precondition: expected $finalVersions retained version(s) " +
+      s"${lc.prefix} precondition: expected $finalVersions retained version(s) " +
         s"after both drains, got ${st.history().size} — trigger chunking, " +
         "the checkpoint file log, or the hook's retention drifted")
-    StreamedFlow(st, () => drain(), landing)
+    StreamedFlow(st, () => drain(lc))
   }
 
-  private[graft] def q162BuildStreamedStore(s: SparkSession, dir: String): StreamedFlow =
-    buildStreamedFlowStore(s, dir, "graft_q162", "q162")
+  private[graft] def q162BuildStreamedStore(lc: Lifecycle): StreamedFlow =
+    buildStreamedFlowStore(lc)
 
   /** q162: the STREAMING twin of q161 — the reference's "re-run when a
     * new file lands" semantics (`main.py:29–32`) as a file-source
@@ -507,8 +480,8 @@ object IngestQueries {
 
   val q162StreamingFlowE2e: QuerySpec = QuerySpec(
     (s, dir) => {
-      val streamed = q162BuildStreamedStore(s, dir).st
-      val batch = q161BuildStore(s, dir)
+      val streamed = q162BuildStreamedStore(new Lifecycle(s, dir, "q162")).st
+      val batch = q161BuildStore(new Lifecycle(s, dir, "q162_batch"))
       val a = streamed.current().get
       val b = batch.current().get
       val versions = streamed.history().size.toLong
@@ -595,20 +568,12 @@ object IngestQueries {
     * sync CreateTable on the SIMPLE product_id key, first load, re-run.
     * Shared by the judged query and the lifecycle guard.
     */
-  private[graft] def q163BuildInvStore(s: SparkSession, dir: String): graft.state.StateTable = {
-    val dirA = graft.core.Staging.invocationDir("graft_q163_inv_b1", dir)
-    val dirB = graft.core.Staging.invocationDir("graft_q163_inv_b2", dir)
-    // two disjoint staging dirs + a disjoint store root — overlap all
-    // three construction legs (guide §2.6; the first upsert joins them)
-    val (_, st) = graft.core.Par.both(
-      graft.core.Par.both(
-        stageInventoriesCsv(s, dir, dirA, q163InvBatch1),
-        stageInventoriesCsv(s, dir, dirB, q163InvBatch2)),
-      freshSyncedStore(s, dir, "graft_q163_inv_state", "q163",
-        graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
-    st.upsert(Ingest.readInventoriesCsv(s, dirA))
-    st.upsert(Ingest.readInventoriesCsv(s, dirB))
-    st
+  private[graft] def q163BuildInvStore(lc: Lifecycle): graft.state.StateTable = {
+    lc.par(lc.stageInventories("inv_b1", q163InvBatch1),
+      lc.stageInventories("inv_b2", q163InvBatch2), invStore(lc))
+    lc.run(lc.load("inv", Ingest.readInventoriesCsv, "inv_b1"))
+    lc.run(lc.load("inv", Ingest.readInventoriesCsv, "inv_b2"))
+    lc.store("inv")
   }
 
   /** q163: the store-to-store report certificate — the reference's
@@ -642,11 +607,11 @@ object IngestQueries {
     */
   val q163StoreReportCert: QuerySpec = QuerySpec(
     (s, dir) => {
-      // the two store builds touch disjoint staging dirs and roots —
-      // overlap them (guide §2.6); each leg's internal order (sync →
-      // first load → re-run) is untouched
-      val (ordersSt, invSt) = graft.core.Par.both(
-        q161BuildStore(s, dir), q163BuildInvStore(s, dir))
+      val lc = new Lifecycle(s, dir, "q163")
+      val Seq(ordersSt, invSt) = lc.par(
+        lc.step("orders_flow", Seq("b1", "b2", "orders").map(lc.dir): _*)(q161BuildStore(lc)),
+        lc.step("inv_flow", Seq("inv_b1", "inv_b2", "inv").map(lc.dir): _*)(
+          q163BuildInvStore(lc)))
       require(invSt.history().size == 3,
         s"q163 precondition: expected CreateTable + 2 load versions on " +
           s"the inventories store, got ${invSt.history().size}")
@@ -806,6 +771,33 @@ object IngestQueries {
   private[graft] val productShape: MaintainedShape =
     MaintainedShape(productContrib, Seq("product_id"),
       Seq("n_rows", "amount_cents"))
+
+  /** The judged frame of a maintained report: its rows, then `counts`
+    * as constant long columns in order, then the per-group `equiv_diff`
+    * against the recompute off `contents` (grouped by the shape's first
+    * group column), ordered by the group columns. Inner join: the diff
+    * groups over the UNION of both report legs, a superset of the
+    * maintained report's groups by construction.
+    */
+  private def maintainedCert(shape: MaintainedShape, maintained: DataFrame,
+      contents: DataFrame, counts: (String, Long)*): DataFrame = {
+    val key = shape.groupCols.head
+    counts.foldLeft(maintained) { case (df, (c, n)) => df.withColumn(c, lit(n)) }
+      .join(multisetEquivDiff(maintained, shape.report(contents), key), Seq(key))
+      .orderBy(shape.groupCols.map(col): _*)
+  }
+
+  /** The oracle of a maintained [[productShape]] report over the flow
+    * store: the weighted-arms replay per product, then `counts` as
+    * constant columns in order, then `equiv_diff = 0`.
+    */
+  private def productReportOracle(counts: (String, Long)*): String =
+    s"""$flowStoreReplaySql
+       |SELECT cast(o_custkey AS varchar) AS product_id,
+       |  cast(sum(w) AS bigint) AS n_rows,
+       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
+       |${counts.map { case (c, n) => s"  cast($n AS bigint) AS $c,\n" }.mkString}  cast(0 AS bigint) AS equiv_diff
+       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin
 
   /** One fold step a consumer applied: source store `source` advanced
     * from watermark `from(source)` to `to(source)` with every other
@@ -1003,21 +995,13 @@ object IngestQueries {
     */
   val q164IncrementalReportCert: QuerySpec = QuerySpec(
     (s, dir) => {
-      val st = q161BuildStore(s, dir)
-      val pinned = new CarriedReport(productShape, Seq(Some(st.history()(1))))
-        .advance(Seq(st)).last.report
-      val equiv = multisetEquivDiff(pinned, productShape.report(st.current().get),
-        "product_id")
-      // inner join: equiv groups over the UNION of both report legs, a
-      // superset of the maintained report's products by construction
-      pinned.join(equiv, Seq("product_id")).orderBy(col("product_id"))
+      val lc = new Lifecycle(s, dir, "q164")
+      val st = q161BuildStore(lc)
+      val pinned = lc.run(lc.step("fold")(
+        new CarriedReport(productShape, Seq(Some(st.history()(1)))).advance(Seq(st))))
+      maintainedCert(productShape, pinned.last.report, st.current().get)
     },
-    s"""$flowStoreReplaySql
-       |SELECT cast(o_custkey AS varchar) AS product_id,
-       |  cast(sum(w) AS bigint) AS n_rows,
-       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
-       |  cast(0 AS bigint) AS equiv_diff
-       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
+    productReportOracle())
 
   /** The maintained-stream handles: the drained store and the carried
     * consumer's fold steps (keys and reports pinned) — kept so
@@ -1034,11 +1018,10 @@ object IngestQueries {
     * product-report consumer advanced after each drained micro-batch,
     * from the CreateTable version on.
     */
-  private[graft] def q165BuildMaintainedStream(
-      s: SparkSession, dir: String): MaintainedStream = {
+  private[graft] def q165BuildMaintainedStream(lc: Lifecycle): MaintainedStream = {
     val consumer = new CarriedReport(productShape, Seq(None))
-    val flow = buildStreamedFlowStore(s, dir, "graft_q165", "q165",
-      st => consumer.advance(Seq(st)): Unit)
+    val flow = buildStreamedFlowStore(lc,
+      st => lc.run(lc.step("fold")(consumer.advance(Seq(st)))): Unit)
     MaintainedStream(flow.st, consumer.steps.toSeq)
   }
 
@@ -1074,23 +1057,11 @@ object IngestQueries {
     */
   val q165StreamingReportMaintCert: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q165BuildMaintainedStream(s, dir)
-      val recompute = productShape.report(m.st.current().get)
-      val equiv = multisetEquivDiff(m.report, recompute, "product_id")
-      // inner join: equiv groups over the UNION of both report legs, a
-      // superset of the maintained report's products by construction
-      m.report
-        .withColumn("n_steps", lit(m.steps.size.toLong))
-        .join(equiv, Seq("product_id"))
-        .orderBy(col("product_id"))
+      val m = q165BuildMaintainedStream(new Lifecycle(s, dir, "q165"))
+      maintainedCert(productShape, m.report, m.st.current().get,
+        "n_steps" -> m.steps.size.toLong)
     },
-    s"""$flowStoreReplaySql
-       |SELECT cast(o_custkey AS varchar) AS product_id,
-       |  cast(sum(w) AS bigint) AS n_rows,
-       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
-       |  cast(2 AS bigint) AS n_steps,
-       |  cast(0 AS bigint) AS equiv_diff
-       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
+    productReportOracle("n_steps" -> 2))
 
   /** q166: the A2 report (orders per product per month,
     * `README.md:79–92` over `flows/data_ingestion.py:86–91` data) off
@@ -1108,7 +1079,7 @@ object IngestQueries {
     */
   val q166StoreMonthlyCert: QuerySpec = QuerySpec(
     (s, dir) => {
-      val st = q161BuildStore(s, dir)
+      val st = q161BuildStore(new Lifecycle(s, dir, "q166"))
       st.current().get
         .groupBy(col("product_id"),
           year(col("date_time")).as("sale_year"),
@@ -1190,32 +1161,38 @@ object IngestQueries {
     resumeMaintenance(shape, Seq(ordersSt), reportSt).size
   }
 
+  /** Retention bounded by the MINIMUM consumer watermark: each report's
+    * durable watermark is re-read through a fresh handle
+    * ([[reportWatermark]] — an empty report holds the vacuum at the
+    * oldest version), the reads overlapped, then the orders store
+    * vacuums below the minimum; logs the reclaimed count under `step`.
+    */
+  private def retain(lc: Lifecycle, step: String,
+      reports: Seq[(String, MaintainedShape)]): Unit = {
+    val orders = lc.store("orders")
+    val oldest = orders.history().head
+    val wms = lc.par(reports.map { case (r, shape) =>
+      // opening a report handle may create its store: it writes that root
+      lc.step(s"watermark_$r", lc.dir(r))(reportWatermark(lc.report(r, shape), oldest))
+    }: _*)
+    lc.log(step, orders.vacuumBefore(wms.min).size.toLong)
+  }
+
+  /** The durable fold of the orders store into [[productShape]] report
+    * `report`, as q167 runs it after each drain.
+    */
+  private def productFold(lc: Lifecycle, name: String,
+      report: String): Lifecycle.Step[Seq[FoldStep]] =
+    lc.resume(name, productShape, Seq("orders"), report)
+
   /** q167's construction: the q162 streamed flow with the maintenance
     * persisted DURABLY per drain, and every fold performed by a
     * FRESH-HANDLE "process" that recovers all its state from disk —
     * the restart realism q165's in-memory carried report cannot give.
-    * Returns the roots (the durable state) plus per-drain applied-step
-    * counts for the guards.
+    * Logs each drain's applied-step count under `fold`.
     */
-  private[graft] final case class DurableFlow(
-      ordersRoot: String, reportRoot: String, foldSteps: Seq[Int])
-
-  private[graft] def q167BuildDurableFlow(
-      s: SparkSession, dir: String): DurableFlow = {
-    val reportRoot = graft.core.Staging.invocationDir("graft_q167_report", dir)
-    val steps = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val flow = buildStreamedFlowStore(s, dir, "graft_q167", "q167", st => {
-      // restart realism: NEW handles from the durable roots on every
-      // drain — the fold may use nothing the previous "process" held
-      // in memory
-      val orders = new graft.state.StateTable(s, st.root,
-        graft.core.Schemas.ordersKey)
-      val report = reportStoreHandle(s, reportRoot)
-      steps += resumeReportMaintenance(orders, report,
-        graft.core.Schemas.ordersKey)
-    })
-    DurableFlow(flow.st.root, reportRoot, steps.toSeq)
-  }
+  private[graft] def q167BuildDurableFlow(lc: Lifecycle): Unit =
+    buildStreamedFlowStore(lc, _ => lc.run(productFold(lc, "fold", "report")): Unit): Unit
 
   /** q167: durable, RESUMABLE report maintenance — the
     * process-failure story. q165 judges the maintained report as a
@@ -1248,41 +1225,20 @@ object IngestQueries {
     */
   val q167DurableReportResume: QuerySpec = QuerySpec(
     (s, dir) => {
-      val flow = q167BuildDurableFlow(s, dir)
-      val ordersSt = new graft.state.StateTable(s, flow.ordersRoot,
-        graft.core.Schemas.ordersKey)
-      val reportSt = reportStoreHandle(s, flow.reportRoot)
-      val maintained = reportSt.current().get.drop("as_of")
-      val recompute = productShape.report(ordersSt.current().get)
-      val equiv = multisetEquivDiff(maintained, recompute, "product_id")
-      maintained
-        .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
-        .withColumn("n_report_versions", lit(reportSt.history().size.toLong))
-        .join(equiv, Seq("product_id"))
-        .orderBy(col("product_id"))
+      val lc = new Lifecycle(s, dir, "q167")
+      q167BuildDurableFlow(lc)
+      val reportSt = lc.report("report", productShape)
+      maintainedCert(productShape, reportSt.current().get.drop("as_of"),
+        lc.store("orders").current().get,
+        "n_steps" -> lc.counts("fold").sum,
+        "n_report_versions" -> reportSt.history().size.toLong)
     },
-    s"""$flowStoreReplaySql
-       |SELECT cast(o_custkey AS varchar) AS product_id,
-       |  cast(sum(w) AS bigint) AS n_rows,
-       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
-       |  cast(2 AS bigint) AS n_steps,
-       |  cast(3 AS bigint) AS n_report_versions,
-       |  cast(0 AS bigint) AS equiv_diff
-       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
+    productReportOracle("n_steps" -> 2, "n_report_versions" -> 3))
 
   // ------------------------------------------------------------------
   // q168: retention running NEXT TO durable maintenance — vacuum
   // bounded by the consumer watermark, judged together with resume
   // ------------------------------------------------------------------
-
-  /** q168's durable state plus the per-drain retention evidence: fold
-    * counts (q167's shape) and the version names each mid-loop vacuum
-    * reclaimed — kept so the guard spec can pin that retention bit on
-    * EVERY drain, not just in aggregate.
-    */
-  private[graft] final case class RetainedFlow(
-      ordersRoot: String, reportRoot: String, foldSteps: Seq[Int],
-      reclaimed: Seq[Seq[String]])
 
   /** q167's durable flow with the production retention policy running
     * inside the loop: after each fresh-handle fold, vacuum the orders
@@ -1291,31 +1247,19 @@ object IngestQueries {
     * trusted from memory (the same restart realism as the fold). Every
     * version a resume could still fold from survives by construction
     * ([[graft.state.StateTable.vacuumBefore]] keeps `≥ watermark`),
-    * while fully-absorbed history is reclaimed immediately.
+    * while fully-absorbed history is reclaimed immediately. Logs per
+    * drain the fold's step count (`fold`) and the reclaimed count
+    * (`reclaimed`).
     */
-  private[graft] def q168BuildRetainedFlow(
-      s: SparkSession, dir: String): RetainedFlow = {
-    val reportRoot = graft.core.Staging.invocationDir("graft_q168_report", dir)
-    val steps = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val reclaimed = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    val flow = buildStreamedFlowStore(s, dir, "graft_q168", "q168", st => {
-      val orders = new graft.state.StateTable(s, st.root,
-        graft.core.Schemas.ordersKey)
-      val report = reportStoreHandle(s, reportRoot)
-      steps += resumeReportMaintenance(orders, report,
-        graft.core.Schemas.ordersKey)
-      // retention, bounded by the consumer: the report's durable
-      // watermark, re-read from disk ([[reportWatermark]] — empty
-      // report ⇒ oldest version ⇒ the vacuum reclaims nothing)
-      reclaimed += orders.vacuumBefore(
-        reportWatermark(report, orders.history().head))
+  private[graft] def q168BuildRetainedFlow(lc: Lifecycle): Unit =
+    buildStreamedFlowStore(lc, _ => {
+      lc.run(productFold(lc, "fold", "report"))
+      retain(lc, "reclaimed", Seq("report" -> productShape))
     },
       // continuous retention converges the store to the single current
       // version: each vacuum reclaims everything below that drain's
       // fold watermark (see the builder's finalVersions note)
-      finalVersions = 1)
-    RetainedFlow(flow.st.root, reportRoot, steps.toSeq, reclaimed.toSeq)
-  }
+      finalVersions = 1): Unit
 
   /** q168: retention and resumable maintenance judged TOGETHER — the
     * store-lifecycle completion of q167. q158 proves vacuum on a
@@ -1355,29 +1299,17 @@ object IngestQueries {
     */
   val q168RetentionSafeResume: QuerySpec = QuerySpec(
     (s, dir) => {
-      val flow = q168BuildRetainedFlow(s, dir)
-      val ordersSt = new graft.state.StateTable(s, flow.ordersRoot,
-        graft.core.Schemas.ordersKey)
-      val reportSt = reportStoreHandle(s, flow.reportRoot)
-      val maintained = reportSt.current().get.drop("as_of")
-      val recompute = productShape.report(ordersSt.current().get)
-      val equiv = multisetEquivDiff(maintained, recompute, "product_id")
-      maintained
-        .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
-        .withColumn("n_reclaimed", lit(flow.reclaimed.map(_.size).sum.toLong))
-        .withColumn("n_retained", lit(ordersSt.history().size.toLong))
-        .join(equiv, Seq("product_id"))
-        .orderBy(col("product_id"))
+      val lc = new Lifecycle(s, dir, "q168")
+      q168BuildRetainedFlow(lc)
+      val ordersSt = lc.store("orders")
+      maintainedCert(productShape,
+        lc.report("report", productShape).current().get.drop("as_of"),
+        ordersSt.current().get,
+        "n_steps" -> lc.counts("fold").sum,
+        "n_reclaimed" -> lc.counts("reclaimed").sum,
+        "n_retained" -> ordersSt.history().size.toLong)
     },
-    s"""$flowStoreReplaySql
-       |SELECT cast(o_custkey AS varchar) AS product_id,
-       |  cast(sum(w) AS bigint) AS n_rows,
-       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
-       |  cast(2 AS bigint) AS n_steps,
-       |  cast(2 AS bigint) AS n_reclaimed,
-       |  cast(1 AS bigint) AS n_retained,
-       |  cast(0 AS bigint) AS equiv_diff
-       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
+    productReportOracle("n_steps" -> 2, "n_reclaimed" -> 2, "n_retained" -> 1))
 
   // ------------------------------------------------------------------
   // q169: maintained TOP-SELLER report — the MIN/MAX-shaped aggregate
@@ -1478,12 +1410,11 @@ object IngestQueries {
   /** q169's construction: the q165 drain loop with a carried
     * [[categoryShape]] consumer, and one [[topStep]] per fold step.
     */
-  private[graft] def q169BuildMaintainedTop(
-      s: SparkSession, dir: String): MaintainedTopStream = {
+  private[graft] def q169BuildMaintainedTop(lc: Lifecycle): MaintainedTopStream = {
     val lvl1 = new CarriedReport(categoryShape, Seq(None))
     val steps = scala.collection.mutable.ArrayBuffer.empty[TopStep]
-    val flow = buildStreamedFlowStore(s, dir, "graft_q169", "q169", st =>
-      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption)))
+    val flow = buildStreamedFlowStore(lc, st => lc.run(lc.step("fold")(
+      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption)))))
     MaintainedTopStream(flow.st, steps.toSeq)
   }
 
@@ -1527,7 +1458,7 @@ object IngestQueries {
     */
   val q169MaintainedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q169BuildMaintainedTop(s, dir)
+      val m = q169BuildMaintainedTop(new Lifecycle(s, dir, "q169"))
       val lvl1Re = categoryShape.report(m.st.current().get)
       val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
         .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
@@ -1591,14 +1522,13 @@ object IngestQueries {
     * and scoped to ONE group so the touched-group pruning is a proper
     * subset the guards and the judged count can SEE.
     */
-  private[graft] def q170BuildPurgedTop(
-      s: SparkSession, dir: String): PurgedTopStream = {
+  private[graft] def q170BuildPurgedTop(lc: Lifecycle): PurgedTopStream = {
     val lvl1 = new CarriedReport(categoryShape, Seq(None))
     val steps = scala.collection.mutable.ArrayBuffer.empty[TopStep]
-    def fold(st: graft.state.StateTable): Unit =
-      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption))
+    def fold(st: graft.state.StateTable): Unit = lc.run(lc.step("fold")(
+      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption))))
     var victim = ("", "")
-    val flow = buildStreamedFlowStore(s, dir, "graft_q170", "q170", st => {
+    val flow = buildStreamedFlowStore(lc, st => {
       fold(st)
       if (steps.size == 2) {
         // the purge victim: the pre-purge leader of the first channel
@@ -1614,9 +1544,9 @@ object IngestQueries {
             .limit(2).count() == 2L,
           s"q170 precondition: group ${victim._1} has no runner-up — " +
             "the dethronement certificate would be vacuous")
-        st.overwrite(st.read().get.filter(
+        lc.run(lc.step("purge")(st.overwrite(st.read().get.filter(
           !(col("channel_group") === victim._1 &&
-            col("product_id") === victim._2)))
+            col("product_id") === victim._2)))))
         fold(st)
       }
     }, finalVersions = 4)
@@ -1667,7 +1597,7 @@ object IngestQueries {
     */
   val q170PurgedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q170BuildPurgedTop(s, dir).m
+      val m = q170BuildPurgedTop(new Lifecycle(s, dir, "q170")).m
       val lvl1Re = categoryShape.report(m.st.current().get)
       val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
         .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
@@ -1728,14 +1658,6 @@ object IngestQueries {
   // catching up releases exactly the absorbed history (judged)
   // ------------------------------------------------------------------
 
-  /** q171's durable state plus the per-phase evidence: consumer A's
-    * per-drain fold counts, consumer B's one catch-up count, and the
-    * version names each phase's bounded vacuum reclaimed.
-    */
-  private[graft] final case class MultiConsumerFlow(
-      ordersRoot: String, aRoot: String, bRoot: String,
-      aSteps: Seq[Int], bCatchupSteps: Int, reclaimed: Seq[Seq[String]])
-
   /** q168's retained flow with TWO durable consumers at STAGGERED
     * paces over one orders store: consumer A (the [[productShape]]
     * report) folds after every drain; consumer B (the
@@ -1745,47 +1667,24 @@ object IngestQueries {
     * Retention runs after each phase bounded by the MINIMUM consumer
     * watermark — [[reportWatermark]]'s empty-report fallback makes the
     * un-started laggard hold the vacuum at the store's oldest version.
+    * Logs A's per-drain folds (`fold_a`), B's catch-up (`catchup_b`)
+    * and each phase's reclaimed count (`reclaimed`).
     */
-  private[graft] def q171BuildMultiConsumerFlow(
-      s: SparkSession, dir: String): MultiConsumerFlow = {
-    val keyCols = graft.core.Schemas.ordersKey
-    val aRoot = graft.core.Staging.invocationDir("graft_q171_rep_a", dir)
-    val bRoot = graft.core.Staging.invocationDir("graft_q171_rep_b", dir)
-    val aSteps = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var bCatchup = -1
-    val reclaimed = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+  private[graft] def q171BuildMultiConsumerFlow(lc: Lifecycle): Unit = {
     var drains = 0
-    val flow = buildStreamedFlowStore(s, dir, "graft_q171", "q171", st => {
+    buildStreamedFlowStore(lc, _ => {
       drains += 1
-      // fresh handles per phase (q167's restart realism)
-      val orders = new graft.state.StateTable(s, st.root, keyCols)
-      val repA = reportStoreHandle(s, aRoot, productShape)
-      val repB = reportStoreHandle(s, bRoot, categoryShape)
       // the laggard: no phase-1 fold at all — its durable watermark
-      // stays the empty-report fallback until the phase-2 catch-up;
-      // the two consumers' resumes touch disjoint report roots over
-      // the same read-only orders history, so the phase-2 pair
-      // overlaps (guide §2.6)
-      if (drains == 2) {
-        val (a, b) = graft.core.Par.both(
-          resumeReportMaintenance(orders, repA, keyCols, productShape),
-          resumeReportMaintenance(orders, repB, keyCols, categoryShape))
-        aSteps += a
-        bCatchup = b
-      } else
-        aSteps += resumeReportMaintenance(orders, repA, keyCols, productShape)
-      val oldest = orders.history().head
-      // the two consumers' watermark reads are independent single-row
-      // aggregates over disjoint report stores — overlap them (§2.6)
-      val (wmA, wmB) = graft.core.Par.both(
-        reportWatermark(repA, oldest), reportWatermark(repB, oldest))
-      reclaimed += orders.vacuumBefore(Seq(wmA, wmB).min)
+      // stays the empty-report fallback until the phase-2 catch-up
+      val foldA = productFold(lc, "fold_a", "report_a")
+      if (drains == 2)
+        lc.par(foldA, lc.resume("catchup_b", categoryShape, Seq("orders"), "report_b"))
+      else lc.run(foldA)
+      retain(lc, "reclaimed", Seq("report_a" -> productShape, "report_b" -> categoryShape))
     },
       // phase 2's vacuum (both consumers caught up) converges the store
       // to the single current version; phase 1's reclaims nothing
-      finalVersions = 1)
-    MultiConsumerFlow(flow.st.root, aRoot, bRoot, aSteps.toSeq, bCatchup,
-      reclaimed.toSeq)
+      finalVersions = 1): Unit
   }
 
   /** q171: multi-consumer retention judged — the policy q168 certifies
@@ -1830,17 +1729,15 @@ object IngestQueries {
     */
   val q171MultiConsumerRetention: QuerySpec = QuerySpec(
     (s, dir) => {
-      val keyCols = graft.core.Schemas.ordersKey
-      val flow = q171BuildMultiConsumerFlow(s, dir)
-      val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val repA = reportStoreHandle(s, flow.aRoot, productShape)
-      val repB = reportStoreHandle(s, flow.bRoot, categoryShape)
+      val lc = new Lifecycle(s, dir, "q171")
+      q171BuildMultiConsumerFlow(lc)
       // post-reclaim resumability: fresh handles against the vacuumed
-      // store apply ZERO steps (idempotence judged, not just spec'd);
-      // disjoint report roots — overlapped (guide §2.6)
-      val (aResume, bResume) = graft.core.Par.both(
-        resumeReportMaintenance(orders, repA, keyCols, productShape),
-        resumeReportMaintenance(orders, repB, keyCols, categoryShape))
+      // store apply ZERO steps (idempotence judged, not just spec'd)
+      lc.par(productFold(lc, "resume_a", "report_a"),
+        lc.resume("resume_b", categoryShape, Seq("orders"), "report_b"))
+      val orders = lc.store("orders")
+      val repA = lc.report("report_a", productShape)
+      val repB = lc.report("report_b", categoryShape)
       val current = orders.current().get
       def kv(pairs: (String, Column)*) : Column =
         explode(map(pairs.flatMap { case (k, v) =>
@@ -1861,15 +1758,17 @@ object IngestQueries {
           categoryShape.report(current), "channel_group")
         .agg(sum(col("equiv_diff")).as("d"))
         .select(kv("b_equiv_diff" -> col("d")).as(Seq("metric", "value")))
+      val Seq(phase1, phase2) = lc.counts("reclaimed")
+      val Seq(aDrain1, aDrain2) = lc.counts("fold_a")
       val consts = s.range(1).select(kv(
-        "phase1_reclaimed" -> lit(flow.reclaimed(0).size),
-        "phase2_reclaimed" -> lit(flow.reclaimed(1).size),
+        "phase1_reclaimed" -> lit(phase1),
+        "phase2_reclaimed" -> lit(phase2),
         "retained_versions" -> lit(orders.history().size),
-        "a_steps_drain1" -> lit(flow.aSteps(0)),
-        "a_steps_drain2" -> lit(flow.aSteps(1)),
-        "b_catchup_steps" -> lit(flow.bCatchupSteps),
-        "a_resume_steps" -> lit(aResume),
-        "b_resume_steps" -> lit(bResume)).as(Seq("metric", "value")))
+        "a_steps_drain1" -> lit(aDrain1),
+        "a_steps_drain2" -> lit(aDrain2),
+        "b_catchup_steps" -> lit(lc.counts("catchup_b").sum),
+        "a_resume_steps" -> lit(lc.counts("resume_a").sum),
+        "b_resume_steps" -> lit(lc.counts("resume_b").sum)).as(Seq("metric", "value")))
       aRows.unionByName(bRows).unionByName(aEquiv).unionByName(bEquiv)
         .unionByName(consts).orderBy(col("metric"))
     },
@@ -1904,16 +1803,6 @@ object IngestQueries {
   // bootstrap path judged, then both consumers fold a real purge
   // ------------------------------------------------------------------
 
-  /** q172's durable state plus the lifecycle evidence: the newcomer's
-    * bootstrap step count (0 — the base is materialized, not folded),
-    * both consumers' purge-fold counts, and the final retention
-    * accounting.
-    */
-  private[graft] final case class BootstrapFlow(
-      ordersRoot: String, aRoot: String, bRoot: String,
-      bootstrapSteps: Int, aPurgeSteps: Int, bPurgeSteps: Int,
-      nReclaimed: Int)
-
   /** q172's construction: the q168 retained flow (store converged to
     * ONE non-empty version — retention already reclaimed the empty
     * CreateTable bootstrap version, the precondition of the durable
@@ -1932,31 +1821,18 @@ object IngestQueries {
     *     whole-group zero-shell filtering) through a REAL store
     *     transition;
     *  4. retention reclaims exactly the absorbed pre-purge version.
+    *
+    * Logs the steps as `bootstrap_b`, `purge_a`, `purge_b` and
+    * `purge_reclaimed`, after q168's own entries.
     */
-  private[graft] def q172BuildBootstrapFlow(
-      s: SparkSession, dir: String): BootstrapFlow = {
-    val keyCols = graft.core.Schemas.ordersKey
-    val base = q168BuildRetainedFlow(s, dir)
-    val orders = new graft.state.StateTable(s, base.ordersRoot, keyCols)
-    val bRoot = graft.core.Staging.invocationDir("graft_q172_rep_b", dir)
-    val repB = reportStoreHandle(s, bRoot, productShape)
-    val bootstrapSteps = resumeReportMaintenance(orders, repB, keyCols)
-    orders.overwrite(orders.read().get
-      .filter(col("product_id").cast("long") % 17 =!= 0))
-    val repA = reportStoreHandle(s, base.reportRoot, productShape)
-    // both consumers fold the same purge transition into disjoint
-    // report roots over the read-only orders history — overlapped
-    // (guide §2.6)
-    val (aPurgeSteps, bPurgeSteps) = graft.core.Par.both(
-      resumeReportMaintenance(orders, repA, keyCols),
-      resumeReportMaintenance(orders, repB, keyCols))
-    val oldest = orders.history().head
-    // two independent single-row watermark reads — overlapped (§2.6)
-    val (wmA, wmB) = graft.core.Par.both(
-      reportWatermark(repA, oldest), reportWatermark(repB, oldest))
-    val nReclaimed = orders.vacuumBefore(Seq(wmA, wmB).min).size
-    BootstrapFlow(base.ordersRoot, base.reportRoot, bRoot,
-      bootstrapSteps, aPurgeSteps, bPurgeSteps, nReclaimed)
+  private[graft] def q172BuildBootstrapFlow(lc: Lifecycle): Unit = {
+    q168BuildRetainedFlow(lc)
+    lc.run(productFold(lc, "bootstrap_b", "report_b"))
+    val orders = lc.store("orders")
+    lc.run(lc.step("purge")(orders.overwrite(orders.read().get
+      .filter(col("product_id").cast("long") % 17 =!= 0))))
+    lc.par(productFold(lc, "purge_a", "report"), productFold(lc, "purge_b", "report_b"))
+    retain(lc, "purge_reclaimed", Seq("report" -> productShape, "report_b" -> productShape))
   }
 
   /** q172: consumer ONBOARDING on a retention-managed store, judged —
@@ -2001,22 +1877,20 @@ object IngestQueries {
     */
   val q172ConsumerBootstrap: QuerySpec = QuerySpec(
     (s, dir) => {
-      val flow = q172BuildBootstrapFlow(s, dir)
-      val keyCols = graft.core.Schemas.ordersKey
-      val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val repA = reportStoreHandle(s, flow.aRoot, productShape)
-      val repB = reportStoreHandle(s, flow.bRoot, productShape)
-      val a = repA.current().get.drop("as_of")
-      val b = repB.current().get.drop("as_of")
+      val lc = new Lifecycle(s, dir, "q172")
+      q172BuildBootstrapFlow(lc)
+      val orders = lc.store("orders")
+      val a = lc.report("report", productShape).current().get.drop("as_of")
+      val b = lc.report("report_b", productShape).current().get.drop("as_of")
       val bEquiv = multisetEquivDiff(a, b, "product_id")
         .withColumnRenamed("equiv_diff", "b_equiv_diff")
       val reEquiv = multisetEquivDiff(a, productShape.report(orders.current().get),
           "product_id")
         .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
-      a.withColumn("bootstrap_steps", lit(flow.bootstrapSteps.toLong))
-        .withColumn("a_purge_steps", lit(flow.aPurgeSteps.toLong))
-        .withColumn("b_purge_steps", lit(flow.bPurgeSteps.toLong))
-        .withColumn("n_reclaimed", lit(flow.nReclaimed.toLong))
+      a.withColumn("bootstrap_steps", lit(lc.counts("bootstrap_b").sum))
+        .withColumn("a_purge_steps", lit(lc.counts("purge_a").sum))
+        .withColumn("b_purge_steps", lit(lc.counts("purge_b").sum))
+        .withColumn("n_reclaimed", lit(lc.counts("purge_reclaimed").sum))
         .withColumn("n_retained", lit(orders.history().size.toLong))
         .join(bEquiv, Seq("product_id"))
         .join(reEquiv, Seq("product_id"))
@@ -2044,24 +1918,15 @@ object IngestQueries {
   // reclaims the pre-compact history
   // ------------------------------------------------------------------
 
-  /** q173's durable state plus the lifecycle evidence: the flow-fold
-    * and compaction-fold step counts, the MEASURED row count of the
-    * compaction transition's CDC (pinned before retention reclaims the
-    * pre-compact version — the q158 ordering), the pre-compact file
-    * count (the fragmentation precondition), and the reclaim count.
+  /** q173's construction: the q161 flow store with a caught-up durable
+    * report (`flow_fold`), then a compaction that consumer folds
+    * (`compact_fold`), the compaction transition's MEASURED CDC row
+    * count (`compact_cdc`) and the watermark-bounded reclaim
+    * (`reclaimed`).
     */
-  private[graft] final case class CompactionFlow(
-      ordersRoot: String, reportRoot: String,
-      flowSteps: Int, compactSteps: Int, compactCdcRows: Long,
-      nReclaimed: Int)
-
-  private[graft] def q173BuildCompactionFlow(
-      s: SparkSession, dir: String): CompactionFlow = {
-    val keyCols = graft.core.Schemas.ordersKey
-    val orders = q161BuildStore(s, dir)
-    val reportRoot = graft.core.Staging.invocationDir("graft_q173_report", dir)
-    val report = reportStoreHandle(s, reportRoot, productShape)
-    val flowSteps = resumeReportMaintenance(orders, report, keyCols)
+  private[graft] def q173BuildCompactionFlow(lc: Lifecycle): Unit = {
+    val orders = q161BuildStore(lc)
+    lc.run(productFold(lc, "flow_fold", "report"))
     // fragmentation precondition (q156's convention): the compaction
     // must have real work, or the transparency certificate is vacuous
     val preFiles = orders.read().get
@@ -2071,22 +1936,15 @@ object IngestQueries {
         "the upsert writer no longer fragments and the compaction " +
         "certificate would be vacuous")
     val preCompact = orders.currentVersion.get
-    orders.compact()
+    lc.run(lc.step("compact")(orders.compact()))
     val postCompact = orders.currentVersion.get
-    // the transition's CDC row count — a single-row aggregate read,
-    // taken BEFORE the vacuum below deletes the pre-compact dir the
-    // lazy diff plan reads (the q158 drain-before-retention contract).
-    // The count and the consumer's compaction fold both read only the
-    // (immutable, still-retained) version pair; the fold writes only
-    // the report store — disjoint effects, overlapped (§2.6), and the
-    // vacuum waits for both
-    val (compactCdcRows, compactSteps) = graft.core.Par.both(
-      orders.diff(preCompact, postCompact).count(),
-      resumeReportMaintenance(orders, report, keyCols))
-    val nReclaimed = orders.vacuumBefore(
-      reportWatermark(report, orders.history().head)).size
-    CompactionFlow(orders.root, reportRoot, flowSteps, compactSteps,
-      compactCdcRows, nReclaimed)
+    // the transition's CDC row count is read BEFORE the vacuum below
+    // deletes the pre-compact dir the lazy diff plan reads (the q158
+    // drain-before-retention contract)
+    lc.par(lc.step("compact_cdc")(
+        lc.log("compact_cdc", orders.diff(preCompact, postCompact).count())),
+      productFold(lc, "compact_fold", "report"))
+    retain(lc, "reclaimed", Seq("report" -> productShape))
   }
 
   /** q173: small-files COMPACTION under a live maintained consumer —
@@ -2134,56 +1992,31 @@ object IngestQueries {
     */
   val q173CompactionMaintenance: QuerySpec = QuerySpec(
     (s, dir) => {
-      val keyCols = graft.core.Schemas.ordersKey
-      val flow = q173BuildCompactionFlow(s, dir)
-      val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val report = reportStoreHandle(s, flow.reportRoot, productShape)
-      val maintained = report.current().get.drop("as_of")
-      val equiv = multisetEquivDiff(maintained,
-        productShape.report(orders.current().get), "product_id")
+      val lc = new Lifecycle(s, dir, "q173")
+      q173BuildCompactionFlow(lc)
+      val orders = lc.store("orders")
       // post-compact layout: a single-row aggregate read off the
       // writer's actual file metadata (q156's accounting convention)
       val nFiles = orders.read().get
         .select(countDistinct(col("_metadata.file_path"))).head().getLong(0)
-      maintained
-        .withColumn("n_steps_flow", lit(flow.flowSteps.toLong))
-        .withColumn("n_steps_compact", lit(flow.compactSteps.toLong))
-        .withColumn("compact_cdc_rows", lit(flow.compactCdcRows))
-        .withColumn("n_reclaimed", lit(flow.nReclaimed.toLong))
-        .withColumn("n_retained", lit(orders.history().size.toLong))
-        .withColumn("n_files", lit(nFiles))
-        .join(equiv, Seq("product_id"))
-        .orderBy(col("product_id"))
+      maintainedCert(productShape,
+        lc.report("report", productShape).current().get.drop("as_of"),
+        orders.current().get,
+        "n_steps_flow" -> lc.counts("flow_fold").sum,
+        "n_steps_compact" -> lc.counts("compact_fold").sum,
+        "compact_cdc_rows" -> lc.counts("compact_cdc").sum,
+        "n_reclaimed" -> lc.counts("reclaimed").sum,
+        "n_retained" -> orders.history().size.toLong,
+        "n_files" -> nFiles)
     },
-    s"""$flowStoreReplaySql
-       |SELECT cast(o_custkey AS varchar) AS product_id,
-       |  cast(sum(w) AS bigint) AS n_rows,
-       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
-       |  cast(2 AS bigint) AS n_steps_flow,
-       |  cast(1 AS bigint) AS n_steps_compact,
-       |  cast(0 AS bigint) AS compact_cdc_rows,
-       |  cast(3 AS bigint) AS n_reclaimed,
-       |  cast(1 AS bigint) AS n_retained,
-       |  cast(1 AS bigint) AS n_files,
-       |  cast(0 AS bigint) AS equiv_diff
-       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
+    productReportOracle("n_steps_flow" -> 2, "n_steps_compact" -> 1,
+      "compact_cdc_rows" -> 0, "n_reclaimed" -> 3, "n_retained" -> 1, "n_files" -> 1))
 
   // ------------------------------------------------------------------
   // q174: SCHEMA EVOLUTION under a live maintained consumer — the
   // evolution rewrite is CDC-invisible, later folds cross the
   // schema boundary correctly
   // ------------------------------------------------------------------
-
-  /** q174's durable state plus the lifecycle evidence: per-phase fold
-    * counts (first load / evolution / evolved re-run), the MEASURED
-    * CDC row count of the evolution transition (pinned before
-    * retention reclaims the pre-evolution version), and the retention
-    * accounting.
-    */
-  private[graft] final case class EvolutionFlow(
-      ordersRoot: String, reportRoot: String,
-      loadSteps: Int, evoSteps: Int, rerunSteps: Int,
-      evoCdcRows: Long, nReclaimed: Int)
 
   /** The evolved orders schema: the declared base plus a `discount`
     * column the CSV sources don't carry yet — the reference's
@@ -2196,49 +2029,43 @@ object IngestQueries {
         org.apache.spark.sql.types.StructField("discount",
           org.apache.spark.sql.types.DoubleType))
 
-  private[graft] def q174BuildEvolutionFlow(
-      s: SparkSession, dir: String): EvolutionFlow = {
-    val keyCols = graft.core.Schemas.ordersKey
-    val (dirA, dirB) = stageFlowBatches(s, dir, "graft_q174")
-    val orders = freshSyncedStore(s, dir, "graft_q174_state", "q174")
-    val reportRoot = graft.core.Staging.invocationDir("graft_q174_report", dir)
-    val report = reportStoreHandle(s, reportRoot, productShape)
+  /** q174's construction: per-phase folds (`load_fold`, `evo_fold`,
+    * `rerun_fold`), the MEASURED CDC row count of the evolution
+    * transition (`evo_cdc`) and the retention accounting (`reclaimed`).
+    */
+  private[graft] def q174BuildEvolutionFlow(lc: Lifecycle): Unit = {
+    lc.par(flowBatches(lc): _*)
+    lc.run(ordersStore(lc))
+    val orders = lc.store("orders")
     // phase 1: first load, consumer catches up (CreateTable + load)
-    orders.upsert(Ingest.readOrdersCsv(s, dirA))
-    val loadSteps = resumeReportMaintenance(orders, report, keyCols)
+    lc.run(lc.load("orders", Ingest.readOrdersCsv, "b1"))
+    lc.run(productFold(lc, "load_fold", "report"))
     // phase 2: the declared schema evolves — sync rewrites the store
     // with the new column as typed nulls (q160's AddColumn branch),
     // landing a version the consumer must fold OVER
     val preEvo = orders.currentVersion.get
-    val changes = graft.schemasync.SchemaSync.sync(s, orders, evolvedOrdersSchema)
+    val changes = lc.run(lc.step("evolve")(
+      graft.schemasync.SchemaSync.sync(lc.spark, orders, evolvedOrdersSchema)))
     require(changes == Seq(graft.schemasync.SchemaSync.AddColumn(
         evolvedOrdersSchema("discount"))),
       s"q174 precondition: evolution sync applied $changes")
     val postEvo = orders.currentVersion.get
-    // the transition's CDC row count — a single-row aggregate read,
-    // taken BEFORE retention reclaims the pre-evolution dir the lazy
-    // diff plan reads (the q158 ordering). diff aligns the schemas
-    // (typed nulls on the missing side), so an all-null added column
-    // must produce ZERO change rows — a naive differ would mark EVERY
-    // key updated here and the "incremental" fold would recompute the
-    // world on each evolution. The count and the consumer's evolution
-    // fold read the same immutable version pair; the fold writes only
-    // the report store — disjoint effects, overlapped (§2.6), and the
-    // vacuum below waits for both (q173's convention)
-    val (evoCdcRows, evoSteps) = graft.core.Par.both(
-      orders.diff(preEvo, postEvo).count(),
-      resumeReportMaintenance(orders, report, keyCols))
+    // the transition's CDC row count, read BEFORE retention reclaims the
+    // pre-evolution dir the lazy diff plan reads (the q158 ordering).
+    // diff aligns the schemas (typed nulls on the missing side), so an
+    // all-null added column must produce ZERO change rows — a naive
+    // differ would mark EVERY key updated here and the "incremental"
+    // fold would recompute the world on each evolution
+    lc.par(lc.step("evo_cdc")(lc.log("evo_cdc", orders.diff(preEvo, postEvo).count())),
+      productFold(lc, "evo_fold", "report"))
     // phase 3: the re-run batch lands through the UNCHANGED reader —
     // the source doesn't carry `discount` yet; upsert aligns it as
     // typed nulls (the evolve-then-ingest path) — and the fold crosses
     // the schema boundary (before arm reads the evolved version, the
     // walk's earlier pairs read pre-evolution versions)
-    orders.upsert(Ingest.readOrdersCsv(s, dirB))
-    val rerunSteps = resumeReportMaintenance(orders, report, keyCols)
-    val nReclaimed = orders.vacuumBefore(
-      reportWatermark(report, orders.history().head)).size
-    EvolutionFlow(orders.root, reportRoot, loadSteps, evoSteps, rerunSteps,
-      evoCdcRows, nReclaimed)
+    lc.run(lc.load("orders", Ingest.readOrdersCsv, "b2"))
+    lc.run(productFold(lc, "rerun_fold", "report"))
+    retain(lc, "reclaimed", Seq("report" -> productShape))
   }
 
   /** q174: schema EVOLUTION under a live maintained consumer — the
@@ -2288,35 +2115,21 @@ object IngestQueries {
     */
   val q174EvolutionMaintenance: QuerySpec = QuerySpec(
     (s, dir) => {
-      val keyCols = graft.core.Schemas.ordersKey
-      val flow = q174BuildEvolutionFlow(s, dir)
-      val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val report = reportStoreHandle(s, flow.reportRoot, productShape)
-      val maintained = report.current().get.drop("as_of")
-      val equiv = multisetEquivDiff(maintained,
-        productShape.report(orders.current().get), "product_id")
-      maintained
-        .withColumn("n_steps_load", lit(flow.loadSteps.toLong))
-        .withColumn("n_steps_evo", lit(flow.evoSteps.toLong))
-        .withColumn("n_steps_rerun", lit(flow.rerunSteps.toLong))
-        .withColumn("evo_cdc_rows", lit(flow.evoCdcRows))
-        .withColumn("n_reclaimed", lit(flow.nReclaimed.toLong))
-        .withColumn("n_retained", lit(orders.history().size.toLong))
-        .join(equiv, Seq("product_id"))
-        .orderBy(col("product_id"))
+      val lc = new Lifecycle(s, dir, "q174")
+      q174BuildEvolutionFlow(lc)
+      val orders = lc.store("orders")
+      maintainedCert(productShape,
+        lc.report("report", productShape).current().get.drop("as_of"),
+        orders.current().get,
+        "n_steps_load" -> lc.counts("load_fold").sum,
+        "n_steps_evo" -> lc.counts("evo_fold").sum,
+        "n_steps_rerun" -> lc.counts("rerun_fold").sum,
+        "evo_cdc_rows" -> lc.counts("evo_cdc").sum,
+        "n_reclaimed" -> lc.counts("reclaimed").sum,
+        "n_retained" -> orders.history().size.toLong)
     },
-    s"""$flowStoreReplaySql
-       |SELECT cast(o_custkey AS varchar) AS product_id,
-       |  cast(sum(w) AS bigint) AS n_rows,
-       |  cast(sum(w * cast(floor(amount * 100) AS bigint)) AS bigint) AS amount_cents,
-       |  cast(1 AS bigint) AS n_steps_load,
-       |  cast(1 AS bigint) AS n_steps_evo,
-       |  cast(1 AS bigint) AS n_steps_rerun,
-       |  cast(0 AS bigint) AS evo_cdc_rows,
-       |  cast(3 AS bigint) AS n_reclaimed,
-       |  cast(1 AS bigint) AS n_retained,
-       |  cast(0 AS bigint) AS equiv_diff
-       |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin)
+    productReportOracle("n_steps_load" -> 1, "n_steps_evo" -> 1, "n_steps_rerun" -> 1,
+      "evo_cdc_rows" -> 0, "n_reclaimed" -> 3, "n_retained" -> 1))
 
   // ------------------------------------------------------------------
   // q175: maintained JOIN report — incremental view maintenance of a
@@ -2394,29 +2207,22 @@ object IngestQueries {
     * fold absorbs the move with the ORDERS side unchanged (the
     * pure-dimension-change path).
     */
-  private[graft] def q175BuildJoinedFlow(
-      s: SparkSession, dir: String): MaintainedJoinFlow = {
-    val invB1 = graft.core.Staging.invocationDir("graft_q175_inv_b1", dir)
-    val invMove = graft.core.Staging.invocationDir("graft_q175_inv_move", dir)
-    // disjoint staging dirs + a disjoint store root: overlap the two
-    // inventory stagings AND the sync (guide §2.6); the first upsert
-    // needs invB1 staged and the store synced, so it joins them
-    val (_, invSt) = graft.core.Par.both(
-      graft.core.Par.both(
-        stageInventoriesCsv(s, dir, invB1, q163InvBatch1),
-        stageInventoriesCsv(s, dir, invMove, q175MoveBatch)),
-      freshSyncedStore(s, dir, "graft_q175_inv_state", "q175",
-        graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
-    invSt.upsert(Ingest.readInventoriesCsv(s, invB1))
+  private[graft] def q175BuildJoinedFlow(lc: Lifecycle): MaintainedJoinFlow = {
+    lc.par(lc.stageInventories("inv_b1", q163InvBatch1),
+      lc.stageInventories("inv_move", q175MoveBatch), invStore(lc))
+    lc.run(lc.load("inv", Ingest.readInventoriesCsv, "inv_b1"))
+    val invSt = lc.store("inv")
     val consumer = new CarriedReport(joinedShape,
       Seq(None, invSt.currentVersion))
+    def fold(st: graft.state.StateTable): Unit =
+      lc.run(lc.step("fold")(consumer.advance(Seq(st, invSt))))
     var preMove: DataFrame = null
-    val flow = buildStreamedFlowStore(s, dir, "graft_q175", "q175", st => {
-      consumer.advance(Seq(st, invSt))
+    val flow = buildStreamedFlowStore(lc, st => {
+      fold(st)
       if (consumer.steps.size == 2) {
         preMove = consumer.report
-        invSt.upsert(Ingest.readInventoriesCsv(s, invMove))
-        consumer.advance(Seq(st, invSt))
+        lc.run(lc.load("inv", Ingest.readInventoriesCsv, "inv_move"))
+        fold(st)
       }
     })
     MaintainedJoinFlow(flow.st, invSt, consumer.steps.toSeq, preMove)
@@ -2472,16 +2278,17 @@ object IngestQueries {
     */
   val q175MaintainedJoinReport: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q175BuildJoinedFlow(s, dir)
+      val lc = new Lifecycle(s, dir, "q175")
+      val m = q175BuildJoinedFlow(lc)
       val recompute = joinedShape.report(joinedView(
         m.ordersSt.current().get, m.invSt.current().get))
       val equiv = multisetEquivDiff(m.report, recompute, "category")
       // the dimension fold's affected-product count (a single-row
       // aggregate read on the pinned affected frame) and the catalog
-      // row count it must stay a proper subset of: two independent
-      // read-only driver actions — overlapped (guide §2.6)
-      val (nDimAffected, nCatalog) = graft.core.Par.both(
-        m.steps.last.keys.count(), m.invSt.current().get.count())
+      // row count it must stay a proper subset of
+      val Seq(nDimAffected, nCatalog) = lc.par(
+        lc.step("dim_affected")(m.steps.last.keys.count()),
+        lc.step("catalog")(m.invSt.current().get.count()))
       m.report
         .withColumn("n_steps", lit(m.steps.size.toLong))
         .withColumn("n_order_steps",
@@ -2528,62 +2335,37 @@ object IngestQueries {
   // onboarding) for the JOINED report family
   // ------------------------------------------------------------------
 
-  /** q177's durable state plus the lifecycle evidence: per load cycle,
-    * the source store each applied fold step advanced (0 orders, 1
-    * inventories), and the per-store retention accounting.
-    */
-  private[graft] final case class DurableJoinFlow(
-      ordersRoot: String, invRoot: String, reportRoot: String,
-      cycles: Seq[Seq[Int]], oReclaimed: Int, iReclaimed: Int)
-
   /** q177's construction: the reference flow on BOTH stores (orders
     * q161 batches; inventories catalog + [[q175MoveBatch]] category
     * move) with a durable joined-report consumer resuming from disk
     * after each load cycle (fresh handles — q167's restart realism),
     * then retention bounded PER STORE by its component of the durable
-    * watermark pair.
+    * watermark pair. Logs per cycle the fold steps of each source
+    * (`order_steps`, `dim_steps`) and per store the reclaimed count.
     */
-  private[graft] def q177BuildDurableJoinFlow(
-      s: SparkSession, dir: String): DurableJoinFlow = {
-    val iB1 = graft.core.Staging.invocationDir("graft_q177_inv_b1", dir)
-    val iMv = graft.core.Staging.invocationDir("graft_q177_inv_move", dir)
-    // all four staging dirs are disjoint over immutable sources, and
-    // the two store syncs touch disjoint roots — overlap each
-    // orders/inventories pair (guide §2.6)
-    val ((oA, oB), _) = graft.core.Par.both(
-      stageFlowBatches(s, dir, "graft_q177_o"),
-      graft.core.Par.both(
-        stageInventoriesCsv(s, dir, iB1, q163InvBatch1),
-        stageInventoriesCsv(s, dir, iMv, q175MoveBatch)))
-    val (ordersSt, invSt) = graft.core.Par.both(
-      freshSyncedStore(s, dir, "graft_q177_o_state", "q177"),
-      freshSyncedStore(s, dir, "graft_q177_i_state", "q177",
-        graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
-    val reportRoot = graft.core.Staging.invocationDir("graft_q177_report", dir)
-    def report() = reportStoreHandle(s, reportRoot, joinedShape)
-    def resume(): Seq[Int] = resumeMaintenance(joinedShape, Seq(
-        new graft.state.StateTable(s, ordersSt.root, graft.core.Schemas.ordersKey),
-        new graft.state.StateTable(s, invSt.root, graft.core.Schemas.inventoriesKey)),
-      report()).map(_.source)
-    // cycle 1: first loads on both stores (disjoint roots — the
-    // single-writer-per-store guarantee holds; overlapped per §2.6),
-    // one resume
-    graft.core.Par.both(
-      ordersSt.upsert(Ingest.readOrdersCsv(s, oA)),
-      invSt.upsert(Ingest.readInventoriesCsv(s, iB1))): Unit
-    val cycle1 = resume()
+  private[graft] def q177BuildDurableJoinFlow(lc: Lifecycle): Unit = {
+    lc.par(flowBatches(lc) ++ Seq(lc.stageInventories("inv_b1", q163InvBatch1),
+      lc.stageInventories("inv_move", q175MoveBatch)): _*)
+    lc.par(ordersStore(lc), invStore(lc))
+    def resume(): Unit = {
+      val steps = lc.run(lc.resume("resume", joinedShape, Seq("orders", "inv"), "report"))
+      lc.log("order_steps", steps.count(_.source == 0).toLong)
+      lc.log("dim_steps", steps.count(_.source == 1).toLong)
+    }
+    // cycle 1: first loads on both stores, one resume
+    lc.par(lc.load("orders", Ingest.readOrdersCsv, "b1"),
+      lc.load("inv", Ingest.readInventoriesCsv, "inv_b1"))
+    resume()
     // cycle 2: the orders re-run AND the dimension category move land,
     // one resume absorbs both feeds
-    graft.core.Par.both(
-      ordersSt.upsert(Ingest.readOrdersCsv(s, oB)),
-      invSt.upsert(Ingest.readInventoriesCsv(s, iMv))): Unit
-    val cycle2 = resume()
+    lc.par(lc.load("orders", Ingest.readOrdersCsv, "b2"),
+      lc.load("inv", Ingest.readInventoriesCsv, "inv_move"))
+    resume()
     // retention: each store vacuums bounded by ITS durable watermark
-    val Seq(wmO, wmI) = reportWatermarks(report(), joinedShape.asOf).get
-    val oReclaimed = ordersSt.vacuumBefore(wmO).size
-    val iReclaimed = invSt.vacuumBefore(wmI).size
-    DurableJoinFlow(ordersSt.root, invSt.root, reportRoot,
-      Seq(cycle1, cycle2), oReclaimed, iReclaimed)
+    val Seq(wmO, wmI) = reportWatermarks(lc.report("report", joinedShape),
+      joinedShape.asOf).get
+    lc.log("o_reclaimed", lc.store("orders").vacuumBefore(wmO).size.toLong)
+    lc.log("i_reclaimed", lc.store("inv").vacuumBefore(wmI).size.toLong)
   }
 
   /** q177: the DURABLE two-store joined-report consumer — q175 proves
@@ -2634,38 +2416,32 @@ object IngestQueries {
     */
   val q177DurableJoinResume: QuerySpec = QuerySpec(
     (s, dir) => {
-      val flow = q177BuildDurableJoinFlow(s, dir)
-      val orders = new graft.state.StateTable(s, flow.ordersRoot,
-        graft.core.Schemas.ordersKey)
-      val inv = new graft.state.StateTable(s, flow.invRoot,
-        graft.core.Schemas.inventoriesKey)
-      val rep = reportStoreHandle(s, flow.reportRoot, joinedShape)
+      val lc = new Lifecycle(s, dir, "q177")
+      q177BuildDurableJoinFlow(lc)
       // post-reclaim restart (a fresh handle applies ZERO steps on
       // both feeds — idempotence judged, q171's convention) and the
       // newcomer onboarding (a NEW joined consumer bootstraps from
-      // both current versions): disjoint report roots over read-only
-      // stores — overlapped (guide §2.6)
-      val bRoot = graft.core.Staging.invocationDir("graft_q177_rep_b", dir)
-      val repB = reportStoreHandle(s, bRoot, joinedShape)
-      val (restart, bSteps) = graft.core.Par.both(
-        resumeMaintenance(joinedShape, Seq(orders, inv), rep),
-        resumeMaintenance(joinedShape, Seq(orders, inv), repB))
-      val a = rep.current().get.drop(joinedShape.asOf: _*)
-      val b = repB.current().get.drop(joinedShape.asOf: _*)
+      // both current versions)
+      val sources = Seq("orders", "inv")
+      lc.par(lc.resume("restart", joinedShape, sources, "report"),
+        lc.resume("bootstrap_b", joinedShape, sources, "report_b"))
+      val orders = lc.store("orders")
+      val inv = lc.store("inv")
+      val a = lc.report("report", joinedShape).current().get.drop(joinedShape.asOf: _*)
+      val b = lc.report("report_b", joinedShape).current().get.drop(joinedShape.asOf: _*)
       val bEquiv = multisetEquivDiff(a, b, "category")
         .withColumnRenamed("equiv_diff", "b_equiv_diff")
       val reEquiv = multisetEquivDiff(a, joinedShape.report(joinedView(
           orders.current().get, inv.current().get)), "category")
         .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
-      val sources = flow.cycles.flatten
-      a.withColumn("n_order_steps", lit(sources.count(_ == 0).toLong))
-        .withColumn("n_dim_steps", lit(sources.count(_ == 1).toLong))
-        .withColumn("o_reclaimed", lit(flow.oReclaimed.toLong))
-        .withColumn("i_reclaimed", lit(flow.iReclaimed.toLong))
+      a.withColumn("n_order_steps", lit(lc.counts("order_steps").sum))
+        .withColumn("n_dim_steps", lit(lc.counts("dim_steps").sum))
+        .withColumn("o_reclaimed", lit(lc.counts("o_reclaimed").sum))
+        .withColumn("i_reclaimed", lit(lc.counts("i_reclaimed").sum))
         .withColumn("o_retained", lit(orders.history().size.toLong))
         .withColumn("i_retained", lit(inv.history().size.toLong))
-        .withColumn("restart_steps", lit(restart.size.toLong))
-        .withColumn("bootstrap_steps", lit(bSteps.size.toLong))
+        .withColumn("restart_steps", lit(lc.counts("restart").sum))
+        .withColumn("bootstrap_steps", lit(lc.counts("bootstrap_b").sum))
         .join(bEquiv, Seq("category"))
         .join(reEquiv, Seq("category"))
         .orderBy(col("category"))
@@ -2742,63 +2518,38 @@ object IngestQueries {
     df => df.filter(col("k") % 5 === 0)
       .withColumn("k", col("k") + lit(10000000L))
 
-  /** q176's durable state plus the evidence the guards need: per-fold
-    * applied-step counts, the late transition's changed keys, and the
-    * (product, year, month) groups the late fold touched (both
-    * pinned).
-    */
-  private[graft] final case class MonthlyFlow(
-      ordersRoot: String, reportRoot: String, foldSteps: Seq[Int],
-      lateKeys: DataFrame, lateTouched: DataFrame)
-
   /** q176's construction: the q167 durable-consumer loop run with
     * [[monthlyShape]] (fresh handles per fold — restart realism), then
     * the LATE batch lands in the SAME landing directory and a third
     * `AvailableNow` drain under the SAME checkpoint absorbs it (the
     * file-source log must skip every already-processed file), followed
-    * by one more durable fold over the late transition.
+    * by one more durable fold over the late transition. Logs each
+    * fold's applied-step count (`fold`) and the number of (product,
+    * year, month) groups the late fold touched (`late_touched`).
     */
-  private[graft] def q176BuildMonthlyFlow(
-      s: SparkSession, dir: String): MonthlyFlow = {
+  private[graft] def q176BuildMonthlyFlow(lc: Lifecycle): Unit = {
     val keyCols = graft.core.Schemas.ordersKey
-    val reportRoot = graft.core.Staging.invocationDir("graft_q176_report", dir)
-    val steps = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def foldOnce(root: String): Int = {
-      val orders = new graft.state.StateTable(s, root, keyCols)
-      val report = reportStoreHandle(s, reportRoot, monthlyShape)
-      resumeReportMaintenance(orders, report, keyCols, monthlyShape)
-    }
+    val fold = lc.resume("fold", monthlyShape, Seq("orders"), "report")
     // the late batch's STAGING touches only its own side dir — it can
-    // overlap the whole flow build (guide §2.6); only the LANDING must
-    // wait for drain 2 (the files must arrive late, and landStagedFiles
-    // runs strictly after both)
-    val lateDir = graft.core.Staging.invocationDir("graft_q176_late", dir)
-    val (flow, _) = graft.core.Par.both(
-      buildStreamedFlowStore(s, dir, "graft_q176", "q176",
-        st => steps += foldOnce(st.root)),
-      stageOrdersCsv(s, dir, lateDir, q176LateBatch))
-    landStagedFiles(lateDir, flow.landing, "late")
-    flow.drain()
-    val orders = new graft.state.StateTable(s, flow.st.root, keyCols)
+    // overlap the whole flow build; only the LANDING must wait for
+    // drain 2 (the files must arrive late)
+    lc.par(
+      lc.step("flow", Seq("b1", "b2", "orders", "ckpt", "report").map(lc.dir): _*)(
+        buildStreamedFlowStore(lc, _ => lc.run(fold)): Unit),
+      lc.stageOrders("late", q176LateBatch))
+    landStagedFiles(lc.dir("late"), lc.dir("b1"), "late")
+    drain(lc)
+    val orders = lc.store("orders")
     val h = orders.history()
     require(h.size == 4,
       s"q176: expected 4 retained versions after the late drain, got ${h.size}")
-    val lateKeys = graft.core.Checkpoints.pin(
-      orders.diff(h(2), h(3)).select(keyCols.map(col): _*))
     // the groups the late fold touched: the changed keys' rows exist
     // only on the after side (pure inserts), so their derived
     // (product, year, month) buckets off the current version ARE the
-    // fold's touched set. The late FOLD writes only the report store
-    // while this derivation reads only the (now immutable) orders
-    // versions + the pinned lateKeys — disjoint effects, so the two
-    // overlap (guide §2.6) instead of serializing
-    val (lateStep, lateTouched) = graft.core.Par.both(
-      foldOnce(flow.st.root),
-      graft.core.Checkpoints.pin(
-        monthlyShape.report(orders.current().get.join(lateKeys, keyCols, "left_semi"))
-          .select(col("product_id"), col("sale_year"), col("sale_month"))))
-    steps += lateStep
-    MonthlyFlow(flow.st.root, reportRoot, steps.toSeq, lateKeys, lateTouched)
+    // fold's touched set
+    lc.par(fold, lc.step("late_touched")(lc.log("late_touched",
+      monthlyShape.report(orders.current().get
+        .join(orders.changedKeys(h(2), h(3)), keyCols, "left_semi")).count())))
   }
 
   /** q176: the maintained TIME-BUCKETED report — A2 was the one
@@ -2843,20 +2594,14 @@ object IngestQueries {
     */
   val q176MaintainedMonthly: QuerySpec = QuerySpec(
     (s, dir) => {
-      val keyCols = graft.core.Schemas.ordersKey
-      val flow = q176BuildMonthlyFlow(s, dir)
-      val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val reportSt = reportStoreHandle(s, flow.reportRoot, monthlyShape)
-      val maintained = reportSt.current().get.drop("as_of")
-      val recompute = monthlyShape.report(orders.current().get)
-      val equiv = multisetEquivDiff(maintained, recompute, "product_id")
-      maintained
-        .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
-        .withColumn("n_report_versions", lit(reportSt.history().size.toLong))
-        // a single-row aggregate read on the pinned touched frame
-        .withColumn("n_late_touched", lit(flow.lateTouched.count()))
-        .join(equiv, Seq("product_id"))
-        .orderBy(col("product_id"), col("sale_year"), col("sale_month"))
+      val lc = new Lifecycle(s, dir, "q176")
+      q176BuildMonthlyFlow(lc)
+      val reportSt = lc.report("report", monthlyShape)
+      maintainedCert(monthlyShape, reportSt.current().get.drop("as_of"),
+        lc.store("orders").current().get,
+        "n_steps" -> lc.counts("fold").sum,
+        "n_report_versions" -> reportSt.history().size.toLong,
+        "n_late_touched" -> lc.counts("late_touched").sum)
     },
     s"""$flowStoreReplaySql,
        |-- the late batch replay: k ≡ 0 (mod 5) source rows re-landed

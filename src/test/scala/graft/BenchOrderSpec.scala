@@ -23,14 +23,8 @@ class BenchOrderSpec extends AnyFunSuite {
     assert(refs == refs.sortBy(-_), s"not descending: ${refs.take(10)}")
   }
 
-  test("ordering is deterministic and composes with rotation membership") {
+  test("ordering is deterministic") {
     assert(Bench.fullRunOrder(Bench.headline) == Bench.fullRunOrder(Bench.headline))
-    // rotation decides membership, ordering decides sequence: a rotated
-    // round's order is the full order restricted to the rotated set
-    val rotated = Bench.rotatedHeadline(1)
-    val full = Bench.fullRunOrder(Bench.headline)
-    assert(Bench.fullRunOrder(rotated) == full.filter(rotated.contains),
-      "rotation must only remove entries, never reorder the survivors")
   }
 
   test("every headline entry resolves in the registry and has a unique qNNN prefix") {

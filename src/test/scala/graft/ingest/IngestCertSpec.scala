@@ -119,7 +119,7 @@ class IngestCertSpec extends AnyFunSuite {
     // the SAME flow builder the judged query runs (shared so guard and
     // judged flow cannot drift); history = [empty CreateTable, first
     // load, re-run] — the guard needs the v2-vs-v3 pair
-    val st = IngestQueries.q161BuildStore(spark, sf)
+    val st = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val h = st.history()
     assert(h.size == 3, s"flow must retain exactly 3 versions, got $h")
     val loaded = st.readVersion(h(1))
@@ -143,7 +143,7 @@ class IngestCertSpec extends AnyFunSuite {
 
   test("q162 streamed flow is non-degenerate and the file log is exactly-once") {
     val sf = TestSpark.testdata("0.001")
-    val flow = IngestQueries.q162BuildStreamedStore(spark, sf)
+    val flow = IngestQueries.q162BuildStreamedStore(new Lifecycle(spark, sf, "q162"))
     val st = flow.st
     val h = st.history()
     assert(h.size == 3, s"expected CreateTable + 2 micro-batch versions, got $h")
@@ -173,8 +173,8 @@ class IngestCertSpec extends AnyFunSuite {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     val pair = Await.result(Future.sequence(Seq(
-      Future(IngestQueries.q162BuildStreamedStore(spark, sf).st),
-      Future(IngestQueries.q162BuildStreamedStore(spark, sf).st))), 10.minutes)
+      Future(IngestQueries.q162BuildStreamedStore(new Lifecycle(spark, sf, "q162")).st),
+      Future(IngestQueries.q162BuildStreamedStore(new Lifecycle(spark, sf, "q162")).st))), 10.minutes)
     val Seq(s1, s2) = pair
     assert(s1.root != s2.root, "concurrent flows shared a store dir")
     val c1 = s1.current().get
@@ -208,7 +208,7 @@ class IngestCertSpec extends AnyFunSuite {
     // the SAME flow builder the judged query runs (shared so guard and
     // judged flow cannot drift); history = [empty CreateTable, first
     // load, restock re-run]
-    val st = IngestQueries.q163BuildInvStore(spark, sf)
+    val st = IngestQueries.q163BuildInvStore(new Lifecycle(spark, sf, "q163"))
     val h = st.history()
     assert(h.size == 3, s"inventories flow must retain 3 versions, got $h")
     assert(st.readVersion(h(0)).count() == 0L, "CreateTable version must be empty")
@@ -252,7 +252,7 @@ class IngestCertSpec extends AnyFunSuite {
   test("q164 CDC really prunes and the maintenance is non-vacuous") {
     val sf = TestSpark.testdata("0.001")
     // the SAME store builder + report definition the judged query runs
-    val st = IngestQueries.q161BuildStore(spark, sf)
+    val st = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val h = st.history()
     val keyCols = graft.core.Schemas.ordersKey
 
@@ -338,7 +338,7 @@ class IngestCertSpec extends AnyFunSuite {
     // the insert arm appends only UNSEEN keys — pinned here on the
     // judged flow's own version pair rather than asserted in prose:
     val sf = TestSpark.testdata("0.001")
-    val st = IngestQueries.q161BuildStore(spark, sf)
+    val st = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val h = st.history()
     val keyCols = graft.core.Schemas.ordersKey
     def counts(v: String, as: String) =
@@ -367,7 +367,7 @@ class IngestCertSpec extends AnyFunSuite {
     // empty delta — would replay green; the step evidence is pinned
     // here off the builder's own handles
     val sf = TestSpark.testdata("0.001")
-    val m = IngestQueries.q165BuildMaintainedStream(spark, sf)
+    val m = IngestQueries.q165BuildMaintainedStream(new Lifecycle(spark, sf, "q165"))
     assert(m.steps.size == 2,
       s"expected one maintenance step per drain, got ${m.steps.size}")
     val Seq(s1, s2) = m.steps.map(_.keys)
@@ -395,7 +395,7 @@ class IngestCertSpec extends AnyFunSuite {
     // round-trip that nulled the column) would leave the grouping
     // vacuous while the replayed oracle stayed green
     val sf = TestSpark.testdata("0.001")
-    val st = IngestQueries.q161BuildStore(spark, sf)
+    val st = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val contents = st.current().get
     assert(contents.filter(col("date_time").isNull).limit(1).count() == 0L,
       "store round-trip nulled date_time")
@@ -410,14 +410,15 @@ class IngestCertSpec extends AnyFunSuite {
   test("q167 durable maintenance: watermark, per-drain folds, restart idempotence") {
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
-    val flow = IngestQueries.q167BuildDurableFlow(spark, sf)
+    val lc = new Lifecycle(spark, sf, "q167")
+    IngestQueries.q167BuildDurableFlow(lc)
     // steady state: exactly one fold per drain — a fold that consumed
     // the union of both drains (2, 0) would still replay green, so the
     // per-drain shape is pinned here
-    assert(flow.foldSteps == Seq(1, 1),
-      s"expected one applied step per drain, got ${flow.foldSteps}")
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot, keyCols)
-    val report = IngestQueries.reportStoreHandle(spark, flow.reportRoot)
+    assert(lc.counts("fold") == Seq(1, 1),
+      s"expected one applied step per drain, got ${lc.counts("fold")}")
+    val orders = lc.store("orders")
+    val report = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
     assert(report.history().size == 3,
       s"expected CreateTable + one report version per fold, got " +
         s"${report.history().size}")
@@ -429,7 +430,7 @@ class IngestCertSpec extends AnyFunSuite {
       s"report watermark $asOf != final orders version")
     // restart idempotence: a THIRD fresh-handle process finds nothing
     // new — zero steps applied, no version written
-    val report2 = IngestQueries.reportStoreHandle(spark, flow.reportRoot)
+    val report2 = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
     assert(IngestQueries.resumeReportMaintenance(orders, report2, keyCols) == 0,
       "an idempotent restart re-applied a fold")
     assert(report2.history().size == 3,
@@ -450,28 +451,27 @@ class IngestCertSpec extends AnyFunSuite {
   test("q168 retention coexistence: per-drain reclaim, post-vacuum resume, unsafe vacuum fails loudly") {
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
-    val flow = IngestQueries.q168BuildRetainedFlow(spark, sf)
+    val lc = new Lifecycle(spark, sf, "q168")
+    IngestQueries.q168BuildRetainedFlow(lc)
     // the judged totals (n_steps=2, n_reclaimed=2) cannot distinguish
     // WHEN retention bit — pin the per-drain shape: each fold applied
     // one step, each vacuum reclaimed exactly the one version that
     // fold absorbed (CreateTable after drain 1, micro-batch 1 after
     // drain 2)
-    assert(flow.foldSteps == Seq(1, 1),
-      s"expected one applied step per drain, got ${flow.foldSteps}")
-    assert(flow.reclaimed.map(_.size) == Seq(1, 1),
-      s"expected one version reclaimed per drain, got " +
-        s"${flow.reclaimed.map(_.size)}")
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot, keyCols)
+    assert(lc.counts("fold") == Seq(1, 1),
+      s"expected one applied step per drain, got ${lc.counts("fold")}")
+    assert(lc.counts("reclaimed") == Seq(1, 1),
+      s"expected one version reclaimed per drain, got ${lc.counts("reclaimed")}")
+    val orders = lc.store("orders")
     assert(orders.history().size == 1,
       "continuous retention did not converge the store to its current version")
-    // the reclaimed names were each drain's fold-absorbed history:
-    // strictly older than the surviving version, in walk order
-    val survivor = orders.history().head
-    assert(flow.reclaimed.flatten.forall(_ < survivor),
-      "a vacuum reclaimed a version at or above the surviving watermark")
+    // the survivor is the version the last fold absorbed, so everything
+    // reclaimed was older than the consumer's watermark
+    val report = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
+    assert(orders.history() == Seq(IngestQueries.reportWatermark(report, "")),
+      "the surviving version is not the consumer's watermark")
     // restart idempotence HOLDS AFTER RETENTION: a fresh-handle
     // process resumes off the vacuumed store with zero steps
-    val report = IngestQueries.reportStoreHandle(spark, flow.reportRoot)
     assert(IngestQueries.resumeReportMaintenance(orders, report, keyCols) == 0,
       "post-vacuum restart re-applied a fold")
     // negative path: the UNSAFE policy — a keep-current-only vacuum
@@ -483,17 +483,17 @@ class IngestCertSpec extends AnyFunSuite {
     orders.vacuum()
     val ex = intercept[IllegalArgumentException] {
       IngestQueries.resumeReportMaintenance(orders,
-        IngestQueries.reportStoreHandle(spark, flow.reportRoot), keyCols)
+        IngestQueries.reportStoreHandle(spark, lc.dir("report")), keyCols)
     }
     assert(ex.getMessage.contains("vacuumed past") &&
       ex.getMessage.contains(orders.root) &&
-      ex.getMessage.contains(flow.reportRoot),
+      ex.getMessage.contains(lc.dir("report")),
       s"unsafe vacuum failed with the wrong diagnostic: ${ex.getMessage}")
   }
 
   test("q169 two-level maintenance: steps touch groups and the top actually moves") {
     val sf = TestSpark.testdata("0.001")
-    val flow = IngestQueries.q169BuildMaintainedTop(spark, sf)
+    val flow = IngestQueries.q169BuildMaintainedTop(new Lifecycle(spark, sf, "q169"))
     assert(flow.steps.size == 2, s"expected one two-level fold per drain")
     // each step's touched-group set is nonempty — a step that touched
     // nothing would leave the carried top verbatim and still replay
@@ -551,7 +551,7 @@ class IngestCertSpec extends AnyFunSuite {
     // produced the dethronement, nor which groups the fallback read.
     // Pinned here off the builder's own handles:
     val sf = TestSpark.testdata("0.001")
-    val p = IngestQueries.q170BuildPurgedTop(spark, sf)
+    val p = IngestQueries.q170BuildPurgedTop(new Lifecycle(spark, sf, "q170"))
     val m = p.m
     assert(m.steps.size == 3, "expected two drain folds + one purge fold")
     m.steps.take(2).map(_.touched).zipWithIndex.foreach { case (t, i) =>
@@ -603,7 +603,7 @@ class IngestCertSpec extends AnyFunSuite {
     // folds.
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
-    val orders = IngestQueries.q161BuildStore(spark, sf)
+    val orders = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val h = orders.history()
     // retention past the bootstrap: only the (non-empty) current
     // version survives
@@ -635,21 +635,22 @@ class IngestCertSpec extends AnyFunSuite {
     // and the laggard's version lifecycle are pinned here off the
     // builder's own handles
     val sf = TestSpark.testdata("0.001")
-    val flow = IngestQueries.q171BuildMultiConsumerFlow(spark, sf)
-    assert(flow.aSteps == Seq(1, 1) && flow.bCatchupSteps == 2)
-    assert(flow.reclaimed.map(_.size) == Seq(0, 2),
-      s"per-phase reclaim drifted: ${flow.reclaimed.map(_.size)}")
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot,
-      graft.core.Schemas.ordersKey)
+    val lc = new Lifecycle(spark, sf, "q171")
+    IngestQueries.q171BuildMultiConsumerFlow(lc)
+    assert(lc.counts("fold_a") == Seq(1, 1) && lc.counts("catchup_b") == Seq(2))
+    assert(lc.counts("reclaimed") == Seq(0, 2),
+      s"per-phase reclaim drifted: ${lc.counts("reclaimed")}")
+    val orders = lc.store("orders")
     val hist = orders.history()
     assert(hist.size == 1, s"retention did not converge the store: $hist")
-    val survivor = hist.head
-    assert(flow.reclaimed(1).forall(_ < survivor),
-      "phase-2 reclaimed a version at or above the surviving watermark")
     // the laggard's report table shows its real lifecycle: CreateTable
     // + one durable version per catch-up fold step
-    val repB = IngestQueries.reportStoreHandle(spark, flow.bRoot,
+    val repB = IngestQueries.reportStoreHandle(spark, lc.dir("report_b"),
       IngestQueries.categoryShape)
+    // the survivor is the version both consumers absorbed last, so
+    // everything reclaimed was older than the minimum watermark
+    assert(hist == Seq(IngestQueries.reportWatermark(repB, "")),
+      "phase 2 kept a version other than the consumers' watermark")
     assert(repB.history().size == 3,
       s"laggard report versions ${repB.history().size} != CreateTable + 2 folds")
     // heterogeneous consumers: B's durable schema really is the
@@ -666,11 +667,12 @@ class IngestCertSpec extends AnyFunSuite {
     // equiv certificates — pin the intermediate), and the purge fold
     // really shrank the report (groups vanished, no zero shells)
     val sf = TestSpark.testdata("0.001")
-    val flow = IngestQueries.q172BuildBootstrapFlow(spark, sf)
-    assert(flow.bootstrapSteps == 0 && flow.aPurgeSteps == 1 &&
-      flow.bPurgeSteps == 1 && flow.nReclaimed == 1)
-    val repA = IngestQueries.reportStoreHandle(spark, flow.aRoot)
-    val repB = IngestQueries.reportStoreHandle(spark, flow.bRoot)
+    val lc = new Lifecycle(spark, sf, "q172")
+    IngestQueries.q172BuildBootstrapFlow(lc)
+    assert(lc.counts("bootstrap_b") == Seq(0) && lc.counts("purge_a") == Seq(1) &&
+      lc.counts("purge_b") == Seq(1) && lc.counts("purge_reclaimed") == Seq(1))
+    val repA = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
+    val repB = IngestQueries.reportStoreHandle(spark, lc.dir("report_b"))
     val ah = repA.history()
     val bh = repB.history()
     // A: CreateTable + 2 drain folds + 1 purge fold; B: CreateTable +
@@ -704,10 +706,11 @@ class IngestCertSpec extends AnyFunSuite {
     // steps, and the report lifecycle is CreateTable + exactly 3 folds
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
-    val flow = IngestQueries.q173BuildCompactionFlow(spark, sf)
-    assert(flow.flowSteps == 2 && flow.compactSteps == 1 &&
-      flow.compactCdcRows == 0L && flow.nReclaimed == 3)
-    val report = IngestQueries.reportStoreHandle(spark, flow.reportRoot)
+    val lc = new Lifecycle(spark, sf, "q173")
+    IngestQueries.q173BuildCompactionFlow(lc)
+    assert(lc.counts("flow_fold") == Seq(2) && lc.counts("compact_fold") == Seq(1) &&
+      lc.counts("compact_cdc") == Seq(0) && lc.counts("reclaimed") == Seq(3))
+    val report = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
     val rh = report.history()
     assert(rh.size == 4,
       s"report lifecycle ${rh.size} != CreateTable + 3 folds")
@@ -723,8 +726,7 @@ class IngestCertSpec extends AnyFunSuite {
       .select(max(col("as_of"))).head().getString(0)
     assert(asOf(rh(3)) > asOf(rh(2)),
       "the compaction fold did not advance the consumer watermark")
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot, keyCols)
-    assert(IngestQueries.resumeReportMaintenance(orders, report, keyCols) == 0,
+    assert(IngestQueries.resumeReportMaintenance(lc.store("orders"), report, keyCols) == 0,
       "a post-compaction restart re-applied a fold")
   }
 
@@ -736,17 +738,18 @@ class IngestCertSpec extends AnyFunSuite {
     // restart applies zero steps
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
-    val flow = IngestQueries.q174BuildEvolutionFlow(spark, sf)
-    assert(flow.loadSteps == 1 && flow.evoSteps == 1 && flow.rerunSteps == 1 &&
-      flow.evoCdcRows == 0L && flow.nReclaimed == 3)
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot, keyCols)
+    val lc = new Lifecycle(spark, sf, "q174")
+    IngestQueries.q174BuildEvolutionFlow(lc)
+    assert(Seq("load_fold", "evo_fold", "rerun_fold", "evo_cdc", "reclaimed")
+      .map(lc.counts) == Seq(Seq(1), Seq(1), Seq(1), Seq(0), Seq(3)))
+    val orders = lc.store("orders")
     val contents = orders.current().get
     assert(contents.columns.contains("discount"),
       "the evolved column did not survive to the final store")
     assert(contents.filter(col("discount").isNotNull).limit(1).count() == 0L,
       "the evolve-then-ingest path produced non-null discount values — " +
         "the reader or the upsert align leaked data into the new column")
-    val report = IngestQueries.reportStoreHandle(spark, flow.reportRoot)
+    val report = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
     val rh = report.history()
     assert(rh.size == 4, s"report lifecycle ${rh.size} != CreateTable + 3 folds")
     // rh(1) = post-load fold, rh(2) = the evolution fold: values equal
@@ -773,7 +776,7 @@ class IngestCertSpec extends AnyFunSuite {
     // bounded vacuum):
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
-    val orders = IngestQueries.q161BuildStore(spark, sf)
+    val orders = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val h = orders.history()
     assert(h.size == 3)
     def wm(r: graft.state.StateTable): String =
@@ -808,7 +811,7 @@ class IngestCertSpec extends AnyFunSuite {
     // degenerate full recompute), nor which products the dimension arm
     // read. Pinned off the builder's own handles:
     val sf = TestSpark.testdata("0.001")
-    val m = IngestQueries.q175BuildJoinedFlow(spark, sf)
+    val m = IngestQueries.q175BuildJoinedFlow(new Lifecycle(spark, sf, "q175"))
     // two order-side folds (the drains) then one PURE dimension fold
     assert(m.steps.map(_.source) == Seq(0, 0, 1),
       "per-step source stores drifted")
@@ -925,16 +928,16 @@ class IngestCertSpec extends AnyFunSuite {
     // dimension-ONLY change cycle
     val sf = TestSpark.testdata("0.001")
     val shape = IngestQueries.joinedShape
-    val flow = IngestQueries.q177BuildDurableJoinFlow(spark, sf)
-    assert(flow.cycles == Seq(Seq(0, 1), Seq(0, 1)),
-      s"per-cycle (orders, dim) fold steps drifted: ${flow.cycles}")
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot,
-      graft.core.Schemas.ordersKey)
-    val inv = new graft.state.StateTable(spark, flow.invRoot,
-      graft.core.Schemas.inventoriesKey)
+    val lc = new Lifecycle(spark, sf, "q177")
+    IngestQueries.q177BuildDurableJoinFlow(lc)
+    assert(lc.counts("order_steps") == Seq(1, 1) && lc.counts("dim_steps") == Seq(1, 1),
+      s"per-cycle (orders, dim) fold steps drifted: ${lc.counts("order_steps")}, " +
+        s"${lc.counts("dim_steps")}")
+    val orders = lc.store("orders")
+    val inv = lc.store("inv")
     def watermarks(r: graft.state.StateTable) =
       IngestQueries.reportWatermarks(r, shape.asOf).get
-    val rep = IngestQueries.reportStoreHandle(spark, flow.reportRoot, shape)
+    val rep = IngestQueries.reportStoreHandle(spark, lc.dir("report"), shape)
     // the durable watermark pair equals the stores' current versions
     assert(watermarks(rep) == Seq(orders.currentVersion.get, inv.currentVersion.get),
       "the recovered watermark pair is not the stores' current versions")
@@ -1007,28 +1010,35 @@ class IngestCertSpec extends AnyFunSuite {
     // byte-identical. Pinned off the builder's handles and the report
     // table's own version history:
     val sf = TestSpark.testdata("0.001")
-    val flow = IngestQueries.q176BuildMonthlyFlow(spark, sf)
-    assert(flow.foldSteps == Seq(1, 1, 1), "per-fold applied-step counts drifted")
+    val lc = new Lifecycle(spark, sf, "q176")
+    IngestQueries.q176BuildMonthlyFlow(lc)
+    assert(lc.counts("fold") == Seq(1, 1, 1), "per-fold applied-step counts drifted")
     val keyCols = graft.core.Schemas.ordersKey
-    val orders = new graft.state.StateTable(spark, flow.ordersRoot, keyCols)
+    val orders = lc.store("orders")
     val h = orders.history()
     assert(h.size == 4)
-    // pure inserts: the late keys are nonempty and disjoint from the
-    // pre-late store
-    assert(flow.lateKeys.limit(1).count() == 1L, "the late transition had no keys")
+    // pure inserts: the late transition's keys are nonempty and
+    // disjoint from the pre-late store
+    val lateKeys = graft.core.Checkpoints.pin(
+      orders.diff(h(2), h(3)).select(keyCols.map(col): _*))
+    assert(lateKeys.limit(1).count() == 1L, "the late transition had no keys")
     assert(orders.readVersion(h(2))
-        .join(flow.lateKeys, keyCols, "left_semi").limit(1).count() == 0L,
+        .join(lateKeys, keyCols, "left_semi").limit(1).count() == 0L,
       "a late key already existed pre-late — not a pure insert batch")
-    val reportSt = IngestQueries.reportStoreHandle(spark, flow.reportRoot,
+    val reportSt = IngestQueries.reportStoreHandle(spark, lc.dir("report"),
       IngestQueries.monthlyShape)
     val rh = reportSt.history()
     assert(rh.size == 4, "expected CreateTable + three durable folds")
     val bucket = Seq("product_id", "sale_year", "sale_month")
+    // the late keys' rows exist only on the after side, so their
+    // derived buckets are the late fold's touched set
+    val lateTouched = graft.core.Checkpoints.pin(IngestQueries.monthlyShape.report(
+      orders.current().get.join(lateKeys, keyCols, "left_semi")).select(bucket.map(col): _*))
     val before = reportSt.readVersion(rh(2)).drop("as_of")
     val after = reportSt.readVersion(rh(3)).drop("as_of")
     // genuinely LATE: at least one touched bucket was ALREADY reported
     // before the late fold (new rows landing in an already-folded month)
-    assert(flow.lateTouched.join(before.select(bucket.map(col): _*),
+    assert(lateTouched.join(before.select(bucket.map(col): _*),
         bucket, "left_semi").limit(1).count() == 1L,
       "no late row landed in an already-folded month")
     // expression-key pruning: every bucket that changed across the late
@@ -1039,15 +1049,17 @@ class IngestCertSpec extends AnyFunSuite {
       .groupBy(before.columns.map(col).toIndexedSeq: _*)
       .agg(sum(col("_w")).as("imb")).filter(col("imb") =!= 0L)
       .select(bucket.map(col): _*).distinct()
-    assert(changed.join(flow.lateTouched, bucket, "left_anti")
+    assert(changed.join(lateTouched, bucket, "left_anti")
         .limit(1).count() == 0L,
       "the late fold changed a bucket outside its touched set")
     // and the touched set is a PROPER subset of the report's buckets —
     // the pruning the judged n_late_touched makes visible
-    val nTouched = flow.lateTouched.count()
+    val nTouched = lateTouched.count()
     val nBuckets = after.select(bucket.map(col): _*).distinct().count()
     assert(nTouched > 0 && nTouched < nBuckets,
       s"late fold touched $nTouched of $nBuckets buckets — pruning not visible")
+    assert(lc.counts("late_touched") == Seq(nTouched),
+      "the judged late-touched count differs from the late keys' buckets")
   }
 
   /** Crash residue a store write leaves between its parquet write and
@@ -1081,7 +1093,7 @@ class IngestCertSpec extends AnyFunSuite {
     // the q161 flow's three versions (CreateTable, first load, re-run)
     // replayed write by write into a fresh orders store, each followed
     // by a fresh-handle fold, then retention at the report watermark
-    val src = IngestQueries.q161BuildStore(spark, sf)
+    val src = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
     val versions = src.history().map(v =>
       spark.read.parquet(Paths.get(src.root, v).toString))
     val ordersRoot = graft.core.Staging.invocationDir("graft_crash_q167_o", sf)
@@ -1134,8 +1146,8 @@ class IngestCertSpec extends AnyFunSuite {
 
   test("a q177 resume recovers from a crash after any of its report writes") {
     val sf = TestSpark.testdata("0.001")
-    val ordersRoot = IngestQueries.q161BuildStore(spark, sf).root
-    val invSt = IngestQueries.q163BuildInvStore(spark, sf)
+    val ordersRoot = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161")).root
+    val invSt = IngestQueries.q163BuildInvStore(new Lifecycle(spark, sf, "q163"))
     // retention past the inventories CreateTable: every fold then joins
     // a nonempty dimension, so every report version carries rows and
     // with them its watermark pair

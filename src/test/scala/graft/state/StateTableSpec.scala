@@ -157,7 +157,7 @@ class StateTableSpec extends AnyFunSuite {
 
     // every adjacent pair of the streamed q162/q165 flow store
     val flow = graft.ingest.IngestQueries.q162BuildStreamedStore(
-      spark, TestSpark.testdata("0.001")).st
+      new graft.ingest.Lifecycle(spark, TestSpark.testdata("0.001"), "q162")).st
     flow.history().sliding(2).foreach { case Seq(from, to) =>
       assertChangedKeysExact(flow, from, to, keyCols, s"streamed $from -> $to")
       assert(fromRecord(flow, from, to), s"streamed $from -> $to: changedKeys fell back to diff")
