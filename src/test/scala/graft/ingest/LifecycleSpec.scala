@@ -46,7 +46,7 @@ final class LifecycleSpec extends AnyFunSuite {
     assert(boom.getMessage === "b failed")
   }
 
-  test("the first step's failure wins; the others are suppressed onto it, and joined") {
+  test("the first failure wins with the others suppressed onto it and joined") {
     val bDone = new CountDownLatch(1)
     val boom = intercept[RuntimeException] {
       run[Unit](
