@@ -35,17 +35,7 @@ object Pipeline {
     }
     val Array(ordersPath, inventoryPath, warehouse) = rest
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sessionFor("graft-pipeline")
 
     val ordersTable = new StateTable(spark, s"$warehouse/orders", Schemas.ordersKey)
     val inventoriesTable = new StateTable(spark, s"$warehouse/inventories", Schemas.inventoriesKey)
@@ -137,16 +127,7 @@ object Pipeline {
     */
   private def runSessions(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sessions")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sessionFor("graft-sessions")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
 

@@ -664,7 +664,7 @@ object IngestQueries {
     * the durable report-store schema (group columns as strings unless
     * `groupTypes` declares otherwise, measures as longs, plus one
     * resume watermark column per source). Bundling them means a
-    * consumer ([[ReportConsumer]], [[reportStoreHandle]]) can never
+    * consumer ([[resumeMaintenance]], [[reportStoreHandle]]) can never
     * pair one family's fold with another's declared schema. Instances:
     * [[productShape]] (q164–q168's per-product report),
     * [[categoryShape]] (q169/q170's level-1 per-(group, product)
@@ -799,11 +799,32 @@ object IngestQueries {
        |${counts.map { case (c, n) => s"  cast($n AS bigint) AS $c,\n" }.mkString}  cast(0 AS bigint) AS equiv_diff
        |FROM fin GROUP BY product_id ORDER BY product_id""".stripMargin
 
-  /** One fold step a consumer applied: source store `source` advanced
-    * from watermark `from(source)` to `to(source)` with every other
-    * source held at its watermark. `keys` is the step's change feed
-    * projected to the shape's prune columns; `base` and `report` are
-    * the report before and after the step.
+  /** The judged frame of two consumers of one maintained report,
+    * report stores `report` and `report_b` over the stores `sources`:
+    * report `report`'s rows, then `counts` as constant long columns in
+    * order, then the per-group `b_equiv_diff` against `report_b` and
+    * `recompute_equiv_diff` against the recompute off the sources'
+    * current contents, ordered by the shape's group column.
+    */
+  private def twoConsumerCert(lc: Lifecycle, shape: MaintainedShape,
+      sources: Seq[String], counts: (String, Long)*): DataFrame = {
+    val key = shape.groupCols.head
+    def rows(name: String) = lc.report(name, shape).current().get.drop(shape.asOf: _*)
+    val a = rows("report")
+    val recompute = shape.report(shape.view(sources.map(lc.store(_).current().get)))
+    counts.foldLeft(a) { case (df, (c, n)) => df.withColumn(c, lit(n)) }
+      .join(multisetEquivDiff(a, rows("report_b"), key)
+        .withColumnRenamed("equiv_diff", "b_equiv_diff"), Seq(key))
+      .join(multisetEquivDiff(a, recompute, key)
+        .withColumnRenamed("equiv_diff", "recompute_equiv_diff"), Seq(key))
+      .orderBy(col(key))
+  }
+
+  /** One fold step of a maintained report: source store `source`
+    * advanced from watermark `from(source)` to `to(source)` with every
+    * other source held at its watermark. `keys` is the step's change
+    * feed projected to the shape's prune columns; `base` and `report`
+    * read the report versions before and after the step.
     */
   private[graft] final case class FoldStep(source: Int,
       from: Seq[String], to: Seq[String],
@@ -813,101 +834,29 @@ object IngestQueries {
       versions: Seq[String]): Seq[DataFrame] =
     stores.zip(versions).map { case (st, v) => st.readVersion(v) }
 
-  /** A maintained report's consumer of its source stores: ONE walk
-    * ([[advance]]) for every maintained report, single-store or joined,
-    * carried in memory or durable. The walk reads the consumer's
-    * per-source watermarks, then folds each source's pending version
+  /** Resume a maintained report from its report store alone: the ONE
+    * walk for every maintained report, single-store or joined. The
+    * walk reads the report's per-source watermarks off its own rows
+    * ([[reportWatermarks]]), then folds each source's pending version
     * pairs in turn with every other source held at its watermark, one
-    * [[MaintainedShape.fold]] per pair. Phases compose exactly by
-    * telescoping: over orders O and inventories I, the orders phase
-    * accumulates `report(O_cur ⋈ I_wm) ⊖ report(O_wm ⋈ I_wm)` and the
-    * inventories phase `report(O_cur ⋈ I_cur) ⊖ report(O_cur ⋈ I_wm)`
-    * — the middle terms cancel, and no cross-store ordering of the two
-    * histories is assumed (version names compare only within a store).
-    * With one source the walk is the plain version-pair walk. The
-    * subclasses decide only where the watermarks and each step's report
-    * are kept (the Structured Streaming model, SIGMOD 2018: one engine
-    * advances every consumer by its committed offsets).
-    */
-  private[graft] sealed abstract class ReportConsumer(val shape: MaintainedShape) {
-    /** Names the consumer in failures. */
-    protected def name: String
-    /** The per-source watermarks to resume from; `oldest` holds each
-      * store's oldest retained version.
-      */
-    protected def resumeFrom(stores: Seq[graft.state.StateTable],
-        oldest: Seq[String]): Seq[String]
-    /** The report as of watermarks `wm`. */
-    protected def base(stores: Seq[graft.state.StateTable],
-        wm: Seq[String]): DataFrame
-    protected def keepKeys(keys: DataFrame): DataFrame
-    /** Keeps a step's report; returns the step as later steps read it. */
-    protected def commit(step: FoldStep): FoldStep
-
-    /** Folds every version each store committed since the consumer's
-      * watermarks; returns the steps applied (none when caught up).
-      */
-    final def advance(stores: Seq[graft.state.StateTable]): Seq[FoldStep] = {
-      val hs = stores.map(_.history())
-      stores.zip(hs).foreach { case (st, h) =>
-        require(h.nonEmpty, s"$name: source store ${st.root} has no versions to fold")
-      }
-      val start = resumeFrom(stores, hs.map(_.head))
-      val pending = stores.indices.flatMap { j =>
-        val idx = hs(j).indexOf(start(j))
-        require(idx >= 0,
-          s"$name: watermark ${start(j)} is not in the history of source " +
-            s"store ${stores(j).root} — the store was vacuumed past the " +
-            "report's resume point")
-        hs(j).drop(idx).sliding(2).collect { case Seq(_, to) => j -> to }
-      }
-      pending.foldLeft(Vector.empty[FoldStep]) { case (done, (j, to)) =>
-        val from = done.lastOption.fold(start)(_.to)
-        val at = from.updated(j, to)
-        val keys = keepKeys(
-          stores(j).changedKeys(from(j), to).select(shape.pruneCols.map(col): _*))
-        val b = base(stores, from)
-        done :+ commit(FoldStep(j, from, at, keys, b,
-          shape.fold(b, frames(stores, from), frames(stores, at), keys)))
-      }
-    }
-  }
-
-  /** A consumer that keeps its report in memory, for the life of the
-    * process. It starts at `start` (None: the store's oldest version)
-    * with the recomputed report there as its base, and pins each step's
-    * change keys and report (Checkpoints.pin), so the carried report's
-    * plan depth stays O(1) in step count (the iterative-operator rule,
-    * `core/Checkpoints.scala`). [[steps]] is its whole state.
-    */
-  private[graft] final class CarriedReport(shape: MaintainedShape,
-      start: Seq[Option[String]]) extends ReportConsumer(shape) {
-    val steps = scala.collection.mutable.ArrayBuffer.empty[FoldStep]
-    def report: DataFrame = steps.last.report
-    protected def name = "carried report"
-    protected def resumeFrom(stores: Seq[graft.state.StateTable],
-        oldest: Seq[String]): Seq[String] =
-      steps.lastOption.fold(start.zip(oldest).map { case (s, o) => s.getOrElse(o) })(_.to)
-    protected def base(stores: Seq[graft.state.StateTable],
-        wm: Seq[String]): DataFrame =
-      steps.lastOption.fold(shape.report(shape.view(frames(stores, wm))))(_.report)
-    protected def keepKeys(keys: DataFrame): DataFrame =
-      graft.core.Checkpoints.pin(keys)
-    protected def commit(step: FoldStep): FoldStep = {
-      val kept = step.copy(report = graft.core.Checkpoints.pin(step.report))
-      steps += kept
-      kept
-    }
-  }
-
-  /** A consumer that survives its process: each step's report is one
-    * version of the report store, stamped with the watermarks it
+    * [[MaintainedShape.fold]] per pair, and writes each step's report
+    * as one version of the report store, stamped with the watermarks it
     * reflects (one [[MaintainedShape.asOf]] column per source, constant
-    * across the version's rows), so a fresh handle recovers everything
-    * from disk. The durable write is each step's lineage truncation:
-    * neither the keys nor the report are pinned (the change-key
-    * subtree in both ± arms is deterministic, and any exchanges it has
-    * are reused within the write job). Versioned immutability makes the
+    * across the version's rows) — so a fresh handle recovers everything
+    * from disk (the Structured Streaming model, SIGMOD 2018: every
+    * consumer advances from the offsets it committed durably). Phases
+    * compose exactly by telescoping: over orders O and inventories I,
+    * the orders phase accumulates `report(O_cur ⋈ I_wm) ⊖ report(O_wm ⋈
+    * I_wm)` and the inventories phase `report(O_cur ⋈ I_cur) ⊖
+    * report(O_cur ⋈ I_wm)` — the middle terms cancel, and no
+    * cross-store ordering of the two histories is assumed (version
+    * names compare only within a store).
+    *
+    * The durable write is each step's lineage truncation: neither the
+    * keys nor the report are pinned (the change-key subtree in both ±
+    * arms is deterministic, and any exchanges it has are reused within
+    * the write job), and a step's `report` reads the version it wrote,
+    * whose schema the write cached. Versioned immutability makes the
     * read-while-write safe: each step's base is read from the CURRENT
     * version while the next version writes to a fresh dir.
     *
@@ -919,40 +868,46 @@ object IngestQueries {
     * as the recomputed report there, stamped with those versions. When
     * any is empty, the view — and so the base — is empty, and the walk
     * alone is correct; the bounded isEmpty reads gate the write.
-    */
-  private final class DurableReport(shape: MaintainedShape,
-      reportSt: graft.state.StateTable) extends ReportConsumer(shape) {
-    protected def name = s"report ${reportSt.root}"
-    private def write(report: DataFrame, wm: Seq[String]): Unit =
-      reportSt.overwrite(shape.asOf.zip(wm).foldLeft(report) {
-        case (df, (c, v)) => df.withColumn(c, lit(v)) })
-    protected def resumeFrom(stores: Seq[graft.state.StateTable],
-        oldest: Seq[String]): Seq[String] =
-      reportWatermarks(reportSt, shape.asOf).getOrElse {
-        if (stores.zip(oldest).forall { case (st, v) => !st.readVersion(v).isEmpty })
-          write(shape.report(shape.view(frames(stores, oldest))), oldest)
-        oldest
-      }
-    protected def base(stores: Seq[graft.state.StateTable],
-        wm: Seq[String]): DataFrame =
-      reportSt.current().get.drop(shape.asOf: _*)
-    protected def keepKeys(keys: DataFrame): DataFrame = keys
-    protected def commit(step: FoldStep): FoldStep = {
-      write(step.report, step.to)
-      step
-    }
-  }
-
-  /** Resume a durable report from its store alone: fold every version
-    * its source stores committed since its watermarks, one report
-    * version per step. Returns the steps applied: none on a restart
-    * with nothing new (idempotence), one per landed version in steady
-    * state, more when catching up after missed folds.
+    *
+    * Returns the steps applied: none on a restart with nothing new
+    * (idempotence), one per landed version in steady state, more when
+    * catching up after missed folds.
     */
   private[graft] def resumeMaintenance(shape: MaintainedShape,
       stores: Seq[graft.state.StateTable],
-      reportSt: graft.state.StateTable): Seq[FoldStep] =
-    new DurableReport(shape, reportSt).advance(stores)
+      reportSt: graft.state.StateTable): Seq[FoldStep] = {
+    def write(report: DataFrame, wm: Seq[String]): Unit =
+      reportSt.overwrite(shape.asOf.zip(wm).foldLeft(report) {
+        case (df, (c, v)) => df.withColumn(c, lit(v)) })
+    def kept: DataFrame = reportSt.current().get.drop(shape.asOf: _*)
+    val hs = stores.map(_.history())
+    stores.zip(hs).foreach { case (st, h) =>
+      require(h.nonEmpty,
+        s"report ${reportSt.root}: source store ${st.root} has no versions to fold")
+    }
+    val start = reportWatermarks(reportSt, shape.asOf).getOrElse {
+      val oldest = hs.map(_.head)
+      if (stores.zip(oldest).forall { case (st, v) => !st.readVersion(v).isEmpty })
+        write(shape.report(shape.view(frames(stores, oldest))), oldest)
+      oldest
+    }
+    val pending = stores.indices.flatMap { j =>
+      val idx = hs(j).indexOf(start(j))
+      require(idx >= 0,
+        s"report ${reportSt.root}: watermark ${start(j)} is not in the history " +
+          s"of source store ${stores(j).root} — the store was vacuumed past the " +
+          "report's resume point")
+      hs(j).drop(idx).sliding(2).collect { case Seq(_, to) => j -> to }
+    }
+    pending.foldLeft(Vector.empty[FoldStep]) { case (done, (j, to)) =>
+      val from = done.lastOption.fold(start)(_.to)
+      val at = from.updated(j, to)
+      val keys = stores(j).changedKeys(from(j), to).select(shape.pruneCols.map(col): _*)
+      val base = kept
+      write(shape.fold(base, frames(stores, from), frames(stores, at), keys), at)
+      done :+ FoldStep(j, from, at, keys, base, kept)
+    }
+  }
 
   /** q164: incremental report maintenance off the store's CDC feed —
     * judged equal to a full recompute. At 100 TB the reference's
@@ -965,9 +920,11 @@ object IngestQueries {
     * on the reference's own report surface:
     *
     *  1. build the flow store ([[q161BuildStore]]: first load v2,
-    *     LWW re-run v3);
-    *  2. a carried consumer starts at v2 with the per-product report
-    *     recomputed there as its base;
+    *     LWW re-run v3) and reclaim its empty CreateTable version, as
+    *     retention would;
+    *  2. a fresh durable consumer bootstraps at the oldest retained
+    *     version, v2, with the per-product report recomputed there as
+    *     its base;
     *  3. it folds the one pending pair v2→v3: the CDC keys (inserts +
     *     LWW updates here; the fold also absorbs deletes) prune both
     *     arms — on a key-partitioned store both semi-joined scans prune
@@ -984,45 +941,48 @@ object IngestQueries {
     * a retraction applied to the wrong group all break it.
     *
     * What the replayed oracle cannot see — that the delta path really
-    * prunes (changedKeys a proper nonempty subset) and really moves the
-    * report (v2 report ≠ v3 report) — IngestCertSpec pins.
+    * prunes (changedKeys a proper nonempty subset), really moves the
+    * report (v2 report ≠ v3 report), and that the consumer bootstrapped
+    * at v2 and folded one step — IngestCertSpec pins.
     *
     * Scale: one filtered scan of v3 for the change keys, two
     * semi-joined pruned arms and one group-sum on the report key, the
     * certificate's recompute leg (the honest price, q141/q162
-    * convention), one output sort. The CDC keys feed both arms —
-    * pinned once by the carried consumer.
+    * convention), one output sort.
     */
   val q164IncrementalReportCert: QuerySpec = QuerySpec(
     (s, dir) => {
       val lc = new Lifecycle(s, dir, "q164")
-      val st = q161BuildStore(lc)
-      val pinned = lc.run(lc.step("fold")(
-        new CarriedReport(productShape, Seq(Some(st.history()(1)))).advance(Seq(st))))
-      maintainedCert(productShape, pinned.last.report, st.current().get)
+      val st = q164BuildMaintainedReport(lc)
+      maintainedCert(productShape,
+        lc.report("report", productShape).current().get.drop("as_of"),
+        st.current().get)
     },
     productReportOracle())
 
-  /** The maintained-stream handles: the drained store and the carried
-    * consumer's fold steps (keys and reports pinned) — kept so
-    * IngestCertSpec can pin that ≥2 maintenance steps really applied
-    * nonempty, DISTINCT key sets (the replayed oracle sees only the
-    * final rows).
+  /** q164's construction: the q161 flow store with its empty
+    * CreateTable version reclaimed, then one resume of [[productShape]]
+    * report `report` (logged as `fold`) — the fresh consumer bootstraps
+    * its base at the first load and folds the re-run. Returns the
+    * store.
     */
-  private[graft] final case class MaintainedStream(
-      st: graft.state.StateTable, steps: Seq[FoldStep]) {
-    def report: DataFrame = steps.last.report
+  private[graft] def q164BuildMaintainedReport(lc: Lifecycle): graft.state.StateTable = {
+    val st = q161BuildStore(lc)
+    st.vacuumBefore(st.history()(1))
+    lc.run(productFold(lc, "fold", "report"))
+    st
   }
 
-  /** q165's construction: the q162 streamed flow with a carried
-    * product-report consumer advanced after each drained micro-batch,
-    * from the CreateTable version on.
+  /** q165's and q167's construction: the q162 streamed flow with the
+    * [[productShape]] report `report` resumed durably after each drain,
+    * every fold performed by a FRESH-HANDLE "process" that recovers all
+    * its state from disk. Logs each drain's applied-step count under
+    * `fold`; returns the steps, in order.
     */
-  private[graft] def q165BuildMaintainedStream(lc: Lifecycle): MaintainedStream = {
-    val consumer = new CarriedReport(productShape, Seq(None))
-    val flow = buildStreamedFlowStore(lc,
-      st => lc.run(lc.step("fold")(consumer.advance(Seq(st)))): Unit)
-    MaintainedStream(flow.st, consumer.steps.toSeq)
+  private[graft] def q165BuildMaintainedFlow(lc: Lifecycle): Seq[FoldStep] = {
+    val steps = scala.collection.mutable.ArrayBuffer.empty[FoldStep]
+    buildStreamedFlowStore(lc, _ => steps ++= lc.run(productFold(lc, "fold", "report")))
+    steps.toSeq
   }
 
   /** q165: the maintained report under STREAMING ingest — the 100 TB
@@ -1033,7 +993,7 @@ object IngestQueries {
     * the stream drains WITHOUT recomputing it: two `AvailableNow`
     * drains under ONE checkpoint (the q162 protocol, so the file
     * source's exactly-once log is in scope), and after EACH drain the
-    * carried report absorbs the pruned CDC delta of that micro-batch.
+    * maintained report absorbs the pruned CDC delta of that micro-batch.
     * The judged rows are the final maintained report — its values meet
     * the weighted-arms oracle replay, so the fold reproduced the full
     * ingest arithmetic — plus a per-product `equiv_diff` against the
@@ -1045,21 +1005,23 @@ object IngestQueries {
     * What the replayed oracle cannot see — that BOTH steps applied
     * nonempty, distinct CDC key sets (a degenerate fold that only ran
     * once over the union would replay green) — IngestCertSpec pins off
-    * [[MaintainedStream.steps]].
+    * the steps [[q165BuildMaintainedFlow]] returns.
     *
     * Scale: maintenance cost per drain tracks the micro-batch's CHANGE
     * volume (semi-join-pruned arms, a group-sum over the report key),
-    * not the store size; the carried report is pinned per step so plan
-    * depth stays O(1) in drain count. The judged plan is the pinned
-    * report scan, the recompute certificate leg's scan-agg (the honest
-    * price, q141/q162/q164 convention), the ±1-weighted union-groupBy
-    * pair, and the output sort.
+    * not the store size; each step's durable report version truncates
+    * its lineage, so plan depth stays O(1) in drain count. The judged
+    * plan is the report scan, the recompute certificate leg's scan-agg
+    * (the honest price, q141/q162/q164 convention), the ±1-weighted
+    * union-groupBy pair, and the output sort.
     */
   val q165StreamingReportMaintCert: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q165BuildMaintainedStream(new Lifecycle(s, dir, "q165"))
-      maintainedCert(productShape, m.report, m.st.current().get,
-        "n_steps" -> m.steps.size.toLong)
+      val lc = new Lifecycle(s, dir, "q165")
+      val steps = q165BuildMaintainedFlow(lc)
+      maintainedCert(productShape,
+        lc.report("report", productShape).current().get.drop("as_of"),
+        lc.store("orders").current().get, "n_steps" -> steps.size.toLong)
     },
     productReportOracle("n_steps" -> 2))
 
@@ -1099,7 +1061,7 @@ object IngestQueries {
 
   // ------------------------------------------------------------------
   // q167: DURABLE, resumable report maintenance — the process-failure
-  // story q165 leaves implicit
+  // story of q165's lifecycle
   // ------------------------------------------------------------------
 
   /** A (possibly fresh-process) handle to the durable report table at
@@ -1126,8 +1088,8 @@ object IngestQueries {
     * version's rows, so no sidecar metadata file is needed; version
     * names sort in commit order, so max IS the latest. None means an
     * EMPTY report — no consumer progress recorded (the
-    * bootstrap-vs-caught-up distinction [[DurableReport]] needs on a
-    * retention-vacuumed store).
+    * bootstrap-vs-caught-up distinction [[resumeMaintenance]] needs on
+    * a retention-vacuumed store).
     */
   private[graft] def reportWatermarks(reportSt: graft.state.StateTable,
       asOf: Seq[String]): Option[Seq[String]] = {
@@ -1179,30 +1141,21 @@ object IngestQueries {
   }
 
   /** The durable fold of the orders store into [[productShape]] report
-    * `report`, as q167 runs it after each drain.
+    * `report`, as q165/q167 run it after each drain.
     */
   private def productFold(lc: Lifecycle, name: String,
       report: String): Lifecycle.Step[Seq[FoldStep]] =
     lc.resume(name, productShape, Seq("orders"), report)
 
-  /** q167's construction: the q162 streamed flow with the maintenance
-    * persisted DURABLY per drain, and every fold performed by a
-    * FRESH-HANDLE "process" that recovers all its state from disk —
-    * the restart realism q165's in-memory carried report cannot give.
-    * Logs each drain's applied-step count under `fold`.
-    */
-  private[graft] def q167BuildDurableFlow(lc: Lifecycle): Unit =
-    buildStreamedFlowStore(lc, _ => lc.run(productFold(lc, "fold", "report")): Unit): Unit
-
   /** q167: durable, RESUMABLE report maintenance — the
-    * process-failure story. q165 judges the maintained report as a
-    * carried in-memory artifact: correct while the process lives, gone
-    * with it. At 100 TB the maintenance loop runs for days and WILL be
-    * restarted; the production shape persists the maintained report in
-    * its own versioned table with a resume watermark, and a restarted
-    * process recovers everything from durable state. q167 certifies
-    * exactly that: the q162 streamed flow (two drains, one checkpoint)
-    * with each fold performed by a fresh-handle "process" —
+    * process-failure story. q165 judges the maintained report's values;
+    * at 100 TB the maintenance loop runs for days and WILL be
+    * restarted, so the production shape persists the maintained report
+    * in its own versioned table with a resume watermark, and a
+    * restarted process recovers everything from durable state. q167
+    * judges that lifecycle on q165's construction: the q162 streamed
+    * flow (two drains, one checkpoint) with each fold performed by a
+    * fresh-handle "process" —
     * [[reportStoreHandle]] re-syncs, [[resumeReportMaintenance]]
     * recovers the `as_of` watermark off the report's own rows, folds
     * the orders versions landed since (CDC-pruned, one durable report
@@ -1216,17 +1169,17 @@ object IngestQueries {
     * a missed version (sliding walk broken), or a report row lost in
     * the durable round-trip all break it.
     *
-    * Scale: identical maintenance algebra to q165 (cost tracks change
-    * volume), plus one small-table write per step — the durable write
-    * replaces q165's in-memory pin as the lineage truncation, and the
-    * report table's atomic version swap gives readers a consistent
-    * report at every instant (R3's transaction discipline applied to
-    * the DERIVED artifact, not just the ingested one).
+    * Scale: q165's maintenance (cost tracks change volume), one
+    * small-table write per step — the durable write is the lineage
+    * truncation, and the report table's atomic version swap gives
+    * readers a consistent report at every instant (R3's transaction
+    * discipline applied to the DERIVED artifact, not just the ingested
+    * one).
     */
   val q167DurableReportResume: QuerySpec = QuerySpec(
     (s, dir) => {
       val lc = new Lifecycle(s, dir, "q167")
-      q167BuildDurableFlow(lc)
+      q165BuildMaintainedFlow(lc)
       val reportSt = lc.report("report", productShape)
       maintainedCert(productShape, reportSt.current().get.drop("as_of"),
         lc.store("orders").current().get,
@@ -1377,15 +1330,15 @@ object IngestQueries {
       .unionByName(topSellers(
         lvl1Maintained.join(touched, Seq("channel_group"), "left_semi")))
 
-  /** One two-level step of q169/q170: the carried level-1 report after
-    * a fold step, the groups that step touched, and the top rows
+  /** One two-level step of q169/q170: the level-1 report version a
+    * fold step wrote, the groups that step touched, and the top rows
     * (touched and top pinned).
     */
   private[graft] final case class TopStep(lvl1: DataFrame, touched: DataFrame,
       top: DataFrame)
 
-  /** Level 2 on top of one carried [[categoryShape]] fold step of store
-    * `st`: recompute the top row of the groups the step touched
+  /** Level 2 on top of one [[categoryShape]] fold step of store `st`:
+    * recompute the top row of the groups the step touched
     * ([[maintainTopSellers]]) onto the previous step's top rows (the
     * recomputed top of the step's base before the first step).
     */
@@ -1398,24 +1351,46 @@ object IngestQueries {
       last.fold(topSellers(step.base))(_.top), step.report, touched)))
   }
 
-  /** The maintained-top-seller handles: the drained store and the
-    * per-step two-level artifacts for the guards.
+  /** Both levels after a drain of store `st`: resume the
+    * [[categoryShape]] report `lvl1` (logged as `fold`), then apply one
+    * [[topStep]] per fold step onto `steps` (step `top`).
     */
-  private[graft] final case class MaintainedTopStream(
-      st: graft.state.StateTable, steps: Seq[TopStep]) {
-    def lvl1: DataFrame = steps.last.lvl1
-    def top: DataFrame = steps.last.top
+  private def foldTop(lc: Lifecycle, st: graft.state.StateTable,
+      steps: scala.collection.mutable.Buffer[TopStep]): Unit = {
+    val folds = lc.run(lc.resume("fold", categoryShape, Seq("orders"), "lvl1"))
+    lc.run(lc.step("top")(folds.foreach(f => steps += topStep(st, f, steps.lastOption))))
   }
 
-  /** q169's construction: the q165 drain loop with a carried
-    * [[categoryShape]] consumer, and one [[topStep]] per fold step.
+  /** q169's construction: the q165 drain loop with both levels folded
+    * after each drain ([[foldTop]]); returns the two-level steps.
     */
-  private[graft] def q169BuildMaintainedTop(lc: Lifecycle): MaintainedTopStream = {
-    val lvl1 = new CarriedReport(categoryShape, Seq(None))
+  private[graft] def q169BuildMaintainedTop(lc: Lifecycle): Seq[TopStep] = {
     val steps = scala.collection.mutable.ArrayBuffer.empty[TopStep]
-    val flow = buildStreamedFlowStore(lc, st => lc.run(lc.step("fold")(
-      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption)))))
-    MaintainedTopStream(flow.st, steps.toSeq)
+    buildStreamedFlowStore(lc, st => foldTop(lc, st, steps))
+    steps.toSeq
+  }
+
+  /** The judged frame of a maintained top-seller report over store
+    * `orders`: the last step's top row per channel group and its
+    * level-1 product count, then `counts` as constant long columns in
+    * order, then both level equivalence certificates against the
+    * recompute off the store, ordered by channel group.
+    */
+  private def topSellersCert(lc: Lifecycle, steps: Seq[TopStep],
+      counts: (String, Long)*): DataFrame = {
+    val TopStep(lvl1, _, top) = steps.last
+    val lvl1Re = categoryShape.report(lc.store("orders").current().get)
+    val lvl1Equiv = multisetEquivDiff(lvl1, lvl1Re, "channel_group")
+      .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
+    val topEquiv = multisetEquivDiff(top, topSellers(lvl1Re), "channel_group")
+      .withColumnRenamed("equiv_diff", "top_equiv_diff")
+    val nProducts = lvl1.groupBy(col("channel_group"))
+      .agg(count(lit(1)).as("n_products"))
+    counts.foldLeft(top.join(nProducts, Seq("channel_group"))) {
+      case (df, (c, n)) => df.withColumn(c, lit(n)) }
+      .join(lvl1Equiv, Seq("channel_group"))
+      .join(topEquiv, Seq("channel_group"))
+      .orderBy(col("channel_group"))
   }
 
   /** q169: the maintained TOP-SELLER report (A5's argmax shape,
@@ -1434,8 +1409,8 @@ object IngestQueries {
     * off the drained store (level-1 multiset and top-row multiset —
     * 0 everywhere means both maintained artifacts reproduced their
     * recomputes exactly). A delta folded twice, a touched group the
-    * recompute missed, or a stale carried top row surviving a touched
-    * step all break it.
+    * recompute missed, or a stale top row surviving a touched step all
+    * break it.
     *
     * What the replayed oracle cannot see, IngestCertSpec pins: each
     * step touched a nonempty group set, the maintained top actually
@@ -1450,28 +1425,18 @@ object IngestQueries {
     * Scale: level-1 arms are CDC-pruned semi-joins (change-volume
     * cost); level-2 recompute reads only touched groups' AGGREGATED
     * rows — at production group counts the semi-join prunes the argmax
-    * to the changed slice, and the carried artifacts are pinned per
-    * step so plan depth stays O(1) in drain count. The judged plan is
-    * the two pinned artifact scans, the recompute certificate legs
+    * to the changed slice; level 1 is a durable report version per step
+    * and level 2 is pinned per step, so plan depth stays O(1) in drain
+    * count. The judged plan is the two artifact scans, the recompute
+    * certificate legs
     * (store scan → level-1 rollup → argmax), the two ±1-weighted
     * union-groupBy pairs, and the 3-row output sort.
     */
   val q169MaintainedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q169BuildMaintainedTop(new Lifecycle(s, dir, "q169"))
-      val lvl1Re = categoryShape.report(m.st.current().get)
-      val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
-        .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
-      val topEquiv = multisetEquivDiff(m.top, topSellers(lvl1Re), "channel_group")
-        .withColumnRenamed("equiv_diff", "top_equiv_diff")
-      val nProducts = m.lvl1.groupBy(col("channel_group"))
-        .agg(count(lit(1)).as("n_products"))
-      m.top
-        .join(nProducts, Seq("channel_group"))
-        .withColumn("n_steps", lit(m.steps.size.toLong))
-        .join(lvl1Equiv, Seq("channel_group"))
-        .join(topEquiv, Seq("channel_group"))
-        .orderBy(col("channel_group"))
+      val lc = new Lifecycle(s, dir, "q169")
+      val steps = q169BuildMaintainedTop(lc)
+      topSellersCert(lc, steps, "n_steps" -> steps.size.toLong)
     },
     s"""$flowStoreReplaySql,
        |-- the zero-net filter mirrors the Spark fold's n_rows > 0 shell
@@ -1502,15 +1467,14 @@ object IngestQueries {
   // retraction fallback reached by a real mid-loop deletion
   // ------------------------------------------------------------------
 
-  /** q170's handles: the drained-then-purged store's two-level steps
-    * (the second is the pre-purge state) and the victim identity, for
-    * the guards.
+  /** q170's handles: the two-level steps (the second is the pre-purge
+    * state) and the victim identity, for the guards.
     */
   private[graft] final case class PurgedTopStream(
-      m: MaintainedTopStream, victimGroup: String, victimProduct: String)
+      steps: Seq[TopStep], victimGroup: String, victimProduct: String)
 
   /** q170's construction: the q169 streamed flow with a REAL DELETION
-    * landed mid-loop and folded through the same carried consumer —
+    * landed mid-loop and folded through the same consumer —
     * after the second drain's fold, the maintained top's leader of the
     * FIRST channel group (one bounded single-row read off the pinned
     * 3-row artifact) is purged from the store (q158's deletion-slice
@@ -1523,13 +1487,10 @@ object IngestQueries {
     * subset the guards and the judged count can SEE.
     */
   private[graft] def q170BuildPurgedTop(lc: Lifecycle): PurgedTopStream = {
-    val lvl1 = new CarriedReport(categoryShape, Seq(None))
     val steps = scala.collection.mutable.ArrayBuffer.empty[TopStep]
-    def fold(st: graft.state.StateTable): Unit = lc.run(lc.step("fold")(
-      lvl1.advance(Seq(st)).foreach(f => steps += topStep(st, f, steps.lastOption))))
     var victim = ("", "")
-    val flow = buildStreamedFlowStore(lc, st => {
-      fold(st)
+    buildStreamedFlowStore(lc, st => {
+      foldTop(lc, st, steps)
       if (steps.size == 2) {
         // the purge victim: the pre-purge leader of the first channel
         // group, read off the maintained top (pinned, 3 rows — one
@@ -1547,10 +1508,10 @@ object IngestQueries {
         lc.run(lc.step("purge")(st.overwrite(st.read().get.filter(
           !(col("channel_group") === victim._1 &&
             col("product_id") === victim._2)))))
-        fold(st)
+        foldTop(lc, st, steps)
       }
     }, finalVersions = 4)
-    PurgedTopStream(MaintainedTopStream(flow.st, steps.toSeq), victim._1, victim._2)
+    PurgedTopStream(steps.toSeq, victim._1, victim._2)
   }
 
   /** q170: the maintained top-seller report under DATA DELETION — the
@@ -1559,7 +1520,7 @@ object IngestQueries {
     * level 2's recompute never faces the one event it exists for: a
     * retraction that DETHRONES a leader (no ± algebra on the top row
     * recovers the runner-up). q170 composes machinery the repo already
-    * owns — the q169 maintained top (the same carried walk and [[topStep]])
+    * owns — the q169 maintained top (the same walk and [[topStep]])
     * over the streamed flow, plus a real deletion landed mid-loop
     * (q136/q158's purge convention): after both drains, the leader of
     * the first channel group is purged from the store and a THIRD fold
@@ -1591,29 +1552,18 @@ object IngestQueries {
     * purge fold's arms are CDC-pruned to the deleted keys and the
     * level-2 recompute reads ONE touched group's AGGREGATED rows — the
     * change-volume-proportional property, now judged under retraction.
-    * The judged plan is q169's consumer shape exactly (two pinned
-    * artifact scans, the recompute certificate legs, two ±1-weighted
+    * The judged plan is q169's consumer shape exactly (two artifact
+    * scans, the recompute certificate legs, two ±1-weighted
     * union-groupBy pairs, the 3-row sort).
     */
   val q170PurgedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
-      val m = q170BuildPurgedTop(new Lifecycle(s, dir, "q170")).m
-      val lvl1Re = categoryShape.report(m.st.current().get)
-      val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
-        .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
-      val topEquiv = multisetEquivDiff(m.top, topSellers(lvl1Re), "channel_group")
-        .withColumnRenamed("equiv_diff", "top_equiv_diff")
-      val nProducts = m.lvl1.groupBy(col("channel_group"))
-        .agg(count(lit(1)).as("n_products"))
-      m.top
-        .join(nProducts, Seq("channel_group"))
-        .withColumn("n_steps", lit(m.steps.size.toLong))
-        // the purge fold's recomputed-group count: a single-row
-        // aggregate read on the pinned ≤3-row touched frame
-        .withColumn("n_purge_touched", lit(m.steps.last.touched.count()))
-        .join(lvl1Equiv, Seq("channel_group"))
-        .join(topEquiv, Seq("channel_group"))
-        .orderBy(col("channel_group"))
+      val lc = new Lifecycle(s, dir, "q170")
+      val steps = q170BuildPurgedTop(lc).steps
+      // the purge fold's recomputed-group count: a single-row aggregate
+      // read on the pinned ≤3-row touched frame
+      topSellersCert(lc, steps, "n_steps" -> steps.size.toLong,
+        "n_purge_touched" -> steps.last.touched.count())
     },
     s"""$flowStoreReplaySql,
        |-- pre-purge level-1 off the FULL flow (both drains); the
@@ -1879,22 +1829,12 @@ object IngestQueries {
     (s, dir) => {
       val lc = new Lifecycle(s, dir, "q172")
       q172BuildBootstrapFlow(lc)
-      val orders = lc.store("orders")
-      val a = lc.report("report", productShape).current().get.drop("as_of")
-      val b = lc.report("report_b", productShape).current().get.drop("as_of")
-      val bEquiv = multisetEquivDiff(a, b, "product_id")
-        .withColumnRenamed("equiv_diff", "b_equiv_diff")
-      val reEquiv = multisetEquivDiff(a, productShape.report(orders.current().get),
-          "product_id")
-        .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
-      a.withColumn("bootstrap_steps", lit(lc.counts("bootstrap_b").sum))
-        .withColumn("a_purge_steps", lit(lc.counts("purge_a").sum))
-        .withColumn("b_purge_steps", lit(lc.counts("purge_b").sum))
-        .withColumn("n_reclaimed", lit(lc.counts("purge_reclaimed").sum))
-        .withColumn("n_retained", lit(orders.history().size.toLong))
-        .join(bEquiv, Seq("product_id"))
-        .join(reEquiv, Seq("product_id"))
-        .orderBy(col("product_id"))
+      twoConsumerCert(lc, productShape, Seq("orders"),
+        "bootstrap_steps" -> lc.counts("bootstrap_b").sum,
+        "a_purge_steps" -> lc.counts("purge_a").sum,
+        "b_purge_steps" -> lc.counts("purge_b").sum,
+        "n_reclaimed" -> lc.counts("purge_reclaimed").sum,
+        "n_retained" -> lc.store("orders").history().size.toLong)
     },
     s"""$flowStoreReplaySql
        |SELECT cast(o_custkey AS varchar) AS product_id,
@@ -2185,47 +2125,35 @@ object IngestQueries {
         col("k") % 10 =!= 0)
       .withColumn("c_mktsegment", lit("RELOCATED"))
 
-  /** q175's handles: both stores, the carried consumer's fold steps
-    * (keys and reports pinned; source 0 = orders, 1 = inventories), and
-    * the pre-move report for the guards.
-    */
-  private[graft] final case class MaintainedJoinFlow(
-      ordersSt: graft.state.StateTable, invSt: graft.state.StateTable,
-      steps: Seq[FoldStep], preMoveReport: DataFrame) {
-    def report: DataFrame = steps.last.report
-  }
-
   /** q175's construction: the inventories store loads its catalog
-    * (q163's batch-1 leg), then the q169-convention streamed orders
-    * flow runs with a carried [[joinedShape]] consumer advanced after
-    * each drain — orders from the CreateTable version, the dimension
-    * from the catalog version current when the consumer starts (earlier
-    * dimension history belongs to the base report). MID-LOOP, after
-    * the second drain's fold, the dimension update lands:
-    * [[q175MoveBatch]] re-lists every k ≡ 0 (mod 3) real product under
-    * a new category through the same CSV→LWW-upsert leg, and a third
-    * fold absorbs the move with the ORDERS side unchanged (the
-    * pure-dimension-change path).
+    * (q163's batch-1 leg) and retention reclaims its empty CreateTable
+    * version, then the q169-convention streamed orders flow runs with
+    * the [[joinedShape]] report `report` resumed after each drain — the
+    * fresh consumer starts at the orders CreateTable version and the
+    * catalog version, the oldest retained ones. MID-LOOP, after the
+    * second drain's fold, the dimension update lands: [[q175MoveBatch]]
+    * re-lists every k ≡ 0 (mod 3) real product under a new category
+    * through the same CSV→LWW-upsert leg, and a third fold absorbs the
+    * move with the ORDERS side unchanged (the pure-dimension-change
+    * path). Returns the fold steps (source 0 = orders, 1 =
+    * inventories).
     */
-  private[graft] def q175BuildJoinedFlow(lc: Lifecycle): MaintainedJoinFlow = {
+  private[graft] def q175BuildJoinedFlow(lc: Lifecycle): Seq[FoldStep] = {
     lc.par(lc.stageInventories("inv_b1", q163InvBatch1),
       lc.stageInventories("inv_move", q175MoveBatch), invStore(lc))
     lc.run(lc.load("inv", Ingest.readInventoriesCsv, "inv_b1"))
-    val invSt = lc.store("inv")
-    val consumer = new CarriedReport(joinedShape,
-      Seq(None, invSt.currentVersion))
-    def fold(st: graft.state.StateTable): Unit =
-      lc.run(lc.step("fold")(consumer.advance(Seq(st, invSt))))
-    var preMove: DataFrame = null
-    val flow = buildStreamedFlowStore(lc, st => {
-      fold(st)
-      if (consumer.steps.size == 2) {
-        preMove = consumer.report
+    lc.store("inv").vacuum()
+    val steps = scala.collection.mutable.ArrayBuffer.empty[FoldStep]
+    def fold(): Unit =
+      steps ++= lc.run(lc.resume("fold", joinedShape, Seq("orders", "inv"), "report"))
+    buildStreamedFlowStore(lc, _ => {
+      fold()
+      if (steps.size == 2) {
         lc.run(lc.load("inv", Ingest.readInventoriesCsv, "inv_move"))
-        fold(st)
+        fold()
       }
     })
-    MaintainedJoinFlow(flow.st, invSt, consumer.steps.toSeq, preMove)
+    steps.toSeq
   }
 
   /** q175: the maintained JOIN report — incremental view maintenance
@@ -2239,7 +2167,7 @@ object IngestQueries {
     * over the fact store. q175 certifies the production answer: A3's
     * revenue-per-category (category sourced from the inventories
     * STORE, not the fact rows) maintained under changes to BOTH stores
-    * via a carried [[joinedShape]] consumer — two order-side folds
+    * via a [[joinedShape]] report consumer — two order-side folds
     * (the streamed drains) and one dimension-side fold (a real
     * mid-loop category move through the CSV→LWW leg). The judged rows
     * are the final maintained report per category — the moved
@@ -2269,9 +2197,10 @@ object IngestQueries {
     *
     * Scale: each fold arm reads |P| products' fact slices (semi-join-
     * pruned on the key the store partitions by) joined to |P| catalog
-    * rows — change-volume cost on either side's update; the carried
-    * report is pinned per step (O(1) plan depth in step count). The
-    * judged plan is the pinned report scan, the recompute certificate
+    * rows — change-volume cost on either side's update; each step's
+    * durable report version truncates its lineage (O(1) plan depth in
+    * step count). The judged plan is the report scan, the recompute
+    * certificate
     * leg (both store scans → projected join → category rollup — the
     * honest price, q141/q162 convention), the ±1-weighted
     * union-groupBy pair, and the ≤6-row output sort.
@@ -2279,22 +2208,24 @@ object IngestQueries {
   val q175MaintainedJoinReport: QuerySpec = QuerySpec(
     (s, dir) => {
       val lc = new Lifecycle(s, dir, "q175")
-      val m = q175BuildJoinedFlow(lc)
+      val steps = q175BuildJoinedFlow(lc)
+      val inv = lc.store("inv").current().get
+      val report = steps.last.report
       val recompute = joinedShape.report(joinedView(
-        m.ordersSt.current().get, m.invSt.current().get))
-      val equiv = multisetEquivDiff(m.report, recompute, "category")
+        lc.store("orders").current().get, inv))
+      val equiv = multisetEquivDiff(report, recompute, "category")
       // the dimension fold's affected-product count (a single-row
-      // aggregate read on the pinned affected frame) and the catalog
-      // row count it must stay a proper subset of
+      // aggregate read on its change feed) and the catalog row count it
+      // must stay a proper subset of
       val Seq(nDimAffected, nCatalog) = lc.par(
-        lc.step("dim_affected")(m.steps.last.keys.count()),
-        lc.step("catalog")(m.invSt.current().get.count()))
-      m.report
-        .withColumn("n_steps", lit(m.steps.size.toLong))
+        lc.step("dim_affected")(steps.last.keys.count()),
+        lc.step("catalog")(inv.count()))
+      report
+        .withColumn("n_steps", lit(steps.size.toLong))
         .withColumn("n_order_steps",
-          lit(m.steps.count(_.source == 0).toLong))
+          lit(steps.count(_.source == 0).toLong))
         .withColumn("n_dim_steps",
-          lit(m.steps.count(_.source == 1).toLong))
+          lit(steps.count(_.source == 1).toLong))
         .withColumn("n_dim_affected", lit(nDimAffected))
         .withColumn("n_catalog", lit(nCatalog))
         .join(equiv, Seq("category"))
@@ -2368,15 +2299,14 @@ object IngestQueries {
     lc.log("i_reclaimed", lc.store("inv").vacuumBefore(wmI).size.toLong)
   }
 
-  /** q177: the DURABLE two-store joined-report consumer — q175 proves
-    * the join-maintenance algebra with a carried consumer; the
-    * production consumer of a years-long 100 TB store pair is durable,
-    * resumable, retention-compatible, and joinable late, and every one
-    * of those properties needs the TWO-watermark generalization judged
-    * here: the report table stamps (`as_of`, `as_of_dim`), a restarted
+  /** q177: the DURABLE two-store joined-report lifecycle — q175 proves
+    * the join-maintenance algebra; the production consumer of a
+    * years-long 100 TB store pair is durable, resumable,
+    * retention-compatible, and joinable late, and every one of those
+    * properties needs the TWO-watermark generalization judged here: the report table stamps (`as_of`, `as_of_dim`), a restarted
     * process recovers the pair off the durable rows and absorbs each
     * feed's pending versions in telescoping phases
-    * ([[ReportConsumer.advance]] — no cross-store version ordering
+    * ([[resumeMaintenance]] — no cross-store version ordering
     * assumed, because none exists), retention runs PER STORE bounded
     * by that store's watermark component, and a NEW consumer joining
     * the already-vacuumed stores bootstraps its base from both current
@@ -2425,26 +2355,15 @@ object IngestQueries {
       val sources = Seq("orders", "inv")
       lc.par(lc.resume("restart", joinedShape, sources, "report"),
         lc.resume("bootstrap_b", joinedShape, sources, "report_b"))
-      val orders = lc.store("orders")
-      val inv = lc.store("inv")
-      val a = lc.report("report", joinedShape).current().get.drop(joinedShape.asOf: _*)
-      val b = lc.report("report_b", joinedShape).current().get.drop(joinedShape.asOf: _*)
-      val bEquiv = multisetEquivDiff(a, b, "category")
-        .withColumnRenamed("equiv_diff", "b_equiv_diff")
-      val reEquiv = multisetEquivDiff(a, joinedShape.report(joinedView(
-          orders.current().get, inv.current().get)), "category")
-        .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
-      a.withColumn("n_order_steps", lit(lc.counts("order_steps").sum))
-        .withColumn("n_dim_steps", lit(lc.counts("dim_steps").sum))
-        .withColumn("o_reclaimed", lit(lc.counts("o_reclaimed").sum))
-        .withColumn("i_reclaimed", lit(lc.counts("i_reclaimed").sum))
-        .withColumn("o_retained", lit(orders.history().size.toLong))
-        .withColumn("i_retained", lit(inv.history().size.toLong))
-        .withColumn("restart_steps", lit(lc.counts("restart").sum))
-        .withColumn("bootstrap_steps", lit(lc.counts("bootstrap_b").sum))
-        .join(bEquiv, Seq("category"))
-        .join(reEquiv, Seq("category"))
-        .orderBy(col("category"))
+      twoConsumerCert(lc, joinedShape, sources,
+        "n_order_steps" -> lc.counts("order_steps").sum,
+        "n_dim_steps" -> lc.counts("dim_steps").sum,
+        "o_reclaimed" -> lc.counts("o_reclaimed").sum,
+        "i_reclaimed" -> lc.counts("i_reclaimed").sum,
+        "o_retained" -> lc.store("orders").history().size.toLong,
+        "i_retained" -> lc.store("inv").history().size.toLong,
+        "restart_steps" -> lc.counts("restart").sum,
+        "bootstrap_steps" -> lc.counts("bootstrap_b").sum)
     },
     s"""$flowStoreReplaySql,
        |-- q175's final-catalog replay: batch-1 rows with the LWW

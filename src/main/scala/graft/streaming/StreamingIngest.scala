@@ -38,6 +38,11 @@ object StreamingIngest {
   /** Continuous upsert into a [[StateTable]]; `AvailableNow` drains what
     * is currently in the landing dir and stops (swap the trigger for a
     * long-running deployment).
+    *
+    * Spark describes every micro-batch job by the query's name, so the
+    * query is named after the calling thread's job description when
+    * one is set (a lifecycle step's `<prefix>/<step>`), else
+    * `orders_ingest`: a drain's jobs then carry the step that ran it.
     */
   def runOrdersIngest(
       spark: SparkSession,
@@ -45,12 +50,12 @@ object StreamingIngest {
       table: StateTable,
       checkpointDir: String): StreamingQuery =
     ordersStream(spark, landingDir).writeStream
-      // unique per start: Spark forbids two ACTIVE queries sharing a
-      // name in one session, and the invocation-dir convention (q162)
-      // explicitly supports concurrent executions of the same judged
-      // query — a fixed name would make the second start throw
-      .queryName("orders_ingest_" +
-        java.util.UUID.randomUUID().toString.take(8))
+      // a unique suffix per start: Spark forbids two ACTIVE queries
+      // sharing a name in one session, and the invocation-dir convention
+      // (q162) explicitly supports concurrent executions of the same
+      // judged query — a fixed name would make the second start throw
+      .queryName(Option(spark.sparkContext.getLocalProperty("spark.job.description"))
+        .getOrElse("orders_ingest") + "_" + java.util.UUID.randomUUID().toString.take(8))
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>

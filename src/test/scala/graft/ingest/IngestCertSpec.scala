@@ -251,18 +251,33 @@ class IngestCertSpec extends AnyFunSuite {
 
   test("q164 CDC really prunes and the maintenance is non-vacuous") {
     val sf = TestSpark.testdata("0.001")
-    // the SAME store builder + report definition the judged query runs
-    val st = IngestQueries.q161BuildStore(new Lifecycle(spark, sf, "q161"))
+    // the SAME construction the judged query runs: the flow store with
+    // its CreateTable version reclaimed, h = [first load, re-run]
+    val lc = new Lifecycle(spark, sf, "q164")
+    val st = IngestQueries.q164BuildMaintainedReport(lc)
     val h = st.history()
+    assert(h.size == 2, s"expected first load + re-run retained, got $h")
     val keyCols = graft.core.Schemas.ordersKey
+
+    // the fresh consumer bootstrapped its base at the first load (the
+    // oldest retained version) and folded exactly the one re-run step
+    assert(lc.counts("fold") == Seq(1),
+      s"expected exactly one fold step, got ${lc.counts("fold")}")
+    val report = IngestQueries.reportStoreHandle(spark, lc.dir("report"))
+    val rh = report.history()
+    assert(rh.size == 3, s"expected CreateTable + bootstrap + one fold, got ${rh.size}")
+    val bootstrap = report.readVersion(rh(1))
+    assert(bootstrap.select(col("as_of")).distinct().collect().map(_.getString(0))
+        .toSeq == Seq(h(0)),
+      "the bootstrap version is not stamped with the first-load version")
 
     // the delta path is a real pruning: the CDC key set is nonempty and
     // a PROPER subset of the final store's keys — the oracle replays
     // the generator, so a degenerate fixture where every key changed
     // (delta ≡ recompute, no pruning exercised) would stay green there
-    val changed = st.diff(h(1), h(2)).select(keyCols.map(col): _*)
+    val changed = st.diff(h(0), h(1)).select(keyCols.map(col): _*)
     val nChanged = changed.count()
-    val nTotal = st.readVersion(h(2)).select(keyCols.map(col): _*)
+    val nTotal = st.readVersion(h(1)).select(keyCols.map(col): _*)
       .distinct().count()
     assert(nChanged > 0, "CDC empty — the incremental path maintains nothing")
     assert(nChanged < nTotal,
@@ -274,7 +289,7 @@ class IngestCertSpec extends AnyFunSuite {
     // group growth is NOT structural: a new report group appears only
     // when a product's every order arrived in the insert arm, a
     // one-key corpus accident at sf0.001)
-    val kinds = st.diff(h(1), h(2)).select(col("_change")).distinct()
+    val kinds = st.diff(h(0), h(1)).select(col("_change")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(kinds == Set("insert", "update"),
       s"CDC change kinds $kinds — the maintenance must see inserts AND " +
@@ -283,8 +298,10 @@ class IngestCertSpec extends AnyFunSuite {
     // ... and is non-vacuous in the report values: no group vanished
     // (key-loss guard; deletes don't exist here) and cents moved on a
     // surviving product (the update leg reached the aggregate)
-    val r2 = IngestQueries.productShape.report(st.readVersion(h(1)))
-    val r3 = IngestQueries.productShape.report(st.readVersion(h(2)))
+    val r2 = IngestQueries.productShape.report(st.readVersion(h(0)))
+    val r3 = IngestQueries.productShape.report(st.readVersion(h(1)))
+    assertMultisetEqual(bootstrap.drop("as_of"), r2,
+      "the bootstrap base is not the report at the first load")
     assert(r3.count() >= r2.count(), "report groups shrank without deletes")
     val moved = r3.join(r2.select(col("product_id"),
         col("amount_cents").as("_pre")), Seq("product_id"))
@@ -367,10 +384,11 @@ class IngestCertSpec extends AnyFunSuite {
     // empty delta — would replay green; the step evidence is pinned
     // here off the builder's own handles
     val sf = TestSpark.testdata("0.001")
-    val m = IngestQueries.q165BuildMaintainedStream(new Lifecycle(spark, sf, "q165"))
-    assert(m.steps.size == 2,
-      s"expected one maintenance step per drain, got ${m.steps.size}")
-    val Seq(s1, s2) = m.steps.map(_.keys)
+    val lc = new Lifecycle(spark, sf, "q165")
+    val steps = IngestQueries.q165BuildMaintainedFlow(lc)
+    assert(steps.size == 2,
+      s"expected one maintenance step per drain, got ${steps.size}")
+    val Seq(s1, s2) = steps.map(_.keys)
     assert(s1.limit(1).count() == 1L && s2.limit(1).count() == 1L,
       "a maintenance step folded an empty CDC delta")
     // distinct in BOTH directions — neither step's key set contains the
@@ -384,8 +402,8 @@ class IngestCertSpec extends AnyFunSuite {
     // and the maintained artifact equals the recompute off the drained
     // store row-for-row (the judged certificate's property, re-checked
     // here where the step handles are in scope)
-    assertMultisetEqual(m.report,
-      IngestQueries.productShape.report(m.st.current().get),
+    assertMultisetEqual(steps.last.report,
+      IngestQueries.productShape.report(lc.store("orders").current().get),
       "maintained report diverged from the drained-store recompute")
   }
 
@@ -411,7 +429,7 @@ class IngestCertSpec extends AnyFunSuite {
     val sf = TestSpark.testdata("0.001")
     val keyCols = graft.core.Schemas.ordersKey
     val lc = new Lifecycle(spark, sf, "q167")
-    IngestQueries.q167BuildDurableFlow(lc)
+    IngestQueries.q165BuildMaintainedFlow(lc)
     // steady state: exactly one fold per drain — a fold that consumed
     // the union of both drains (2, 0) would still replay green, so the
     // per-drain shape is pinned here
@@ -493,19 +511,19 @@ class IngestCertSpec extends AnyFunSuite {
 
   test("q169 two-level maintenance: steps touch groups and the top actually moves") {
     val sf = TestSpark.testdata("0.001")
-    val flow = IngestQueries.q169BuildMaintainedTop(new Lifecycle(spark, sf, "q169"))
-    assert(flow.steps.size == 2, s"expected one two-level fold per drain")
+    val steps = IngestQueries.q169BuildMaintainedTop(new Lifecycle(spark, sf, "q169"))
+    assert(steps.size == 2, s"expected one two-level fold per drain")
     // each step's touched-group set is nonempty — a step that touched
     // nothing would leave the carried top verbatim and still replay
     // green if the final state happened to match
-    flow.steps.map(_.touched).zipWithIndex.foreach { case (t, i) =>
+    steps.map(_.touched).zipWithIndex.foreach { case (t, i) =>
       assert(t.limit(1).count() == 1L, s"step $i touched no groups")
     }
     // the maintained top MOVED between the drains: the re-run batch's
     // LWW boosts and inserts change leaders' revenues, so a carried
     // row surviving step 2 untouched means the fold is vacuous
-    val t0 = flow.steps(0).top.collect().toSet
-    val t1 = flow.steps(1).top.collect().toSet
+    val t0 = steps(0).top.collect().toSet
+    val t1 = steps(1).top.collect().toSet
     assert(t0 != t1,
       "the maintained top rows are identical across both drains — " +
         "the second fold moved nothing at this corpus")
@@ -551,37 +569,39 @@ class IngestCertSpec extends AnyFunSuite {
     // produced the dethronement, nor which groups the fallback read.
     // Pinned here off the builder's own handles:
     val sf = TestSpark.testdata("0.001")
-    val p = IngestQueries.q170BuildPurgedTop(new Lifecycle(spark, sf, "q170"))
-    val m = p.m
-    assert(m.steps.size == 3, "expected two drain folds + one purge fold")
-    m.steps.take(2).map(_.touched).zipWithIndex.foreach { case (t, i) =>
+    val lc = new Lifecycle(spark, sf, "q170")
+    val p = IngestQueries.q170BuildPurgedTop(lc)
+    val steps = p.steps
+    assert(steps.size == 3, "expected two drain folds + one purge fold")
+    steps.take(2).map(_.touched).zipWithIndex.foreach { case (t, i) =>
       assert(t.limit(1).count() == 1L, s"drain step $i touched no groups")
     }
     // the purge fold's touched set is EXACTLY the victim group — the
     // proper-subset pruning the judged n_purge_touched=1 summarizes
-    assert(m.steps.last.touched.collect().map(_.getString(0)).toSeq
+    assert(steps.last.touched.collect().map(_.getString(0)).toSeq
         == Seq(p.victimGroup),
       "the purge fold touched more than the victim group")
     // the victim really LED its group pre-purge (the builder derives it
     // from the maintained top; this pins that read against the frame)
-    val preRows = m.steps(1).top.collect()
+    val preRows = steps(1).top.collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(preRows(p.victimGroup)._1 == p.victimProduct,
       "the purged product did not lead its group pre-purge")
     // the victim's rows really existed pre-purge and really left the
     // store (the CDC delete arm had something to retract)
-    val h = m.st.history()
+    val st = lc.store("orders")
+    val h = st.history()
     def victimRows(df: org.apache.spark.sql.DataFrame) =
       df.filter(col("channel_group") === p.victimGroup &&
         col("product_id") === p.victimProduct)
-    assert(victimRows(m.st.readVersion(h(2))).limit(1).count() == 1L,
+    assert(victimRows(st.readVersion(h(2))).limit(1).count() == 1L,
       "no victim rows in the pre-purge version — the purge was vacuous")
-    assert(victimRows(m.st.current().get).limit(1).count() == 0L,
+    assert(victimRows(st.current().get).limit(1).count() == 0L,
       "victim rows survived the purge")
     // dethronement: the victim group's maintained top row MOVED to a
     // different product; every untouched group's row carried VERBATIM
     // (same product AND same revenue — the fallback never recomputed it)
-    val postRows = m.top.collect()
+    val postRows = steps.last.top.collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(postRows(p.victimGroup)._1 != p.victimProduct,
       "the purged leader was not dethroned")
@@ -811,20 +831,24 @@ class IngestCertSpec extends AnyFunSuite {
     // degenerate full recompute), nor which products the dimension arm
     // read. Pinned off the builder's own handles:
     val sf = TestSpark.testdata("0.001")
-    val m = IngestQueries.q175BuildJoinedFlow(new Lifecycle(spark, sf, "q175"))
+    val lc = new Lifecycle(spark, sf, "q175")
+    val steps = IngestQueries.q175BuildJoinedFlow(lc)
     // two order-side folds (the drains) then one PURE dimension fold
-    assert(m.steps.map(_.source) == Seq(0, 0, 1),
+    assert(steps.map(_.source) == Seq(0, 0, 1),
       "per-step source stores drifted")
-    m.steps.take(2).map(_.keys).zipWithIndex.foreach { case (a, i) =>
+    steps.take(2).map(_.keys).zipWithIndex.foreach { case (a, i) =>
       assert(a.limit(1).count() == 1L, s"order step $i touched no products")
     }
     // the move is physically in the store: the products whose category
     // differs between the inventory versions are nonempty, all landed
     // under the new category, and form a PROPER subset of the catalog
-    val h = m.invSt.history()
-    assert(h.size == 3, "expected CreateTable + catalog load + move")
-    val pre = m.invSt.readVersion(h(1))
-    val post = m.invSt.readVersion(h(2))
+    // (retention reclaimed the CreateTable version before the consumer
+    // started, so the history is the catalog load then the move)
+    val inv = lc.store("inv")
+    val h = inv.history()
+    assert(h.size == 2, "expected the catalog load + the move")
+    val pre = inv.readVersion(h(0))
+    val post = inv.readVersion(h(1))
     val moved = pre.select(col("product_id"), col("category").as("pre_cat"))
       .join(post.select(col("product_id"), col("category").as("post_cat")),
         Seq("product_id"))
@@ -837,16 +861,16 @@ class IngestCertSpec extends AnyFunSuite {
       "a moved product landed somewhere other than the new category")
     // the dimension fold's affected set is EXACTLY the moved products —
     // the change-volume pruning the judged n_dim_affected summarizes
-    assertMultisetEqual(m.steps.last.keys,
+    assertMultisetEqual(steps.last.keys,
       moved.select(col("product_id")),
       "the dimension fold's affected set is not exactly the moved products")
     // the report really MOVED across the dimension fold: the new
     // category exists only after it, so the fold performed a real
     // retraction + addition, not a value no-op
-    assert(m.preMoveReport.filter(col("category") === "RELOCATED")
+    assert(steps(1).report.filter(col("category") === "RELOCATED")
         .limit(1).count() == 0L,
       "the new category existed before the dimension fold")
-    assert(m.report.filter(col("category") === "RELOCATED")
+    assert(steps.last.report.filter(col("category") === "RELOCATED")
         .limit(1).count() == 1L,
       "the new category is missing from the maintained report")
   }
@@ -858,9 +882,7 @@ class IngestCertSpec extends AnyFunSuite {
     // the report) are pinned on hand-built stores (the q169
     // retraction-spec convention): one transition changes BOTH stores
     // at once, including a category move AND a product delete on the
-    // dimension side plus an insert AND an update on the fact side. A
-    // carried and a durable consumer fold the same history through the
-    // one walk.
+    // dimension side plus an insert AND an update on the fact side.
     import spark.implicits._
     val sf = TestSpark.testdata("0.001")
     val shape = IngestQueries.joinedShape
@@ -877,47 +899,38 @@ class IngestCertSpec extends AnyFunSuite {
     orders.upsert(o(("o1", "p1", 10.00), ("o2", "p2", 20.00),
       ("o3", "p3", 30.00), ("o4", "p3", 5.00)))
     orders.upsert(o(("o5", "p1", 7.00)))
-    val carried = new IngestQueries.CarriedReport(shape, Seq(None, None))
-    val durable = IngestQueries.reportStoreHandle(spark,
+    val report = IngestQueries.reportStoreHandle(spark,
       graft.core.Staging.invocationDir("graft_q175_sim_report", sf), shape)
-    def advance(): Seq[Seq[IngestQueries.FoldStep]] = Seq(
-      carried.advance(Seq(orders, inv)),
-      IngestQueries.resumeMaintenance(shape, Seq(orders, inv), durable))
-    // both consumers absorb the initial history (the durable one from
-    // its bootstrap base), then the SIMULTANEOUS transition lands: the
-    // fact side inserts o6 (p2) and LWW-updates o3 (p3); the dimension
-    // side moves p2 A→B and DELETES p3
+    def advance(): Seq[IngestQueries.FoldStep] =
+      IngestQueries.resumeMaintenance(shape, Seq(orders, inv), report)
+    // the consumer absorbs the initial history from its bootstrap base,
+    // then the SIMULTANEOUS transition lands: the fact side inserts o6
+    // (p2) and LWW-updates o3 (p3); the dimension side moves p2 A→B and
+    // DELETES p3
     advance()
     orders.upsert(o(("o6", "p2", 11.00), ("o3", "p3", 33.00)))
     inv.overwrite(inv.read().get.filter(col("product_id") =!= "p3")
       .withColumn("category",
         when(col("product_id") === "p2", "B").otherwise(col("category"))))
-    advance().foreach { steps =>
-      // the transition folds as two steps, orders then inventories,
-      // each with the other store held at its watermark
-      assert(steps.map(_.source) == Seq(0, 1),
-        s"the simultaneous change folded as sources ${steps.map(_.source)}")
-      // p1 is untouched on both sides: no step's affected set holds it,
-      // while every step's holds p2 and p3
-      steps.foreach { step =>
-        assert(step.keys.distinct().collect().map(_.getString(0)).sorted.toSeq
-            == Seq("p2", "p3"),
-          "a simultaneous fold step's affected set is not exactly {p2, p3}")
-      }
+    val steps = advance()
+    // the transition folds as two steps, orders then inventories, each
+    // with the other store held at its watermark
+    assert(steps.map(_.source) == Seq(0, 1),
+      s"the simultaneous change folded as sources ${steps.map(_.source)}")
+    // p1 is untouched on both sides: no step's affected set holds it,
+    // while every step's holds p2 and p3
+    steps.foreach { step =>
+      assert(step.keys.distinct().collect().map(_.getString(0)).sorted.toSeq
+          == Seq("p2", "p3"),
+        "a simultaneous fold step's affected set is not exactly {p2, p3}")
     }
-    // both maintained reports equal the recompute off both current
-    // versions, and each other: the ΔO⋈ΔI overlap (o6/o3 under
-    // moved/deleted dimension rows) counted exactly once, p3's orders
-    // fully retracted, p2's old-category contribution moved wholesale
-    val recompute = shape.report(IngestQueries.joinedView(
-      orders.current().get, inv.current().get))
-    val kept = durable.current().get.drop(shape.asOf: _*)
-    assertMultisetEqual(carried.report, recompute,
-      "carried joined fold diverged from the recompute under simultaneous change")
-    assertMultisetEqual(kept, recompute,
-      "durable joined fold diverged from the recompute under simultaneous change")
-    assertMultisetEqual(carried.report, kept,
-      "carried and durable joined consumers diverged")
+    // the maintained report equals the recompute off both current
+    // versions: the ΔO⋈ΔI overlap (o6/o3 under moved/deleted dimension
+    // rows) counted exactly once, p3's orders fully retracted, p2's
+    // old-category contribution moved wholesale
+    assertMultisetEqual(report.current().get.drop(shape.asOf: _*),
+      shape.report(IngestQueries.joinedView(orders.current().get, inv.current().get)),
+      "joined fold diverged from the recompute under simultaneous change")
   }
 
   test("q177 watermark pair, report lifecycle, onboarding path, and dim-only resume") {

@@ -39,6 +39,45 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(updated.head().getAs[Int]("quantity") == 9)
   }
 
+  test("a drain started under a job description runs every micro-batch job under it") {
+    // Spark describes micro-batch jobs by the query name; the drain names
+    // its query after the caller's description, so a lifecycle step's
+    // drain jobs are attributable to that step
+    val landing = Files.createTempDirectory("graft-desc-landing")
+    val ckpt = Files.createTempDirectory("graft-desc-ckpt").toString
+    val table = new StateTable(spark,
+      Files.createTempDirectory("graft-desc-state").toString, Schemas.ordersKey)
+    Files.copy(Paths.get(TestSpark.fixture("orders_fixture.csv")),
+      landing.resolve("batch1.csv"), StandardCopyOption.REPLACE_EXISTING)
+    val sc = spark.sparkContext
+    // (job group, description) per started job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(js.properties.getProperty("spark.jobGroup.id", "") ->
+          js.properties.getProperty("spark.job.description", "")): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("streaming-spec/drain")
+      val q = try StreamingIngest.runOrdersIngest(spark, landing.toString, table, ckpt)
+        finally sc.setJobDescription(null)
+      q.awaitTermination()
+      // the bus delivers events in order: once a later marker job's start
+      // arrived, every drain job's start has too
+      sc.setJobDescription("streaming-spec/marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._2 == "streaming-spec/marker") &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      val drained = jobs.asScala.toSeq.collect { case (g, d) if g == q.runId.toString => d }
+      assert(drained.nonEmpty, "no job ran in the drain's job group")
+      assert(drained.forall(_.startsWith("streaming-spec/drain")),
+        s"drain jobs not described by the caller's step: ${drained.distinct}")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("stateful dedup state survives a query RESTART from its checkpoint") {
     // The fault-tolerance claim behind every stateful streaming
     // operator here (q77/q99's state stores): kill the query, restart
