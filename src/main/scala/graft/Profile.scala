@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Local iteration aid (guide §1: measure first): per-JOB wall-clock
   * breakdown of one or more registry queries. The lifecycle
@@ -17,9 +19,25 @@ import org.apache.spark.sql.SparkSession
   * Bench's protocol), then once with a listener attached; the report
   * lists every job with its duration and call site, so a hot building
   * block reads directly off the table. Never run by the driver; prints
-  * no contract line.
+  * no contract line. A job of an SQL execution is sited where the
+  * program started that execution: adaptive execution submits
+  * query-stage jobs from a thread pool, whose own call site names no
+  * program line.
   */
 object Profile {
+  private val Frame = """([^(]*)\((.*)\)""".r
+
+  /** Where the program started SQL execution `e`, in the form of
+    * Spark's short call site (`<last Spark method> at <file:line>`),
+    * read off `e.details` — the call stack, Spark's last frame first,
+    * then the program's.
+    */
+  private def executionSite(e: SparkListenerSQLExecutionStart): String =
+    e.details.linesIterator.take(2).toList match {
+      case List(Frame(method, _), Frame(_, at)) => s"${method.split('.').last} at $at"
+      case _ => e.description
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -43,13 +61,21 @@ object Profile {
     final case class Job(id: Int, start: Long, var end: Long = -1L,
         site: String = "", desc: String = "")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val executionSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     @volatile var recording = false
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executionSites.put(s.executionId, executionSite(s)): Unit
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = if (recording) {
-        val p = js.properties
-        val site = js.stageInfos.lastOption.map(_.name).getOrElse("?")
+        val p = Option(js.properties)
+        val site = p.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(executionSites.get(id.toLong)))
+          .orElse(js.stageInfos.lastOption.map(_.name)).getOrElse("?")
         val stages = js.stageInfos.map(si => s"${si.name.takeWhile(_ != ' ')}:${si.numTasks}").mkString("+")
-        val desc = Option(p).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        val desc = p.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
         jobs.put(js.jobId, Job(js.jobId, js.time,
           site = s"$site [$stages]", desc = desc)): Unit
       }
@@ -66,6 +92,7 @@ object Profile {
       catch { case e: Throwable => println(s"[profile] $name warmup failed: ${e.getMessage}") }
       graft.core.Staging.sweepInvocationDirs(): Unit
       jobs.clear()
+      executionSites.clear()
       recording = true
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -16,26 +16,26 @@ import graft.core.Fs
   *
   * Layout: `root/v-<seq>-<id>/` immutable parquet versions plus an
   * append-only commit log `root/_log/<seq>`, one entry per committed
-  * version holding its name — the offset/commit log of Structured
-  * Streaming (SIGMOD 2018) and Spark's `HDFSMetadataLog`. `<seq>` is 16
-  * hex digits, so name order is commit order; `<id>` is random, so no
-  * version path is ever reused. A version exists once its log entry
-  * does: [[history]] and [[currentVersion]] read only the log, so a
-  * directory left by a crashed write or an interrupted vacuum is never
-  * visible (the reference's per-batch transaction + rollback, R3,
-  * without an external store; on a cluster, Delta/Iceberg ACID commits
-  * play the same role).
+  * version — the offset/commit log of Structured Streaming (SIGMOD
+  * 2018) and Spark's `HDFSMetadataLog`. `<seq>` is 16 hex digits, so
+  * name order is commit order; `<id>` is random, so no version path is
+  * ever reused. A version exists once its log entry does: [[history]]
+  * and [[currentVersion]] read only the log, so a directory left by a
+  * crashed write or an interrupted vacuum is never visible (the
+  * reference's per-batch transaction + rollback, R3, without an
+  * external store; on a cluster, Delta/Iceberg ACID commits play the
+  * same role).
   *
-  * Change records: a version written by [[upsert]] or [[compact]] also
-  * holds `_changes`, naming the version the write read (`from`) and
-  * what changed against it — the rows with `_seq` above a floor, or no
-  * row at all (a compaction). It is written before the log link, so it
-  * exists whenever the version does; Spark's file listing skips
-  * `_`-prefixed names, and deleting the version directory deletes it.
-  * [[changedKeys]] reads it so a consumer's change feed for `(from,
-  * to)` is one filtered scan of `to` instead of [[diff]] over both
-  * versions (the commit-log-plus-delta state store of Structured
-  * Streaming, SIGMOD 2018, without the delta storage).
+  * The entry is the version's only metadata, committed with it by one
+  * link: its name; for a version written by [[upsert]] or [[compact]],
+  * its change record — the version the write read (`from`) and what
+  * changed against it, the rows with `_seq` above a floor or no row at
+  * all (a compaction); and, for a consumer's version, the source
+  * versions it reflects ([[offsets]]), as Structured Streaming keeps a
+  * batch's source offsets in the entry that commits it.
+  * [[changedKeys]] reads the change record so a consumer's change feed
+  * for `(from, to)` is one filtered scan of `to` instead of [[diff]]
+  * over both versions.
   *
   * Upsert semantics (duplicate-key behavior replicated exactly):
   *  - first load: *append all rows* — within-batch duplicate keys are NOT
@@ -67,21 +67,50 @@ final class StateTable(
   private val rootPath = Paths.get(root)
   private val logDir = rootPath.resolve("_log")
 
-  /** Commit-log entries, oldest first; each holds one version name
-    * (`.`-prefixed names are entries still being written).
+  /** Commit-log entries, oldest first (`.`-prefixed names are entries
+    * still being written).
     */
   private def entries(): Seq[Path] =
     if (!Files.isDirectory(logDir)) Nil
     else Fs.listDir(logDir).filterNot(_.getFileName.toString.startsWith("."))
       .sortBy(_.getFileName.toString)
 
-  private def log(): Seq[(Path, String)] = entries().map(e => e -> Files.readString(e))
+  /** Decodes log entry `e` ([[StateTable.Entry]]'s layout). */
+  private def readEntry(e: Path): Entry = {
+    val text = Files.readString(e)
+    def malformed = new IllegalStateException(
+      s"$root: malformed commit-log entry ${e.getFileName}: ${text.take(200)}")
+    text.linesIterator.toList match {
+      case version :: rest if version.startsWith("v-") =>
+        rest.map(_.split(' ').toList).foldLeft(Entry(version, None, Nil)) {
+          case (en, List("changes", from, floor)) => en.copy(changes = Some(from ->
+            Option.when(floor != "none")(floor.toLongOption.getOrElse(throw malformed))))
+          case (en, "offsets" :: vs) => en.copy(offsets = vs)
+          case _ => throw malformed
+        }
+      case _ => throw malformed
+    }
+  }
 
   /** Committed versions, oldest first. */
-  def history(): Seq[String] = log().map(_._2)
+  def history(): Seq[String] = entries().map(readEntry(_).version)
 
   /** The newest committed version, or None before the first write. */
-  def currentVersion: Option[String] = entries().lastOption.map(Files.readString(_))
+  def currentVersion: Option[String] = entries().lastOption.map(readEntry(_).version)
+
+  /** The log entry of committed `version`, found by the `<seq>` in its
+    * name.
+    */
+  private def entry(version: String): Entry =
+    Some(logDir.resolve(version.slice(2, 18))).filter(Files.isRegularFile(_))
+      .map(readEntry).filter(_.version == version)
+      .getOrElse(throw new IllegalStateException(s"$root: version $version is not committed"))
+
+  /** The source versions committed `version` reflects, as its writer
+    * recorded them ([[overwrite]]`(df, offsets)`); empty when it
+    * recorded none.
+    */
+  def offsets(version: String): Seq[String] = entry(version).offsets
 
   private def readDir(version: String): DataFrame =
     readVersionDir(spark, rootPath.resolve(version).toString)
@@ -94,12 +123,15 @@ final class StateTable(
     * second writer of the same sequence number fails here instead of
     * replacing a commit; its version directory stays uncommitted.
     */
-  def overwrite(df: DataFrame): Unit = write(df, None)
+  def overwrite(df: DataFrame): Unit = write(df, None, Nil)
 
-  /** [[overwrite]], leaving `changes` in the version directory before
-    * the commit.
+  /** [[overwrite]], committing `offsets` — the versions of the sources
+    * `df` was computed from — in the same entry.
     */
-  private def write(df: DataFrame, changes: Option[Changes]): Unit = {
+  def overwrite(df: DataFrame, offsets: Seq[String]): Unit = write(df, None, offsets)
+
+  private def write(df: DataFrame, changes: Option[(String, Option[Long])],
+      offsets: Seq[String]): Unit = {
     val next = entries().lastOption
       .fold(0L)(e => java.lang.Long.parseLong(e.getFileName.toString, 16) + 1L)
     val seq = f"$next%016x"
@@ -116,10 +148,9 @@ final class StateTable(
     // partitioned read re-derives partition columns from dir names and
     // reorders them last, so its inferred schema is not df.schema.
     if (partitionCols.isEmpty) versionSchemas.put(versionDir, df.schema): Unit
-    changes.foreach(c => Files.writeString(Paths.get(versionDir, ChangesFile), c.encode))
     Files.createDirectories(logDir)
     val tmp = logDir.resolve(s".$v")
-    Files.writeString(tmp, v)
+    Files.writeString(tmp, Entry(v, changes, offsets).encode)
     try Files.createLink(logDir.resolve(seq), tmp)
     catch {
       case _: FileAlreadyExistsException => throw new IllegalStateException(
@@ -151,7 +182,7 @@ final class StateTable(
   /** Retention-bounded vacuum: drop committed versions STRICTLY OLDER
     * than `watermark` (name order is commit order), never the current
     * version. `watermark` is the minimum consumer resume point — e.g.
-    * the oldest `as_of` across maintained reports (q168) — so retention
+    * the oldest offset the maintained reports recorded (q168) — so retention
     * can run continuously next to maintenance without stranding a
     * resumable consumer: every version a resume could still fold from
     * survives, while history the consumers have all absorbed is
@@ -160,7 +191,8 @@ final class StateTable(
     * judge that retention actually bit (and how much).
     */
   def vacuumBefore(watermark: String): Seq[String] = {
-    val reclaimed = log().dropRight(1).filter(_._2 < watermark)
+    val reclaimed = entries().dropRight(1).map(e => e -> readEntry(e).version)
+      .filter(_._2 < watermark)
     reclaimed.foreach(e => Files.delete(e._1))
     reclaimed.map { case (_, v) => dropDir(v); v }
   }
@@ -214,7 +246,7 @@ final class StateTable(
           // insert arm produces over empty state.
           write(b
             .withColumn(SeqCol, col(SeqCol) + lit(maxSeq) + lit(1L))
-            .select(outCols: _*), Some(Changes(from, Some(maxSeq))))
+            .select(outCols: _*), Some(from -> Some(maxSeq)), Nil)
         } else {
           // Pin the batch before the key algebra: _seq defaults to
           // monotonically_increasing_id(), a NONDETERMINISTIC
@@ -255,7 +287,7 @@ final class StateTable(
           val inserts = bW.join(stateKeys, keyCols, "left_anti")
             .withColumn(SeqCol, col(SeqCol) + lit(maxSeq) + lit(1L))
             .select(outCols: _*)
-          write(updated.unionByName(inserts), Some(Changes(from, Some(maxSeq))))
+          write(updated.unionByName(inserts), Some(from -> Some(maxSeq)), Nil)
         }
     }
   }
@@ -275,7 +307,7 @@ final class StateTable(
       write(
         if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
         else df.repartition(1),
-        Some(Changes(from, None)))
+        Some(from -> None), Nil)
     }
 
   /** Reader view without internal bookkeeping columns. */
@@ -361,45 +393,35 @@ final class StateTable(
     * further apart, a version written without a record — falls back to
     * [[diff]].
     */
-  def changedKeys(fromVersion: String, toVersion: String): DataFrame = {
-    val record = Some(rootPath.resolve(toVersion).resolve(ChangesFile))
-      .filter(Files.isRegularFile(_))
-      .map(f => Changes.decode(Files.readString(f)))
-      .filter(_.from == fromVersion)
-    record match {
-      case Some(Changes(_, Some(floor))) =>
+  def changedKeys(fromVersion: String, toVersion: String): DataFrame =
+    entry(toVersion).changes.filter(_._1 == fromVersion) match {
+      case Some((_, Some(floor))) =>
         readDir(toVersion).filter(col(SeqCol) > floor).select(keyCols.map(col): _*)
-      case Some(Changes(_, None)) =>
+      case Some((_, None)) =>
         val schema = readDir(toVersion).schema
         spark.createDataFrame(java.util.Collections.emptyList[Row](),
           StructType(keyCols.map(schema(_))))
       case None =>
         diff(fromVersion, toVersion).select(keyCols.map(col): _*)
     }
-  }
 }
 
 object StateTable {
   /** Internal monotone sequence column (persisted). */
   val SeqCol = "_seq"
 
-  /** A version's change record file (see the class doc). */
-  private val ChangesFile = "_changes"
-
-  /** What the writer of a version knew: it was computed from version
-    * `from`, and its rows with `_seq > floor` are exactly the new or
-    * changed ones; `floor = None` means no row changed.
+  /** A commit-log entry: the version's name line, then, each only when
+    * present, its change record as `changes <from> <floor|none>` — the
+    * version was computed from version `from`, and its rows with
+    * `_seq > floor` are exactly the new or changed ones (`none`: no row
+    * changed) — and its offsets as `offsets <version>...`.
     */
-  private final case class Changes(from: String, floor: Option[Long]) {
-    def encode: String = s"$from\n${floor.fold("none")(_.toString)}\n"
-  }
-
-  private object Changes {
-    def decode(text: String): Changes = text.linesIterator.toSeq match {
-      case Seq(from, "none") => Changes(from, None)
-      case Seq(from, floor) => Changes(from, Some(floor.toLong))
-      case _ => throw new IllegalStateException(s"malformed change record: $text")
-    }
+  private final case class Entry(version: String,
+      changes: Option[(String, Option[Long])], offsets: Seq[String]) {
+    def encode: String =
+      (Seq(version) ++
+        changes.map { case (from, floor) => s"changes $from ${floor.fold("none")(_.toString)}" } ++
+        Option.when(offsets.nonEmpty)(offsets.mkString("offsets ", " ", ""))).map(_ + "\n").mkString
   }
 
   /** Process-wide per-version-dir schema cache. Version dirs are
@@ -408,14 +430,14 @@ object StateTable {
     * version's parquet schema can never change once read. A bare
     * `spark.read.parquet` fires a footer/schema-inference job at CALL
     * time; the maintenance paths read the same version several times
-    * per fold (watermark, CDC, fold base, certificate legs) and the
+    * per fold (CDC, fold base, certificate legs) and the
     * restart-realism flows do it through FRESH handles per phase — so
     * the cache is keyed by absolute path at the companion, not per
     * handle. Metadata only: row data is re-read from parquet on every
-    * action, and resume state (watermarks, report rows) always comes
-    * off the durable rows themselves. Seeded by [[StateTable.overwrite]]
-    * (the writer knows the schema it wrote); vacuum evicts the versions
-    * it reclaims.
+    * action, and resume state (offsets, report rows) always comes off
+    * the commit log and the durable rows. Seeded by
+    * [[StateTable.overwrite]] (the writer knows the schema it wrote);
+    * vacuum evicts the versions it reclaims.
     */
   private[state] val versionSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()

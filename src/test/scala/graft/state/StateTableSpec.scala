@@ -228,13 +228,14 @@ class StateTableSpec extends AnyFunSuite {
     def resume(): Int = graft.ingest.IngestQueries.resumeReportMaintenance(
       new StateTable(spark, t.root, keyCols), report(), keyCols)
     assert(resume() == 0)
-    // a crash between the change record and the log link: the version
-    // directory is complete, record included, but has no log entry
+    // a crash before the log link: the version directory is complete
+    // and its entry, change record included, is written but not linked
     t.upsert(ordersBatch("orders_rerun.csv"))
     val orphan = t.currentVersion.get
     val log = Paths.get(t.root, "_log")
-    graft.core.Fs.listDir(log).filter(e => Files.readString(e) == orphan).foreach(Files.delete)
-    assert(Files.exists(Paths.get(t.root, orphan, "_changes")))
+    graft.core.Fs.listDir(log).filter(e => Files.readString(e).linesIterator.next() == orphan)
+      .foreach(e => Files.move(e, log.resolve(s".$orphan")))
+    assert(Files.readString(log.resolve(s".$orphan")).contains(s"changes $v1 "))
     assert(t.history() == Seq(v1))
     assert(resume() == 0, "the walk folded an uncommitted version")
     assert(graft.ingest.IngestQueries.reportWatermark(report(), v1) == v1)
@@ -245,7 +246,7 @@ class StateTableSpec extends AnyFunSuite {
     assert(v2 != orphan)
     assert(fromRecord(t, v1, v2))
     assert(resume() == 1)
-    val folded = report().current().get.drop("as_of")
+    val folded = report().current().get
     val recomputed = graft.ingest.IngestQueries.productShape.report(t.current().get)
       .select(folded.columns.map(col).toIndexedSeq: _*)
     assert(folded.exceptAll(recomputed).isEmpty && recomputed.exceptAll(folded).isEmpty,
@@ -337,6 +338,23 @@ class StateTableSpec extends AnyFunSuite {
     t.vacuum()
     assert(!Files.exists(Paths.get(t.root, orphan)))
     assert(t.history().size == 1 && t.current().get.count() == 8)
+  }
+
+  test("offsets commit in the version's log entry; a malformed entry names the store") {
+    val t = freshTable()
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    val v1 = t.currentVersion.get
+    assert(t.offsets(v1).isEmpty)
+    // a version with no rows keeps the offsets it was committed with
+    t.overwrite(t.read().get.filter(lit(false)), Seq("v-a", "v-b"))
+    val v2 = t.currentVersion.get
+    assert(t.offsets(v2) == Seq("v-a", "v-b") && t.offsets(v1).isEmpty)
+    val missing = intercept[IllegalStateException](t.offsets(s"v-${"f" * 16}-gone"))
+    assert(missing.getMessage.contains(t.root), missing.getMessage)
+    Files.writeString(Paths.get(t.root, "_log", v2.slice(2, 18)), s"$v2\nstamp v-a\n")
+    val malformed = intercept[IllegalStateException](t.history())
+    assert(malformed.getMessage.contains(t.root) && malformed.getMessage.contains("malformed"),
+      malformed.getMessage)
   }
 
   test("a second commit of the same sequence number fails loudly") {
